@@ -148,17 +148,20 @@ object Pipeline {
     // ---- Stage A: extraction (snapshot + resume) -------------------------
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
     val triples = timed("extract") {
-      val df =
-        if (cfg.resume)
-          Snapshot.resumeOrWrite(spark, triplesDir, "triples", Seq("pages")) {
-            extracted()
-          }
-        else extracted()
-      // snapshot-backed runs re-read the snapshot (no second corpus-sized copy)
+      val (df, recorded) =
+        if (cfg.resume) {
+          val (d, n) = Snapshot.resumeOrWriteCounted(spark, triplesDir, "triples",
+            Seq("pages"))(extracted())
+          (d, Some(n))
+        } else (extracted(), None)
+      // snapshot-backed runs re-read the snapshot (no second corpus-sized
+      // copy) and take the row count its manifest records; a cached table
+      // is counted, because that count is what fills the cache
       val cache = cfg.cacheTriples.getOrElse(!cfg.resume)
-      val out =
-        if (cache) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
-      (out, out.count())
+      if (cache) {
+        val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (out, out.count())
+      } else (df, recorded.getOrElse(df.count()))
     }
 
     runFromTriples(spark, triples, cfg, triplesDir, metrics)

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import graft.model.PrefixDecl
-import graft.ns.{NsSource, Registry}
+import graft.ns.Registry
 import graft.rdf.RdfSource
 import graft.sinks.{TtlSink, VisJson}
 import graft.summarize.Normalize
@@ -11,10 +10,13 @@ import java.nio.file.Paths
 /** The reference's own entry point re-expressed: RDF files in, condensed
   * namespace summary out (chilon_rs `src/main.rs:38-165`).
   *
-  * Stage order mirrors the reference: community registry -> file `@prefix`
-  * decl merge (N7, `src/prefixes.rs:249-277`) -> inference rounds over
-  * unresolved IRIs (Stage 2) -> normalize + summarize (Stage 3) -> sinks
-  * (Stage 4: output.ttl, all-prefixes.json, vis-data.json, tasks.json).
+  * Stage order mirrors the reference: one parallel scan (Turtle one file per
+  * task) whose single job fills the triple cache and returns the per-file
+  * tallies, while the parse hands on the `@prefix` declarations -> their
+  * merge into the community registry (N7, `src/prefixes.rs:249-277`) ->
+  * inference rounds over unresolved IRIs (Stage 2) -> normalize + summarize
+  * as one exchange-free job (Stage 3) -> sinks (Stage 4: output.ttl,
+  * all-prefixes.json, vis-data.json, tasks.json).
   */
 object RdfPipeline {
 
@@ -53,21 +55,24 @@ object RdfPipeline {
       a
     }
 
-    val (triplesDs, declsDs) = RdfSource.read(spark, paths)
-    val triples = timed("scan") {
-      val df = truncateIris(triplesDs.toDF())
+    // one parse: the job that fills the triple cache also returns the
+    // per-file kind tallies, and the Turtle parse passes the @prefix
+    // declarations out through an accumulator
+    val scan = RdfSource.scan(spark, paths)
+    val (triples, tallies) = timed("scan") {
+      val df = truncateIris(scan.triples.toDF())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (df, df.count())
+      val t = graft.sinks.Metrics.tally(df)
+      ((df, t), t.valuesIterator.map(_.triples).sum)
     }
 
     // registry: community + per-file @prefix decls (alias from file; generated
-    // when the file declares the empty alias)
+    // when the file declares the empty alias), merged in a total order
     var registry = Registry.community()
     timed("prefix_decls") {
-      val decls: Array[PrefixDecl] = declsDs.collect()
-      registry = Registry.addDeclaredAll(registry,
-        decls.sortBy(d => (d.ns.length, d.ns)).map(d => d.ns -> d.alias).toSeq)
-      ((), decls.length.toLong)
+      val decls = scan.declarations
+      registry = Registry.addDeclaredAll(registry, decls.map(d => d.ns -> d.alias))
+      ((), decls.size.toLong)
     }
 
     // inference rounds (chilon Stage 2; shared delta-round loop)
@@ -94,47 +99,36 @@ object RdfPipeline {
       ((), rows.size.toLong)
     }
     // per-file metrics (reference Task records, meta_info.rs:31-46): byte
-    // size from the filesystem, kind tallies from one aggregation over the
-    // triple table grouped by the srcUrl lineage column
+    // size and the scan job's kind tallies, keyed by the srcUrl the scan
+    // stamped (file:/... for Turtle, file:///... for the line formats)
     val files = timed("file_metrics") {
-      // srcUrl is the URI the scan stamped (file:/..., possibly file:///...);
       // normalize BOTH sides to an absolute filesystem path and match
       // exactly — suffix matching would misattribute when one input path is
       // a path-suffix of another (/data/x/g.ttl vs /backup/data/x/g.ttl)
       def canon(p: String): String = {
         val noScheme =
           if (p.startsWith("file:")) {
-            try java.nio.file.Paths.get(new java.net.URI(p)).toString
+            try Paths.get(new java.net.URI(p)).toString
             catch { case _: Exception => p.stripPrefix("file:") }
           } else p
         try Paths.get(noScheme).toAbsolutePath.normalize.toString
         catch { case _: Exception => noScheme }
       }
-      val tallies = graft.sinks.Metrics.perSource(triples).collect()
-        .map(r => canon(r.getString(0)) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+      val byPath = tallies.map { case (src, t) => canon(src) -> t }
+      // a directory or glob input expands to the files the scan read
+      val listed = paths.flatMap { p =>
+        if (RdfSource.isLineFormat(p)) Seq(p)
+        else RdfSource.listFiles(spark, Seq(p)).map(f => canon(f._1)) match {
+          case Seq(f) if f == canon(p) => Seq(p)
+          case fs => fs
+        }
+      }
       val fs = (p: String) =>
         try java.nio.file.Files.size(Paths.get(p)) catch { case _: Exception => 0L }
-      // a directory input scans its contained files (non-recursive, like the
-      // underlying binaryFiles/wholeTextFiles read), so expand it here: the
-      // tally keys are individual file paths and a directory entry would
-      // otherwise match nothing and report silent zeros
-      def expand(p: String): Seq[String] =
-        try {
-          val path = Paths.get(p)
-          if (java.nio.file.Files.isDirectory(path)) {
-            val s = java.nio.file.Files.list(path)
-            try {
-              import scala.jdk.CollectionConverters._
-              s.iterator().asScala
-                .filter(java.nio.file.Files.isRegularFile(_))
-                .map(_.toString).toVector.sorted
-            } finally s.close()
-          } else Seq(p)
-        } catch { case _: Exception => Seq(p) }
-      val out = paths.flatMap(expand).map { p =>
-        val (t, i, b, l) = tallies.getOrElse(canon(p), (0L, 0L, 0L, 0L))
-        Pipeline.FileMetrics(p, fs(p), t, i, b, l)
+      val none = graft.sinks.Metrics.Tally(0L, 0L, 0L, 0L)
+      val out = listed.map { p =>
+        val t = byPath.getOrElse(canon(p), none)
+        Pipeline.FileMetrics(p, fs(p), t.triples, t.iris, t.blanks, t.literals)
       }
       (out, out.size.toLong)
     }

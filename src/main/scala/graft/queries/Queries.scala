@@ -1221,7 +1221,10 @@ object Queries {
     // the inference rounds. The old Pipeline.run also ran the batch
     // summarize and all four sinks — outputs this query never reads.
     val reg = {
-      val cfg = graft.pipeline.Pipeline.Config(outDir = stage, minOccurs = 5,
+      // runInference writes nothing, but its Config needs an outDir: a
+      // throwaway one, so no output can ever land in the stream's source dir
+      val scratch = java.nio.file.Files.createTempDirectory("graft-stream-infer").toString
+      val cfg = graft.pipeline.Pipeline.Config(outDir = scratch, minOccurs = 5,
         minNsSize = 100, minDomainOccurs = 10, resume = false)
       val triples = graft.pipeline.Pipeline
         .extractTriples(spark.read.parquet(stage).as[graft.model.Page]).toDF()

@@ -10,6 +10,28 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   */
 object Metrics {
 
+  /** Kind tallies of one source: triples, IRIs (s, p, o positions), blank
+    * nodes (s, o) and literals.
+    */
+  final case class Tally(triples: Long, iris: Long, blanks: Long, literals: Long)
+
+  /** [[perSource]] collected to the driver as one single-stage job with no
+    * exchange ([[graft.summarize.Normalize.countRows]] over `(srcUrl, sKind,
+    * oKind)`, whose distinct rows are at most sources × 2 × 5). Run over a
+    * freshly persisted table, this job is also the one that fills its cache.
+    */
+  def tally(triples: DataFrame): Map[String, Tally] =
+    graft.summarize.Normalize.countRows(triples.select("srcUrl", "sKind", "oKind"))
+      .groupMapReduce(_._1.getString(0)) { case (r, n) =>
+        val (s, o) = (r.getByte(1), r.getByte(2))
+        def when(c: Boolean) = if (c) n else 0L
+        Tally(n, when(s == Kind.IRI) + n + when(o == Kind.IRI),
+          when(s == Kind.BLANK) + when(o == Kind.BLANK),
+          when(o == Kind.LIT_PLAIN || o == Kind.LIT_LANG || o == Kind.LIT_TYPED))
+      } { (a, b) =>
+        Tally(a.triples + b.triples, a.iris + b.iris, a.blanks + b.blanks, a.literals + b.literals)
+      }
+
   def perSource(triples: DataFrame): DataFrame =
     triples
       .groupBy(F.col("srcUrl").as("source"))

@@ -78,25 +78,30 @@ object Snapshot {
     isComplete(dir) && readLineage(dir).exists(_._2 == inputs)
 
   /** Write `df` as a snapshot at `dir` with a per-partition lineage manifest. */
-  def write(df: DataFrame, dir: String, table: String, inputs: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
+  def write(df: DataFrame, dir: String, table: String, inputs: Seq[String]): DataFrame =
+    writeCounted(df, dir, table, inputs)._1
+
+  /** [[write]], also returning the row count the manifest records. The
+    * per-partition counts of the read-back come from one single-stage job
+    * ([[graft.summarize.Normalize.countRows]] over `spark_partition_id()`),
+    * not a grouped aggregate with its exchange.
+    */
+  private def writeCounted(
+      df: DataFrame, dir: String, table: String, inputs: Seq[String]): (DataFrame, Long) = {
     val t0 = System.nanoTime()
     df.write.mode("overwrite").parquet(dir)
-    val written = spark.read.parquet(dir)
-    val perPart = written
-      .groupBy(F.spark_partition_id().as("pid"))
-      .agg(F.count(F.lit(1)).as("rows"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
+    val written = df.sparkSession.read.parquet(dir)
+    val perPart = graft.summarize.Normalize.countRows(written.select(F.spark_partition_id()))
+      .map { case (r, n) => (r.getInt(0), n) }
       .toSeq
+      .sortBy(_._1)
     val rows = perPart.map(_._2).sum
     val m = Manifest(
       table, rows, perPart, inputs, written.schema.json,
       (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
     Files.write(manifestPath(dir), manifestJson(m).getBytes(StandardCharsets.UTF_8))
     Files.write(lineagePath(dir), lineageTsv(rows, inputs).getBytes(StandardCharsets.UTF_8))
-    written
+    (written, rows)
   }
 
   /** Snapshot for driver-materialized tiny tables (e.g. the summary): writes
@@ -123,17 +128,29 @@ object Snapshot {
       dir: String,
       table: String,
       inputs: Seq[String]
-  )(compute: => DataFrame): DataFrame = {
+  )(compute: => DataFrame): DataFrame =
+    resumeOrWriteCounted(spark, dir, table, inputs)(compute)._1
+
+  /** [[resumeOrWrite]], also returning the snapshot's row count as its
+    * lineage records it, so a caller needs no count job of its own.
+    */
+  def resumeOrWriteCounted(
+      spark: SparkSession,
+      dir: String,
+      table: String,
+      inputs: Seq[String]
+  )(compute: => DataFrame): (DataFrame, Long) = {
     // any failure reading the manifest/lineage/parquet (e.g. part files
     // deleted while the sidecars survive) means NOT reusable — recompute,
     // exactly as the doc promises, instead of surfacing an AnalysisException
-    val reusable =
-      try isComplete(dir) && (readLineage(dir) match {
-        case Some((rows, ins)) => ins == inputs && spark.read.parquet(dir).count() == rows
-        case None => false
-      })
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (reusable) spark.read.parquet(dir)
-    else write(compute, dir, table, inputs)
+    val reused =
+      try if (!isComplete(dir)) None else readLineage(dir).collect {
+        case (rows, ins) if ins == inputs && spark.read.parquet(dir).count() == rows => rows
+      }
+      catch { case scala.util.control.NonFatal(_) => None }
+    reused match {
+      case Some(rows) => (spark.read.parquet(dir), rows)
+      case None => writeCounted(compute, dir, table, inputs)
+    }
   }
 }

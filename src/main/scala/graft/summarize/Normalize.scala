@@ -3,15 +3,20 @@ package graft.summarize
 import graft.model.Kind
 import graft.ns.Registry
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Triple normalization + namespace summarization — the reference's Stage 3
   * (chilon_rs `src/normalize.rs`), declared as Catalyst expressions over the
   * triple table. The only black box is the broadcast longest-prefix lookup
   * (`resolveNs`, reference `src/trie.rs:257-296`); every other classification is
-  * a codegen'd `CASE WHEN` on the kind tags, and the count itself is a plain
-  * hash aggregation with map-side partial aggregation (reference `TripleFreq`,
-  * `src/normalize.rs:24-59`).
+  * a codegen'd `CASE WHEN` on the kind tags. The pipelines count in per-task
+  * hash maps merged on the driver ([[summarizeWithGroups]]); [[summarize]]
+  * is the relational group-count for streaming and SQL consumers (reference
+  * `TripleFreq`, `src/normalize.rs:24-59`).
   */
 /** Resolved (alias, namespace-prefix) pair of an IRI. */
 final case class NsPair(alias: String, ns: String)
@@ -142,31 +147,61 @@ object Normalize {
       .withColumn("stmt_id", F.format_string("#t%04d", F.row_number().over(w)))
   }
 
+  /** Exact row multiplicities of a relation with few DISTINCT rows, with no
+    * exchange: each task counts its rows in a local hash map keyed by the
+    * codegen'd projection's `UnsafeRow` (copied only when the key is new),
+    * and the driver merges the per-task maps as tasks finish — the
+    * `RDD.aggregate` shape, so it holds one merged map, never one per task.
+    * One job with one stage, where `groupBy(all).count()` pays a partial
+    * aggregate, a shuffle, a final aggregate and AQE's second job; the
+    * merged map is as large as the distinct-row space, so this is for
+    * summary-sized outputs only.
+    */
+  private[graft] def countRows(df: DataFrame): Map[Row, Long] = {
+    val schema = df.schema
+    val merged = mutable.HashMap.empty[Row, Long]
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (rows: Iterator[InternalRow]) => {
+        val counts = new java.util.HashMap[UnsafeRow, Array[Long]]()
+        lazy val toUnsafe = UnsafeProjection.create(schema)
+        rows.foreach { r =>
+          val key = r match {
+            case u: UnsafeRow => u
+            case other => toUnsafe(other)
+          }
+          val n = counts.get(key)
+          if (n == null) counts.put(key.copy(), Array(1L)) else n(0) += 1
+        }
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        counts.asScala.iterator.map { case (k, n) => (toRow(k).asInstanceOf[Row], n(0)) }.toArray
+      },
+      (_: Int, part: Array[(Row, Long)]) =>
+        part.foreach { case (k, n) => merged(k) = merged.getOrElse(k, 0L) + n })
+    merged.toMap
+  }
+
   /** Fused Stage-C aggregation: summary rows, used groups and blank/unknown
-    * flags from ONE distributed job (scale path — avoids caching the wide
-    * normalized table and re-scanning it three times). The pre-aggregation
-    * keys include the (alias, ns) pair structs; their cardinality is the same
-    * order as the summary itself (a key determines its pair except for the two
-    * fixed literal groups), so map-side combine collapses everything before
-    * the shuffle and the driver folds a few hundred rows.
+    * flags from ONE single-stage job over the normalize projection
+    * ([[countRows]]). It needs no exchange because its output is bounded
+    * by the group space, not by the corpus: the keys add the (alias, ns)
+    * pair structs to the summary key, and a key determines its pairs
+    * except for the two fixed literal groups, so each task's map and the
+    * driver's merged map hold a few hundred rows at any input size.
     */
   def summarizeWithGroups(
       triples: DataFrame,
       bc: Broadcast[Registry],
       ignoreUnknown: Boolean = false
   ): (Seq[graft.model.SummaryRow], Seq[(String, String)], Boolean, Boolean) = {
-    val norm = normalize(triples, bc, ignoreUnknown)
-    val rows = norm
-      .groupBy("s_ns", "p_ns", "o_ns", "is_datatype", "s_pair", "p_pair", "o_pair")
-      .agg(F.count(F.lit(1)).as("occurs"))
-      .collect()
-    val summary = scala.collection.mutable.Map.empty[(String, String, String, Boolean), Long]
-    val groups = scala.collection.mutable.SortedSet.empty[(String, String)]
+    val counts = countRows(normalize(triples, bc, ignoreUnknown)
+      .select("s_ns", "p_ns", "o_ns", "is_datatype", "s_pair", "p_pair", "o_pair"))
+    val summary = mutable.Map.empty[(String, String, String, Boolean), Long]
+    val groups = mutable.SortedSet.empty[(String, String)]
     var blank = false
     var unknown = false
-    rows.foreach { r =>
+    counts.foreach { case (r, n) =>
       val key = (r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3))
-      summary(key) = summary.getOrElse(key, 0L) + r.getLong(7)
+      summary(key) = summary.getOrElse(key, 0L) + n
       Seq(4, 5, 6).foreach { i =>
         val pair = r.getStruct(i)
         if (pair != null && !pair.isNullAt(0)) groups += ((pair.getString(0), pair.getString(1)))

@@ -112,3 +112,27 @@ class NormalizeSpec extends AnyFunSuite {
     assert(withIds(0).getAs[String]("stmt_id") == "#t0001")
   }
 }
+
+/** Parity of the fused fold against the relational reference pair. */
+object FoldParity {
+  import org.scalatest.Assertions._
+
+  /** `summarizeWithGroups` equals `summarize(normalize(…))` + `usedGroups(…)`
+    * with `ignoreUnknown` off and on, over the table at 1 and 7 partitions.
+    */
+  def check(triples: org.apache.spark.sql.DataFrame, registry: Registry): Unit = {
+    val bc = triples.sparkSession.sparkContext.broadcast(registry)
+    for (ignore <- Seq(false, true); parts <- Seq(1, 7)) {
+      val t = triples.repartition(parts)
+      val (rows, groups, blank, unknown) = Normalize.summarizeWithGroups(t, bc, ignore)
+      val norm = Normalize.normalize(t, bc, ignore)
+      val want = Normalize.summarize(norm).collect()
+        .map(r => graft.model.SummaryRow(r.getString(0), r.getString(1), r.getString(2),
+          r.getBoolean(3), r.getLong(4)))
+        .sortBy(r => (r.s_ns, r.p_ns, r.o_ns, r.is_datatype)).toSeq
+      val clue = s"ignoreUnknown=$ignore partitions=$parts"
+      assert(rows == want, clue)
+      assert((groups, blank, unknown) == Normalize.usedGroups(norm), clue)
+    }
+  }
+}

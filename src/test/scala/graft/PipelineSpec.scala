@@ -77,6 +77,14 @@ class PipelineSpec extends AnyFunSuite {
     val total = rows.map(_.getLong(4)).sum
     val nTriples = res.triples.count()
     assert(total == nTriples) // every triple lands in exactly one signature
+    // the snapshot-backed extract stage reports the manifest's row count
+    assert(res.metrics.find(_.name == "extract").get.rows == nTriples)
+    assert(graft.sinks.Snapshot.readLineage(
+      java.nio.file.Paths.get(out, "triples").toString).map(_._1).contains(nTriples))
+    // the fused summary fold against the relational reference, with the
+    // run's registry and with the community one (UNKNOWN rows)
+    FoldParity.check(res.triples, res.registry)
+    FoldParity.check(res.triples, graft.ns.Registry.community())
 
     // sinks exist and are non-trivial
     val ttl = new String(java.nio.file.Files.readAllBytes(
@@ -209,6 +217,21 @@ class PipelineSpec extends AnyFunSuite {
     } finally s.close()
     val r4 = Snapshot.resumeOrWrite(spark, dir, "t", Seq("inputB"))(df2)
     assert(r4.count() == 25)
+  }
+
+  test("snapshot manifest: per-partition counts from the single-stage fold") {
+    import graft.sinks.Snapshot
+    val dir = java.nio.file.Paths.get(SparkSuite.tmpDir("graft-parts"), "t").toString
+    val df = spark.range(0, 1000, 1, 5).toDF("n").filter(F.col("n") % 3 =!= 0)
+    val written = Snapshot.write(df, dir, "t", Seq("in"))
+    val want = written.groupBy(F.spark_partition_id().as("pid")).count().collect()
+      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
+    val manifest = new String(java.nio.file.Files.readAllBytes(Snapshot.manifestPath(dir)), "UTF-8")
+    val got = """\{"id": (\d+), "rows": (\d+)\}""".r.findAllMatchIn(manifest)
+      .map(m => (m.group(1).toInt, m.group(2).toLong)).toSeq
+    assert(got == want && got.map(_._2).sum == 666L)
+    val (_, rows) = Snapshot.resumeOrWriteCounted(spark, dir, "t", Seq("in"))(fail("reused"))
+    assert(rows == 666L)
   }
 
   test("multi-round inference: delta-filtered rounds reach the same fixed point") {

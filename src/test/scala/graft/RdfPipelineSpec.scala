@@ -74,6 +74,60 @@ class RdfPipelineSpec extends AnyFunSuite {
     val tasks2 = new String(Files.readAllBytes(Paths.get(out2, "tasks.json")), "UTF-8")
     assert(tasks2.contains("decl.ttl") && tasks2.contains("data.nt"))
     assert(tasks2.contains("\"triples\": 30") && tasks2.contains("\"triples\": 503"))
+
+    // a mixed input (.nt file, .ttl file, directory): every file row of
+    // tasks.json carries exactly the Metrics.perSource tallies of its file
+    val more = SparkSuite.tmpDir("rdfpipe-more")
+    Files.write(Paths.get(more, "extra.ttl"), ("@prefix myont: <http://myontology.example.com/terms/> .\n" +
+      "_:x myont:label \"x\"@en ; myont:n 4 ; myont:to <http://dbpedia.org/resource/E1> ;\n" +
+      "  myont:v \"z\"^^<http://unregistered.invalid/dt> .\n")
+      .getBytes("UTF-8"))
+    Files.write(Paths.get(more, "_skipped.ttl"), "<http://a/s> <http://a/p> <http://a/o> .\n"
+      .getBytes("UTF-8"))
+    val out3 = SparkSuite.tmpDir("rdfpipe-out-mixed")
+    val res3 = RdfPipeline.run(spark, Seq(s"$dir/data.nt", s"$dir/decl.ttl", more),
+      Pipeline.Config(outDir = out3, minOccurs = 5, minNsSize = 100, minDomainOccurs = 10))
+    def path(src: String) = Paths.get(new java.net.URI(src)).toString
+    val want = graft.sinks.Metrics.perSource(res3.triples).collect().map(r =>
+      path(r.getString(0)) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Paths.get(out3, "tasks.json").toFile)
+    import scala.jdk.CollectionConverters._
+    val got = json.get("files").elements().asScala.map { f =>
+      Paths.get(f.get("file").asText()).toAbsolutePath.normalize.toString ->
+        Seq("triples", "iris", "blanks", "literals").map(k => f.get(k).asLong())
+    }.toMap
+    assert(got.keySet.map(k => Paths.get(k).getFileName.toString) ==
+      Set("data.nt", "decl.ttl", "extra.ttl"))
+    assert(got == want)
+    assert(got.values.map(_.head).sum == res3.metrics.find(_.name == "scan").get.rows)
+    assert(got(Paths.get(more, "extra.ttl").toString) == Seq(4L, 5L, 4L, 3L))
+    // the fused summary fold against the relational reference on this input
+    FoldParity.check(res3.triples, res3.registry)
+  }
+
+  test("declared aliases merge in a total order, whatever the shuffle partitions") {
+    val dir = SparkSuite.tmpDir("rdfpipe-alias")
+    Files.write(Paths.get(dir, "one.ttl"),
+      "@prefix b: <http://x.test/ns/> .\nb:s b:p b:o .\n".getBytes("UTF-8"))
+    Files.write(Paths.get(dir, "two.ttl"),
+      "@prefix a: <http://x.test/ns/> .\na:t a:p a:o .\n".getBytes("UTF-8"))
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def registryAt(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      try {
+        val res = RdfPipeline.run(spark, Seq(s"$dir/one.ttl", s"$dir/two.ttl"),
+          Pipeline.Config(outDir = SparkSuite.tmpDir(s"rdfpipe-alias-$parts"), minOccurs = 1,
+            inferNs = false))
+        res.triples.unpersist()
+        res.registry
+      } finally spark.conf.set(key, before)
+    }
+    val (r1, r7) = (registryAt(1), registryAt(7))
+    assert(r1.toJson == r7.toJson)
+    assert(r1.resolveAlias("http://x.test/ns/s").contains("a"))
+    assert(!r1.aliasMap.contains("b"))
   }
 
   test("IRIs above 200 graphemes are capped on the RDF path (prefixes.rs:431-444)") {

@@ -259,7 +259,7 @@ class RdfSpec extends AnyFunSuite {
     assert(got == n)
   }
 
-  test("gz-compressed Turtle streams through the codec-wrapped binaryFiles scan") {
+  test("gz/bz2-compressed Turtle streams through the codec-wrapped per-file scan") {
     val spark = SparkSuite.spark
     val dir = SparkSuite.tmpDir("rdf-ttl-gz")
     val gz = Paths.get(dir, "e.ttl.gz")
@@ -270,6 +270,59 @@ class RdfSpec extends AnyFunSuite {
     val (triples, decls) = RdfSource.read(spark, Seq(gz.toString))
     assert(triples.count() == 2)
     assert(decls.collect().map(_.alias).toSet == Set("ex"))
+
+    // a multi-file input (plain, .ttl.gz, .ttl.bz2) scans one file per task
+    val multi = SparkSuite.tmpDir("rdf-ttl-multi")
+    def doc(k: Int) = (s"@prefix ex$k: <http://example.org/f$k/> .\n" +
+      (0 until 10 * (k + 1)).map(i => s"ex$k:s$i ex$k:p \"v$i\" .\n").mkString).getBytes("UTF-8")
+    Files.write(Paths.get(multi, "f0.ttl"), doc(0))
+    val gz1 = new java.util.zip.GZIPOutputStream(Files.newOutputStream(Paths.get(multi, "f1.ttl.gz")))
+    gz1.write(doc(1)); gz1.close()
+    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
+    codec.setConf(spark.sparkContext.hadoopConfiguration)
+    val bz = codec.createOutputStream(Files.newOutputStream(Paths.get(multi, "f2.ttl.bz2")))
+    bz.write(doc(2)); bz.close()
+    val (ts, ds) = RdfSource.read(spark, Seq(multi))
+    assert(ts.rdd.getNumPartitions == 3)
+    assert(ts.count() == 10 + 20 + 30)
+    assert(ts.filter(_.srcUrl.endsWith("f2.ttl.bz2")).count() == 30)
+    assert(ds.collect().map(_.alias).toSet == Set("ex0", "ex1", "ex2"))
+    // the one-pass scan: same triples, declarations from the same parse
+    val scan = RdfSource.scan(spark, Seq(multi))
+    assert(scan.triples.count() == 60)
+    assert(scan.declarations == RdfSource.mergeOrder(ds.collect()))
+  }
+
+  test("Turtle listing matches binaryFiles: globs, flat directories, hidden files, srcUrl keys") {
+    val spark = SparkSuite.spark
+    val dir = SparkSuite.tmpDir("rdf-list")
+    val doc = "@prefix ex: <http://example.org/> .\nex:s ex:p ex:o .\n"
+    Seq("a.ttl", "b.ttl", "c.nt", "_hidden.ttl", ".dot.ttl").foreach { f =>
+      Files.write(Paths.get(dir, f), doc.getBytes("UTF-8"))
+    }
+    val sub = Files.createDirectory(Paths.get(dir, "sub"))
+    Files.write(sub.resolve("deep.ttl"), doc.getBytes("UTF-8"))
+    val listed = RdfSource.listFiles(spark, Seq(dir))
+    assert(listed.map(f => f._1.substring(f._1.lastIndexOf('/') + 1)) == Seq("a.ttl", "b.ttl", "c.nt"))
+    assert(listed.forall(f => f._1.startsWith("file:/") && !f._1.startsWith("file://")))
+    assert(listed.forall(_._2 == doc.length))
+    // the keys binaryFiles gave the old scan, byte for byte
+    val glob = s"$dir/*.ttl"
+    val binaryKeys = spark.sparkContext.binaryFiles(glob).keys.collect().sorted.toSeq
+    assert(RdfSource.listFiles(spark, Seq(glob)).map(_._1) == binaryKeys)
+    val (triples, _) = RdfSource.read(spark, Seq(glob))
+    assert(triples.collect().map(_.srcUrl).distinct.sorted.toSeq == binaryKeys)
+    assert(intercept[java.io.FileNotFoundException](
+      RdfSource.listFiles(spark, Seq(s"$dir/none*.ttl"))).getMessage.contains("none"))
+  }
+
+  test("Turtle packing: largest files first, each onto the lightest task") {
+    val files = Seq("a" -> 10L, "b" -> 70L, "c" -> 40L, "d" -> 30L, "e" -> 20L)
+    assert(RdfSource.pack(files, 2, 0L) == Seq(Seq("b", "e"), Seq("c", "d", "a")))
+    assert(RdfSource.pack(files, 8, 0L).map(_.size) == Seq(1, 1, 1, 1, 1))
+    // the open cost evens out many small files by count
+    assert(RdfSource.pack(files, 2, 1000L).map(_.size).sorted == Seq(2, 3))
+    assert(RdfSource.pack(Nil, 4, 0L).isEmpty)
   }
 
   test("bz2-compressed N-Triples reads transparently (extract.rs:44-66 equivalent)") {
