@@ -5,7 +5,7 @@ import graft.model.{Kind, Page, Triple}
 import graft.ns.{Inference, NsSource, Registry}
 import graft.sinks.{Snapshot, TtlSink, VisJson}
 import graft.summarize.Normalize
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, functions => F}
 import java.nio.file.Paths
 
 /** End-to-end KG-construction + namespace-summarization pipeline
@@ -13,12 +13,17 @@ import java.nio.file.Paths
   * run (`/root/reference/src/main.rs:38-165`):
   *
   *   Stage A  pages -> triples (flatMap generator: extractText check, mentions,
-  *            entity linking, OpenIE, canonicalization) — checkpointed snapshot
+  *            entity linking, OpenIE, canonicalization) — checkpointed
+  *            snapshot whose read-back job also folds the summary keys under
+  *            the pre-inference registry (F0)
   *   Stage B  namespace inference rounds over still-unresolved IRIs
-  *            (salted prefix aggregation -> driver expansion -> registry)
-  *   Stage C  normalization + summary group-count
+  *            (salted prefix aggregation -> driver expansion -> registry),
+  *            run only when F0 holds an unresolved IRI
+  *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
+  *            re-folded (F1); `ignoreUnknown` filters the merged keys on the
+  *            driver
   *   Stage D  sinks: output.ttl, all-prefixes.json, vis-data.json, tasks.json,
-  *            summary Parquet snapshot
+  *            summary Parquet snapshot, all written on the driver
   *
   * Unlike the reference's arrival-order-dependent mid-stream maintenance
   * (`src/prefixes.rs:209-247`), inference computes the order-independent fixed
@@ -138,33 +143,30 @@ object Pipeline {
   private def runExtracting(
       spark: SparkSession, cfg: Config, extracted: () => DataFrame): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
 
     // ---- Stage A: extraction (snapshot + resume) -------------------------
+    val r0 = Registry.community()
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
-    val triples = timed("extract") {
-      val (df, recorded) =
-        if (cfg.resume) {
-          val (d, n) = Snapshot.resumeOrWriteCounted(spark, triplesDir, "triples",
-            Seq("pages"))(extracted())
-          (d, Some(n))
-        } else (extracted(), None)
-      // snapshot-backed runs re-read the snapshot (no second corpus-sized
-      // copy) and take the row count its manifest records; a cached table
-      // is counted, because that count is what fills the cache
-      val cache = cfg.cacheTriples.getOrElse(!cfg.resume)
-      if (cache) {
-        val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (out, out.count())
-      } else (df, recorded.getOrElse(df.count()))
+    var cached: Option[DataFrame] = None
+    releaseOnFailure(cached) {
+      val (triples, f0) = timed(metrics, "extract") {
+        val (df, folded) =
+          if (cfg.resume)
+            Snapshot.resumeOrWriteFolded(spark, triplesDir, "triples", Seq("pages"),
+              df => Normalize.summaryKeys(df, r0, df.columns.toSeq))(extracted())
+          else (extracted(), None)
+        // F0, the summary fold under r0, rides the extraction job when it
+        // writes the snapshot now, else the job that fills the cache when the
+        // table is cached, else it is a job of its own. Snapshot-backed runs
+        // re-read the snapshot instead of caching a second corpus-sized copy.
+        val cache = cfg.cacheTriples.getOrElse(!cfg.resume)
+        if (cache) cached = Some(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val out = cached.getOrElse(df)
+        val f0 = folded.filter(_ => !cache).getOrElse(Normalize.foldKeys(out, r0))
+        ((out, f0), f0.values.sum)
+      }
+      runFromTriples(spark, triples, r0, f0, cfg, triplesDir, metrics)
     }
-
-    runFromTriples(spark, triples, cfg, triplesDir, metrics)
   }
 
   /** Chunked Stage A: the page corpus is processed in independent chunks,
@@ -180,33 +182,32 @@ object Pipeline {
       cfg: Config
   ): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
+    val r0 = Registry.community()
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
-    val triples = timed("extract") {
-      var computed = 0
-      (0 until nChunks).foreach { k =>
-        val dir = Paths.get(triplesDir, s"chunk=$k").toString
-        if (!(cfg.resume && Snapshot.isCompleteFor(dir, Seq(s"pages[chunk=$k]")))) {
-          Snapshot.write(extractTriples(chunk(k)).toDF(), dir, s"triples/chunk=$k",
-            Seq(s"pages[chunk=$k]"))
-          computed += 1
+    var cached: Option[DataFrame] = None
+    releaseOnFailure(cached) {
+      val (triples, f0) = timed(metrics, "extract") {
+        var computed = 0
+        (0 until nChunks).foreach { k =>
+          val dir = Paths.get(triplesDir, s"chunk=$k").toString
+          if (!(cfg.resume && Snapshot.isCompleteFor(dir, Seq(s"pages[chunk=$k]")))) {
+            Snapshot.write(extractTriples(chunk(k)).toDF(), dir, s"triples/chunk=$k",
+              Seq(s"pages[chunk=$k]"))
+            computed += 1
+          }
         }
-      }
-      // always snapshot-backed here: the chunk parquet is the materialization
-      val read = spark.read.parquet((0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
-      val df =
+        // always snapshot-backed here: the chunk parquet is the materialization
+        val read = spark.read.parquet((0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
         if (cfg.cacheTriples.contains(true))
-          read.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else read
-      metrics += StageMetrics("chunks_computed", computed.toLong, 0L)
-      (df, df.count())
+          cached = Some(read.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val df = cached.getOrElse(read)
+        metrics += StageMetrics("chunks_computed", computed.toLong, 0L)
+        // the summary fold under r0 (F0) is the row count (and fills the cache)
+        val f0 = Normalize.foldKeys(df, r0)
+        ((df, f0), f0.values.sum)
+      }
+      runFromTriples(spark, triples, r0, f0, cfg, triplesDir, metrics)
     }
-    runFromTriples(spark, triples, cfg, triplesDir, metrics)
   }
 
   /** Incremental Stage C over a new crawl segment: with the registry FROZEN
@@ -251,49 +252,95 @@ object Pipeline {
     }
   }
 
+  /** Runs one stage and records its wall time and row count in `metrics`. */
+  private[pipeline] def timed[A](
+      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]],
+      name: String
+  )(f: => (A, Long)): A = {
+    val t0 = System.nanoTime()
+    val (a, rows) = f
+    metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
+    a
+  }
+
+  /** Runs `body`; when it throws, first unpersists what `cached` holds by
+    * then, so a failed run leaves no cached blocks behind.
+    */
+  private[pipeline] def releaseOnFailure[A](cached: => Option[DataFrame])(body: => A): A =
+    try body
+    catch { case e: Throwable => cached.foreach(_.unpersist()); throw e }
+
   private def runFromTriples(
       spark: SparkSession,
       triples: DataFrame,
+      r0: Registry,
+      f0: Map[Row, Long],
       cfg: Config,
       triplesDir: String,
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
   ): Result = {
-    def timed[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
-      a
-    }
-    // ---- Stage B: registry + inference rounds ----------------------------
-    val (registry, hk, inferredAll) =
-      runInference(triples, Registry.community(), cfg, metrics)
+    val (registry, hk, inferredAll, summary) =
+      summarizeAndSink(spark, triples, r0, f0, cfg, Seq(triplesDir), metrics)
+    val ms = metrics.result()
+    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil))
+    Result(summary, registry, triples, ms, inferredAll)
+  }
 
-    // ---- Stage C: normalize + summarize (one fused job) -------------------
-    val bcFinal = spark.sparkContext.broadcast(registry)
-    val (rows, groups) = timed("summarize") {
-      val (r, g, _, _) = Normalize.summarizeWithGroups(triples, bcFinal, cfg.ignoreUnknown)
+  /** Stages B, C and D, summary first (the reference sends only registry
+    * misses to inference, `src/prefixes.rs:193-207`).
+    *
+    *   - `f0` holds the summary keys of `triples` under the pre-inference
+    *     registry `r0`, counted without the `ignoreUnknown` filter.
+    *   - When no key holds an unresolved IRI, inference round 1 would count
+    *     an empty set: it is recorded with 0 rows and no Spark job, and `f0`
+    *     is the final summary. Otherwise [[runInference]] runs.
+    *   - When inference added namespaces, only the rows they resolve are
+    *     re-folded ([[Normalize.refold]], F1), not the whole table.
+    *   - The sinks and the summary snapshot are written on the driver.
+    *
+    * Returns the final registry, the housekeeping, the added namespaces and
+    * the summary as a driver-local DataFrame.
+    */
+  private[pipeline] def summarizeAndSink(
+      spark: SparkSession,
+      triples: DataFrame,
+      r0: Registry,
+      f0: Map[Row, Long],
+      cfg: Config,
+      lineage: Seq[String],
+      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
+  ): (Registry, InferHk, Vector[String], DataFrame) = {
+    // ---- Stage B: inference rounds, when something is unresolved ---------
+    val (registry, hk, inferredAll) =
+      if (cfg.inferNs && cfg.maxInferenceRounds > 0 && !Normalize.hasUnresolvedIri(f0)) {
+        metrics += StageMetrics("infer_round_1", 0L, 0L)
+        (r0, InferHk(1, 0L, 0L, 0L, 0L), Vector.empty[String])
+      } else runInference(triples, r0, cfg, metrics)
+
+    // ---- Stage C: re-fold what the added namespaces resolve --------------
+    val (rows, groups) = timed(metrics, "summarize") {
+      val counts =
+        if (inferredAll.isEmpty) f0
+        else Normalize.refold(triples, f0, inferredAll, registry)
+      val (r, g, _, _) = Normalize.fromKeyCounts(counts, registry, cfg.ignoreUnknown)
       ((r, g), r.size.toLong)
     }
     val summary = spark.createDataFrame(rows)
       .select(F.col("s_ns"), F.col("p_ns"), F.col("o_ns"), F.col("is_datatype"), F.col("occurs"))
 
     // ---- Stage D: sinks (driver-side; the summary is tiny by construction) -
-    timed("sinks") {
+    timed(metrics, "sinks") {
       TtlSink.write(Paths.get(cfg.outDir, "output.ttl"),
         TtlSink.render(rows, groups, cfg.minOccurs))
       TtlSink.write(Paths.get(cfg.outDir, "all-prefixes.json"), registry.toJson)
-      val visRows = rows.filter(_.occurs >= cfg.minOccurs)
-      val vis = VisJson.build(visRows, groups.toMap)
+      val vis = VisJson.build(rows.filter(_.occurs >= cfg.minOccurs), groups.toMap)
       TtlSink.write(Paths.get(cfg.outDir, "vis-data.json"), VisJson.toJson(vis))
       TtlSink.write(Paths.get(cfg.outDir, "used-groups.tsv"), TtlSink.groupsTsv(groups))
       Snapshot.writeSmall(summary, Paths.get(cfg.outDir, "summary").toString,
-        "summary", Seq(triplesDir), rows.size.toLong)
+        "summary", lineage, rows.size.toLong)
       ((), rows.size.toLong)
     }
-
-    val ms = metrics.result()
-    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil))
-    Result(summary, registry, triples, ms, inferredAll)
+    (registry, hk, inferredAll, summary)
   }
 
   /** Stage B: inference rounds to the order-independent fixed point.
@@ -317,7 +364,7 @@ object Pipeline {
     val inferredAll = Vector.newBuilder[String]
     var hk = InferHk(0, 0L, 0L, 0L, 0L)
     var unresolved: DataFrame = null // persisted unresolved-IRI relation
-    if (cfg.inferNs) {
+    if (cfg.inferNs) try {
       var round = 0
       var added = true
       var deltaPairs: Seq[(String, String)] = Nil
@@ -390,8 +437,7 @@ object Pipeline {
           go
         }
       }
-      if (unresolved != null) unresolved.unpersist()
-    }
+    } finally if (unresolved != null) unresolved.unpersist()
     (registry, hk, inferredAll.result())
   }
 

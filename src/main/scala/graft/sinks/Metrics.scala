@@ -1,7 +1,7 @@
 package graft.sinks
 
 import graft.model.Kind
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
 
 /** Per-input metrics (reference A4: per-file triples/iris/blanks/literals
   * tallies, chilon_rs `src/prefixes.rs:310-374`, `src/meta_info.rs:90-102`) —
@@ -21,16 +21,32 @@ object Metrics {
     * freshly persisted table, this job is also the one that fills its cache.
     */
   def tally(triples: DataFrame): Map[String, Tally] =
-    graft.summarize.Normalize.countRows(triples.select("srcUrl", "sKind", "oKind"))
-      .groupMapReduce(_._1.getString(0)) { case (r, n) =>
-        val (s, o) = (r.getByte(1), r.getByte(2))
-        def when(c: Boolean) = if (c) n else 0L
-        Tally(n, when(s == Kind.IRI) + n + when(o == Kind.IRI),
-          when(s == Kind.BLANK) + when(o == Kind.BLANK),
-          when(o == Kind.LIT_PLAIN || o == Kind.LIT_LANG || o == Kind.LIT_TYPED))
-      } { (a, b) =>
-        Tally(a.triples + b.triples, a.iris + b.iris, a.blanks + b.blanks, a.literals + b.literals)
-      }
+    tallies(graft.summarize.Normalize.countRows(triples.select(TallyColumns.map(F.col): _*)))
+
+  /** [[tally]] and the summary keys of the triples under `registry`
+    * ([[graft.summarize.Normalize.foldKeys]]) from one job.
+    */
+  private[graft] def tallyAndFold(
+      triples: DataFrame, registry: graft.ns.Registry): (Map[String, Tally], Map[Row, Long]) = {
+    import graft.summarize.Normalize
+    val Seq(t, keys) = Normalize.countRowsBy(
+      Normalize.summaryKeys(triples, registry, TallyColumns),
+      Seq(TallyColumns, Normalize.KeyColumns))
+    (tallies(t), keys)
+  }
+
+  private val TallyColumns = Seq("srcUrl", "sKind", "oKind")
+
+  private def tallies(counts: Map[Row, Long]): Map[String, Tally] =
+    counts.groupMapReduce(_._1.getString(0)) { case (r, n) =>
+      val (s, o) = (r.getByte(1), r.getByte(2))
+      def when(c: Boolean) = if (c) n else 0L
+      Tally(n, when(s == Kind.IRI) + n + when(o == Kind.IRI),
+        when(s == Kind.BLANK) + when(o == Kind.BLANK),
+        when(o == Kind.LIT_PLAIN || o == Kind.LIT_LANG || o == Kind.LIT_TYPED))
+    } { (a, b) =>
+      Tally(a.triples + b.triples, a.iris + b.iris, a.blanks + b.blanks, a.literals + b.literals)
+    }
 
   def perSource(triples: DataFrame): DataFrame =
     triples

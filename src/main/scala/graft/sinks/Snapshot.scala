@@ -1,8 +1,12 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import java.nio.file.{Files, Paths, Path}
-import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.util.AccumulatorV2
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot emulation (north rule: per-partition checkpoint with
   * lineage + metrics, idempotent resume).
@@ -61,7 +65,6 @@ object Snapshot {
     val p = lineagePath(dir)
     if (!Files.exists(p)) return None
     val lines = Files.readAllLines(p)
-    import scala.jdk.CollectionConverters._
     val ls = lines.asScala.toSeq.filter(_.nonEmpty).map(_.split("\t", 2))
     val rows = ls.collectFirst { case Array("rows", n) => n.toLong }
     rows.map(r => (r, ls.collect { case Array("input", i) => i }))
@@ -79,41 +82,169 @@ object Snapshot {
 
   /** Write `df` as a snapshot at `dir` with a per-partition lineage manifest. */
   def write(df: DataFrame, dir: String, table: String, inputs: Seq[String]): DataFrame =
-    writeCounted(df, dir, table, inputs)._1
+    writeFolded(df, dir, table, inputs, identity)._1
 
-  /** [[write]], also returning the row count the manifest records. The
-    * per-partition counts of the read-back come from one single-stage job
+  /** [[write]], also returning the row counts per key of `df`: `keys(df)`
+    * holds `df`'s columns, then the key columns. The keys are folded inside
+    * the write job itself, each task counting the keys of the rows it
+    * writes in a local map that reaches the driver through an accumulator
+    * (a result task's accumulator updates are applied once per partition,
+    * whatever the retries), so the write pays the key columns' evaluation
+    * but no second pass. The per-partition counts of the read-back come from
+    * one single-stage job that reads no column
     * ([[graft.summarize.Normalize.countRows]] over `spark_partition_id()`),
     * not a grouped aggregate with its exchange.
     */
-  private def writeCounted(
-      df: DataFrame, dir: String, table: String, inputs: Seq[String]): (DataFrame, Long) = {
+  private def writeFolded(df: DataFrame, dir: String, table: String, inputs: Seq[String],
+      keys: DataFrame => DataFrame): (DataFrame, Map[Row, Long]) = {
     val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(dir)
-    val written = df.sparkSession.read.parquet(dir)
+    val spark = df.sparkSession
+    val keyed = keys(df)
+    val width = df.schema.length
+    require(keyed.columns.take(width).sameElements(df.columns), "keys(df) must start with df's columns")
+    val keyCounts = new RowCounts
+    val rows =
+      if (keyed.schema.length == width) df
+      else {
+        spark.sparkContext.register(keyCounts, "snapshot.keys")
+        val schema = keyed.schema
+        val rdd = keyed.queryExecution.toRdd.mapPartitions { it =>
+          def project(ords: Seq[Int]) = UnsafeProjection.create(
+            ords.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
+          val row = project(0 until width)
+          val key = project(width until schema.length)
+          val counts = new graft.summarize.Normalize.KeyCounts
+          var flushed = false
+          new Iterator[InternalRow] {
+            def hasNext: Boolean = it.hasNext || {
+              if (!flushed) {
+                flushed = true
+                keyCounts.add(counts.toRows(StructType(schema.drop(width))).toMap)
+              }
+              false
+            }
+            def next(): InternalRow = {
+              val r = it.next()
+              counts.add(key(r))
+              row(r)
+            }
+          }
+        }
+        org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, rdd, df.schema)
+      }
+    rows.write.mode("overwrite").parquet(dir)
+    val written = spark.read.parquet(dir)
     val perPart = graft.summarize.Normalize.countRows(written.select(F.spark_partition_id()))
       .map { case (r, n) => (r.getInt(0), n) }
       .toSeq
       .sortBy(_._1)
-    val rows = perPart.map(_._2).sum
+    val rowCount = perPart.map(_._2).sum
     val m = Manifest(
-      table, rows, perPart, inputs, written.schema.json,
+      table, rowCount, perPart, inputs, written.schema.json,
       (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
-    Files.write(manifestPath(dir), manifestJson(m).getBytes(StandardCharsets.UTF_8))
-    Files.write(lineagePath(dir), lineageTsv(rows, inputs).getBytes(StandardCharsets.UTF_8))
-    (written, rows)
+    TtlSink.write(manifestPath(dir), manifestJson(m))
+    TtlSink.write(lineagePath(dir), lineageTsv(rowCount, inputs))
+    (written, keyCounts.value)
   }
 
-  /** Snapshot for driver-materialized tiny tables (e.g. the summary): writes
-    * the parquet and a single-partition manifest without the read-back pass.
+  /** Row counts merged on the driver as tasks finish. */
+  private final class RowCounts extends AccumulatorV2[Map[Row, Long], Map[Row, Long]] {
+    private var counts = Map.empty[Row, Long]
+    def isZero: Boolean = counts.isEmpty
+    def copy(): RowCounts = { val c = new RowCounts; c.counts = counts; c }
+    def reset(): Unit = counts = Map.empty
+    def add(part: Map[Row, Long]): Unit =
+      part.foreach { case (k, n) => counts = counts.updated(k, counts.getOrElse(k, 0L) + n) }
+    def merge(other: AccumulatorV2[Map[Row, Long], Map[Row, Long]]): Unit = add(other.value)
+    def value: Map[Row, Long] = counts
+  }
+
+  /** Name of the one part file of a [[writeSmall]] snapshot. */
+  private val SmallPart = "part-00000.snappy.parquet"
+
+  /** Snapshot for driver-materialized tiny tables (e.g. the summary), written
+    * on the driver with parquet-hadoop's example writer: no Spark job when
+    * `df` is a local relation, and no read-back pass. The part file is
+    * written under a hidden name first; only once it is whole is the
+    * previous snapshot retired (its lineage first), the part renamed into
+    * place, then the manifest and, last, the lineage sidecar that marks the
+    * snapshot complete. A failed write leaves the previous snapshot as it
+    * was. `spark.read.parquet(dir)` reads the rows back with the schema the
+    * manifest records. Flat tables of string, boolean, int, long and double
+    * columns only.
     */
   def writeSmall(df: DataFrame, dir: String, table: String, inputs: Seq[String], rows: Long): Unit = {
     val t0 = System.nanoTime()
-    df.coalesce(1).write.mode("overwrite").parquet(dir)
-    val m = Manifest(table, rows, Seq((0, rows)), inputs, df.schema.json,
+    val schema = df.schema
+    val data = df.collect()
+    require(data.length == rows, s"writeSmall: told $rows rows, the table has ${data.length}")
+    val d = Paths.get(dir)
+    Files.createDirectories(d)
+    val tmp = d.resolve(s".$SmallPart.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      writeParquet(tmp, schema, data, df.sparkSession.sparkContext.hadoopConfiguration)
+      Files.deleteIfExists(lineagePath(dir))
+      Files.deleteIfExists(manifestPath(dir))
+      // stale part files and their sidecars (Spark's _SUCCESS and .crc files)
+      val stale = Files.list(d)
+      try stale.iterator().asScala.filter(p => p != tmp && Files.isRegularFile(p))
+        .foreach(Files.delete)
+      finally stale.close()
+      Files.move(tmp, d.resolve(SmallPart), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    // file sources read every column as nullable
+    val readSchema = StructType(schema.fields.map(_.copy(nullable = true)))
+    val m = Manifest(table, rows, Seq((0, rows)), inputs, readSchema.json,
       (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
-    Files.write(manifestPath(dir), manifestJson(m).getBytes(StandardCharsets.UTF_8))
-    Files.write(lineagePath(dir), lineageTsv(rows, inputs).getBytes(StandardCharsets.UTF_8))
+    TtlSink.write(manifestPath(dir), manifestJson(m))
+    TtlSink.write(lineagePath(dir), lineageTsv(rows, inputs))
+  }
+
+  /** One Parquet file of `rows` at `path`, carrying Spark's schema in the
+    * footer as Spark's own writer does, so Spark reads back the same types.
+    */
+  private def writeParquet(path: Path, schema: StructType, rows: Array[Row],
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val fields: Seq[Type] = schema.fields.toSeq.map { f =>
+      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+      val t = f.dataType match {
+        case StringType =>
+          Types.primitive(PrimitiveTypeName.BINARY, rep).as(LogicalTypeAnnotation.stringType())
+        case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep)
+        case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep)
+        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep)
+        case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep)
+        case other => throw new IllegalArgumentException(
+          s"writeSmall: column ${f.name} is $other; string, boolean, int, long and double only")
+      }
+      t.named(f.name)
+    }
+    val messageType = new MessageType("spark_schema", fields.asJava)
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(messageType)
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(path))
+      .withType(messageType)
+      .withConf(conf)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .withExtraMetaData(Map("org.apache.spark.sql.parquet.row.metadata" -> schema.json).asJava)
+      .build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+        val name = schema.fields(i).name
+        schema.fields(i).dataType match {
+          case StringType => g.append(name, r.getString(i))
+          case BooleanType => g.append(name, r.getBoolean(i))
+          case IntegerType => g.append(name, r.getInt(i))
+          case LongType => g.append(name, r.getLong(i))
+          case DoubleType => g.append(name, r.getDouble(i))
+          case _ =>
+        }
+      }
+      writer.write(g)
+    } finally writer.close()
   }
 
   /** Idempotent resume: reuse the snapshot ONLY if it is complete, was
@@ -129,28 +260,31 @@ object Snapshot {
       table: String,
       inputs: Seq[String]
   )(compute: => DataFrame): DataFrame =
-    resumeOrWriteCounted(spark, dir, table, inputs)(compute)._1
+    resumeOrWriteFolded(spark, dir, table, inputs, identity)(compute)._1
 
-  /** [[resumeOrWrite]], also returning the snapshot's row count as its
-    * lineage records it, so a caller needs no count job of its own.
+  /** [[resumeOrWrite]]; when the snapshot is written now, also the row counts
+    * per key of `keys(compute)` (see [[writeFolded]]), folded by the write
+    * job. None when the snapshot is reused.
     */
-  def resumeOrWriteCounted(
+  private[graft] def resumeOrWriteFolded(
       spark: SparkSession,
       dir: String,
       table: String,
-      inputs: Seq[String]
-  )(compute: => DataFrame): (DataFrame, Long) = {
+      inputs: Seq[String],
+      keys: DataFrame => DataFrame
+  )(compute: => DataFrame): (DataFrame, Option[Map[Row, Long]]) = {
     // any failure reading the manifest/lineage/parquet (e.g. part files
     // deleted while the sidecars survive) means NOT reusable — recompute,
     // exactly as the doc promises, instead of surfacing an AnalysisException
     val reused =
-      try if (!isComplete(dir)) None else readLineage(dir).collect {
-        case (rows, ins) if ins == inputs && spark.read.parquet(dir).count() == rows => rows
+      try isComplete(dir) && readLineage(dir).exists { case (rows, ins) =>
+        ins == inputs && spark.read.parquet(dir).count() == rows
       }
-      catch { case scala.util.control.NonFatal(_) => None }
-    reused match {
-      case Some(rows) => (spark.read.parquet(dir), rows)
-      case None => writeCounted(compute, dir, table, inputs)
+      catch { case scala.util.control.NonFatal(_) => false }
+    if (reused) (spark.read.parquet(dir), None)
+    else {
+      val (written, perKey) = writeFolded(compute, dir, table, inputs, keys)
+      (written, Some(perKey))
     }
   }
 }

@@ -1,6 +1,9 @@
 package graft.sinks
 
 import graft.model.SummaryRow
+import java.io.OutputStream
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.DataFrame
 
 /** `output.ttl` sink — the reference's condensed reified-RDF summary
@@ -77,14 +80,28 @@ object TtlSink {
   def groupsTsv(groups: Seq[(String, String)]): String =
     groups.sorted.map { case (a, ns) => s"$a\t$ns" }.mkString("", "\n", "\n")
 
-  def readGroupsTsv(path: java.nio.file.Path): Map[String, String] =
-    new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+  def readGroupsTsv(path: Path): Map[String, String] =
+    new String(Files.readAllBytes(path), "UTF-8")
       .split('\n').toSeq.filter(_.nonEmpty)
       .map { l => val Array(a, ns) = l.split("\t", 2); a -> ns }
       .toMap
 
-  def write(path: java.nio.file.Path, content: String): Unit = {
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.write(path, content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  def write(path: Path, content: String): Unit =
+    writeAtomically(path)(_.write(content.getBytes(StandardCharsets.UTF_8)))
+
+  /** Writes `path` through a hidden temporary sibling that is renamed into
+    * place, so `path` holds either its previous content or the whole new
+    * content, never a torn file. When `body` or the rename fails, the
+    * temporary file is removed and the exception propagates.
+    */
+  def writeAtomically(path: Path)(body: OutputStream => Unit): Unit = {
+    val dir = path.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".${path.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = Files.newOutputStream(tmp, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      try body(out) finally out.close()
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 }

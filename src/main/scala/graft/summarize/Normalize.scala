@@ -5,7 +5,8 @@ import graft.ns.Registry
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -54,23 +55,35 @@ object Normalize {
     * fixed groups for literals) feeding the used-groups aggregate.
     */
   def normalize(triples: DataFrame, bc: Broadcast[Registry], ignoreUnknown: Boolean = false): DataFrame = {
-    val reg = bc.value
-    def resolve(c: Column) = resolveCol(c, reg)
-    val sRes = resolve(F.col("s"))
-    val pRes = resolve(F.col("p"))
-    val oRes = resolve(F.col("o"))
-    val dtRes = resolve(F.col("oDt"))
+    val withCols = withKeys(triples, bc.value)
+    if (ignoreUnknown) {
+      // reference --ignore-unknown drops the whole triple when any position is
+      // an unresolved IRI (src/normalize.rs:463-469)
+      withCols.filter(F.col("s_ns") =!= Unknown && F.col("p_ns") =!= Unknown && F.col("o_ns") =!= Unknown)
+    } else withCols
+  }
 
+  /** The summary key: the signature and the object's kind. With the
+    * registry it determines the (alias, ns) group of each position (the
+    * kind tells a plain or language-tagged literal's fixed group from a
+    * datatype that resolves to the same alias), so the fold carries no
+    * namespace strings.
+    */
+  private[graft] val KeyColumns: Seq[String] = Seq("s_ns", "p_ns", "o_ns", "is_datatype", "o_kind")
+
+  /** [[normalize]] without the row filter, against a driver-side registry. */
+  private def withKeys(triples: DataFrame, reg: Registry): DataFrame = {
+    def resolve(c: Column) = resolveCol(c, reg)
     def pairCol(alias: Column, ns: Column): Column =
       F.struct(alias.as("alias"), ns.as("ns"))
 
-    val withCols = triples
-      .withColumn("_sr", sRes)
-      .withColumn("_pr", pRes)
+    triples
+      .withColumn("_sr", resolve(F.col("s")))
+      .withColumn("_pr", resolve(F.col("p")))
       .withColumn(
         "_or",
-        F.when(F.col("oKind") === Kind.IRI, oRes)
-          .when(F.col("oKind") === Kind.LIT_TYPED, dtRes)
+        F.when(F.col("oKind") === Kind.IRI, resolve(F.col("o")))
+          .when(F.col("oKind") === Kind.LIT_TYPED, resolve(F.col("oDt")))
           .otherwise(F.lit(null))
       )
       .withColumn(
@@ -101,13 +114,15 @@ object Normalize {
           .otherwise(pairCol(F.col("_or.alias"), F.col("_or.ns")))
       )
       .drop("_sr", "_pr", "_or")
-
-    if (ignoreUnknown) {
-      // reference --ignore-unknown drops the whole triple when any position is
-      // an unresolved IRI (src/normalize.rs:463-469)
-      withCols.filter(F.col("s_ns") =!= Unknown && F.col("p_ns") =!= Unknown && F.col("o_ns") =!= Unknown)
-    } else withCols
   }
+
+  /** The [[KeyColumns]] of every triple under `reg`, with no row filter,
+    * after the columns `carry` of `triples`.
+    */
+  private[graft] def summaryKeys(
+      triples: DataFrame, reg: Registry, carry: Seq[String] = Nil): DataFrame =
+    withKeys(triples, reg).withColumn("o_kind", F.col("oKind"))
+      .select((carry ++ KeyColumns).map(F.col): _*)
 
   /** The core summary group-count (reference `TripleFreq::add`,
     * `src/normalize.rs:34-46`): low-cardinality keys, so map-side combine
@@ -157,62 +172,177 @@ object Normalize {
     * merged map is as large as the distinct-row space, so this is for
     * summary-sized outputs only.
     */
-  private[graft] def countRows(df: DataFrame): Map[Row, Long] = {
+  private[graft] def countRows(df: DataFrame): Map[Row, Long] =
+    countRowsBy(df, Seq(df.columns.toSeq)).head
+
+  /** [[countRows]] of several projections of `df` (each a list of its
+    * columns) in one pass, one map per projection: the merged maps are as
+    * large as each projection's distinct-row space, not their product.
+    */
+  private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]]): Seq[Map[Row, Long]] = {
     val schema = df.schema
-    val merged = mutable.HashMap.empty[Row, Long]
+    val subSchemas = projections.map(cols => StructType(cols.map(c => schema(c))))
+    val ordinals = projections.map(_.map(schema.fieldIndex))
+    val merged = projections.map(_ => mutable.HashMap.empty[Row, Long])
     df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
       (rows: Iterator[InternalRow]) => {
-        val counts = new java.util.HashMap[UnsafeRow, Array[Long]]()
-        lazy val toUnsafe = UnsafeProjection.create(schema)
-        rows.foreach { r =>
-          val key = r match {
-            case u: UnsafeRow => u
-            case other => toUnsafe(other)
+        val counts = ordinals.map(_ => new KeyCounts).toArray
+        val project = ordinals.toArray.map { ords =>
+          if (ords == schema.indices) {
+            lazy val toUnsafe = UnsafeProjection.create(schema)
+            (r: InternalRow) => r match {
+              case u: UnsafeRow => u
+              case other => toUnsafe(other)
+            }
+          } else {
+            val p = UnsafeProjection.create(ords.map(i =>
+              BoundReference(i, schema(i).dataType, schema(i).nullable)))
+            (r: InternalRow) => p(r)
           }
-          val n = counts.get(key)
-          if (n == null) counts.put(key.copy(), Array(1L)) else n(0) += 1
         }
-        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-        counts.asScala.iterator.map { case (k, n) => (toRow(k).asInstanceOf[Row], n(0)) }.toArray
+        rows.foreach { r =>
+          var g = 0
+          while (g < counts.length) {
+            counts(g).add(project(g)(r))
+            g += 1
+          }
+        }
+        counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) }
       },
-      (_: Int, part: Array[(Row, Long)]) =>
-        part.foreach { case (k, n) => merged(k) = merged.getOrElse(k, 0L) + n })
-    merged.toMap
+      (_: Int, parts: Array[Array[(Row, Long)]]) =>
+        parts.zip(merged).foreach { case (part, m) =>
+          part.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
+        })
+    merged.map(_.toMap)
+  }
+
+  /** One task's counts of `UnsafeRow` keys; a key is copied only when new. */
+  private[graft] final class KeyCounts {
+    private val counts = new java.util.HashMap[UnsafeRow, Array[Long]]()
+    def add(key: UnsafeRow): Unit = {
+      val n = counts.get(key)
+      if (n == null) counts.put(key.copy(), Array(1L)) else n(0) += 1
+    }
+    /** The counts with each key as a Scala `Row` of `schema`. */
+    def toRows(schema: StructType): Array[(Row, Long)] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      counts.asScala.iterator.map { case (k, n) => (toRow(k).asInstanceOf[Row], n(0)) }.toArray
+    }
   }
 
   /** Fused Stage-C aggregation: summary rows, used groups and blank/unknown
-    * flags from ONE single-stage job over the normalize projection
-    * ([[countRows]]). It needs no exchange because its output is bounded
-    * by the group space, not by the corpus: the keys add the (alias, ns)
-    * pair structs to the summary key, and a key determines its pairs
-    * except for the two fixed literal groups, so each task's map and the
-    * driver's merged map hold a few hundred rows at any input size.
+    * flags from ONE single-stage job ([[countRows]] over [[summaryKeys]]).
+    * It needs no exchange because its output is bounded by the group space,
+    * not by the corpus: the keys are the summary signature and the object's
+    * kind, so each task's map and the driver's merged map hold a few
+    * hundred rows at any input size, and the groups come from the registry
+    * on the driver. The fold counts every row;
+    * `ignoreUnknown` is a predicate on the key columns, so it is applied to
+    * the merged keys on the driver ([[fromKeyCounts]]).
     */
   def summarizeWithGroups(
       triples: DataFrame,
       bc: Broadcast[Registry],
       ignoreUnknown: Boolean = false
+  ): (Seq[graft.model.SummaryRow], Seq[(String, String)], Boolean, Boolean) =
+    fromKeyCounts(foldKeys(triples, bc.value), bc.value, ignoreUnknown)
+
+  /** Merged counts of the [[KeyColumns]] of `triples` under `reg`. */
+  private[graft] def foldKeys(triples: DataFrame, reg: Registry): Map[Row, Long] =
+    countRows(summaryKeys(triples, reg))
+
+  /** Summary rows (sorted), used groups and blank/unknown flags from key
+    * counts merged under `reg`. With `ignoreUnknown` the keys with an
+    * UNKNOWN position are dropped first (reference --ignore-unknown,
+    * src/normalize.rs:463-469), and the groups and flags come from the kept
+    * keys only.
+    */
+  private[graft] def fromKeyCounts(
+      counts: Map[Row, Long],
+      reg: Registry,
+      ignoreUnknown: Boolean
   ): (Seq[graft.model.SummaryRow], Seq[(String, String)], Boolean, Boolean) = {
-    val counts = countRows(normalize(triples, bc, ignoreUnknown)
-      .select("s_ns", "p_ns", "o_ns", "is_datatype", "s_pair", "p_pair", "o_pair"))
+    val nsOf = reg.aliasMap
+    def group(alias: String): Option[(String, String)] =
+      if (alias == Blank || alias == Unknown) None else Some((alias, nsOf(alias)._1))
     val summary = mutable.Map.empty[(String, String, String, Boolean), Long]
     val groups = mutable.SortedSet.empty[(String, String)]
     var blank = false
     var unknown = false
     counts.foreach { case (r, n) =>
       val key = (r.getString(0), r.getString(1), r.getString(2), r.getBoolean(3))
-      summary(key) = summary.getOrElse(key, 0L) + n
-      Seq(4, 5, 6).foreach { i =>
-        val pair = r.getStruct(i)
-        if (pair != null && !pair.isNullAt(0)) groups += ((pair.getString(0), pair.getString(1)))
+      val hasUnknown = key._1 == Unknown || key._2 == Unknown || key._3 == Unknown
+      if (!(ignoreUnknown && hasUnknown)) {
+        summary(key) = summary.getOrElse(key, 0L) + n
+        groups ++= group(key._1) ++ group(key._2)
+        groups ++= (r.getByte(4) match {
+          case Kind.LIT_PLAIN => Some(PlainLitGroup)
+          case Kind.LIT_LANG => Some(LangLitGroup)
+          case _ => group(key._3)
+        })
+        if (key._1 == Blank || key._3 == Blank) blank = true
+        if (hasUnknown) unknown = true
       }
-      if (key._1 == Blank || key._3 == Blank) blank = true
-      if (key._1 == Unknown || key._2 == Unknown || key._3 == Unknown) unknown = true
     }
     val summaryRows = summary.toSeq
       .map { case ((s, p, o, dt), n) => graft.model.SummaryRow(s, p, o, dt, n) }
       .sortBy(r => (r.s_ns, r.p_ns, r.o_ns, r.is_datatype))
     (summaryRows, groups.toSeq, blank, unknown)
+  }
+
+  /** True when some key holds an IRI no namespace resolves: an UNKNOWN
+    * subject or predicate, or an UNKNOWN object that is not a literal's
+    * datatype. These are exactly the IRIs inference counts
+    * ([[graft.pipeline.Pipeline.runInference]] explodes s, p and IRI
+    * objects, never datatypes), so with none of them its first round would
+    * count an empty set.
+    */
+  private[graft] def hasUnresolvedIri(counts: Map[Row, Long]): Boolean =
+    counts.keysIterator.exists { r =>
+      r.getString(0) == Unknown || r.getString(1) == Unknown ||
+        (r.getString(2) == Unknown && !r.getBoolean(3))
+    }
+
+  /** Moves key counts to registry `after` from the registry it extends by
+    * the namespaces `added` and nothing else. Re-folds only the rows where
+    * some term (s, p, o or a typed literal's datatype) resolves under
+    * `added` alone: every other term resolves under `after` exactly as
+    * before — adding namespaces never changes an IRI the registry already
+    * resolves (`Registry.addNamespaces` blocks sub-namespaces) and resolves
+    * no IRI outside `added` — so the other rows keep their keys. Each
+    * re-folded row leaves its old key and joins its new one; the old key is
+    * the new one with every position holding an added namespace's alias put
+    * back to UNKNOWN, because a term the registry resolved keeps its
+    * namespace.
+    */
+  private[graft] def refold(
+      triples: DataFrame,
+      counts: Map[Row, Long],
+      added: Seq[String],
+      after: Registry
+  ): Map[Row, Long] = {
+    val addedReg = Registry.fromPairs(added.map(ns => ns -> ns), graft.ns.NsSource.Inference)
+    def hit(c: Column) = resolveCol(c, addedReg).isNotNull
+    val touched = triples.filter(
+      (F.col("sKind") === Kind.IRI && hit(F.col("s"))) || hit(F.col("p")) ||
+        (F.col("oKind") === Kind.IRI && hit(F.col("o"))) ||
+        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt"))))
+    val addedAliases = added.flatMap(after.byNs.get).map(_.alias).toSet
+    def oldKey(key: Row): Row = {
+      val v = key.toSeq.toArray
+      val oIsIri = key.getByte(4) == Kind.IRI || key.getByte(4) == Kind.LIT_TYPED
+      for (i <- 0 to 2 if (i < 2 || oIsIri) && addedAliases(key.getString(i))) v(i) = Unknown
+      Row.fromSeq(v.toSeq)
+    }
+    val merged = mutable.HashMap.empty[Row, Long] ++= counts
+    foldKeys(touched, after).foreach { case (newKey, n) =>
+      val old = oldKey(newKey)
+      val left = merged.getOrElse(old, 0L) - n
+      require(left >= 0, s"re-fold moves $n rows out of key $old, which holds fewer")
+      if (left == 0) merged -= old else merged(old) = left
+      merged(newKey) = merged.getOrElse(newKey, 0L) + n
+    }
+    merged.toMap
   }
 
   /** Distinct (alias, ns) groups actually used + blank/unknown flags

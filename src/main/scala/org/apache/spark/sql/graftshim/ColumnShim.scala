@@ -23,4 +23,15 @@ object ColumnShim {
       builder: Seq[Expression] => Expression
   ): Unit =
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** A DataFrame over rows already in Catalyst's internal format (the
+    * `private[sql]` constructor `createDataFrame` uses after converting).
+    */
+  def fromInternalRows(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType
+  ): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

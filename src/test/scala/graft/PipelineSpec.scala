@@ -230,8 +230,10 @@ class PipelineSpec extends AnyFunSuite {
     val got = """\{"id": (\d+), "rows": (\d+)\}""".r.findAllMatchIn(manifest)
       .map(m => (m.group(1).toInt, m.group(2).toLong)).toSeq
     assert(got == want && got.map(_._2).sum == 666L)
-    val (_, rows) = Snapshot.resumeOrWriteCounted(spark, dir, "t", Seq("in"))(fail("reused"))
-    assert(rows == 666L)
+    // a reused snapshot folds nothing; its lineage keeps the row count
+    val (_, fold) = Snapshot.resumeOrWriteFolded(spark, dir, "t", Seq("in"), identity)(
+      fail("reused"))
+    assert(fold.isEmpty && Snapshot.readLineage(dir).map(_._1).contains(666L))
   }
 
   test("multi-round inference: delta-filtered rounds reach the same fixed point") {

@@ -95,6 +95,37 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("adding inferred namespaces keeps every resolved IRI's (ns, alias) (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // R0: the community registry plus file declarations
+    val r0 = Registry.addDeclaredAll(Registry.community(), Seq(
+      "http://decl.example.org/vocab/" -> "dv", "https://data.example.com/id/" -> "did"))
+    val bases = r0.byNs.keys.toVector
+    // IRIs in and around registered namespaces, some past the 200-grapheme
+    // cap (plain and combining-mark graphemes) and capped as the RDF path does
+    val genSuffix = Gen.oneOf(
+      Gen.alphaNumStr.map(_.take(12)), Gen.const("x" * 300), Gen.const("e\u0301" * 250),
+      Gen.alphaNumStr.map(s => "sub/" + s.take(6) + "/" + "y" * 250))
+    val genIri = for {
+      b <- Gen.oneOf(bases); cut <- Gen.choose(0, 3); suffix <- genSuffix
+    } yield graft.extract.Canonical.graphemeTruncate(b.dropRight(cut) + suffix)
+    // inferred candidates: extensions of registered namespaces (blocked),
+    // their parents (added, and shorter than what they contain), fresh hosts
+    val genNs = Gen.oneOf(
+      for (b <- Gen.oneOf(bases); s <- Gen.alphaNumStr) yield b + s.take(6) + "/",
+      Gen.oneOf(bases).map(b => b.take(b.lastIndexOf('/', b.length - 2) + 1)),
+      Gen.alphaLowerStr.map(h => s"http://${h.take(8)}x.example.net/ns/"))
+    var resolved = 0
+    val prop = Prop.forAll(Gen.listOfN(6, genNs), Gen.listOfN(40, genIri)) { (nss, iris) =>
+      val (r1, _) = r0.withNamespaces(nss.map(ns => (ns, 1000L, NsSource.Inference)))
+      iris.forall(iri => r0.resolve(iri).forall { hit => resolved += 1; r1.resolve(iri).contains(hit) })
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(200)
+      .withInitialSeed(org.scalacheck.rng.Seed(42L)).withWorkers(1), prop)
+    assert(res.passed, res.status)
+    assert(resolved > 1000)
+  }
+
   test("vendored community map: fix_pv filters and coverage (community.rs:99-124)") {
     val rows = Registry.communityRows()
     val pairs = Registry.communityPairs
