@@ -14,10 +14,11 @@ import scala.collection.mutable
   * prefixes are ever read from the trie, so the distributed equivalent is:
   * explode each IRI into its host-gated segment prefixes, `groupBy(prefix).count`,
   * collect the >= MIN_NS_SIZE survivors, and run the same expansion loop on the
-  * driver. This computes the order-independent fixed point over global counts
-  * (the reference's result depends on arrival order via mid-stream maintenance,
-  * `src/prefixes.rs:209-247`; the P/R gate tolerates the difference and ours is
-  * strictly deterministic).
+  * driver; later rounds are derived on the driver from those counts
+  * ([[nextCandidates]]). This computes the order-independent fixed point over
+  * global counts (the reference's result depends on arrival order via
+  * mid-stream maintenance, `src/prefixes.rs:209-247`; the P/R gate tolerates
+  * the difference and ours is strictly deterministic).
   */
 object Inference {
 
@@ -228,23 +229,8 @@ object Inference {
   }
 
   /** Full distributed inference round: count, threshold, collect, expand.
-    * Returns (inferred namespaces, #garbage domains, #distinct prefixes kept).
+    * Returns (inferred namespaces, #garbage domains).
     */
-  /** O6 diagnostic (reference logs example unresolved IRIs,
-    * `src/iri_trie.rs:232-236`): a bounded sample of the still-unresolved set,
-    * recorded into tasks.json so an operator can see WHAT is not resolving.
-    */
-  def sampleUnresolved(iris: DataFrame, n: Int = 10): Seq[String] = {
-    // one job over every partition, each task stopping after n rows, then
-    // the first n in partition order — where `limit(n).collect()` scans one
-    // partition and then scales up, a job per attempt
-    val firstCol = iris.select(iris.columns.head).queryExecution.toRdd
-    iris.sparkSession.sparkContext
-      .runJob(firstCol, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-        it.take(n).map(_.getUTF8String(0).toString).toArray)
-      .iterator.flatten.take(n).toSeq
-  }
-
   def inferFromIris(
       iris: DataFrame,
       salt: Int = 0,
@@ -259,10 +245,8 @@ object Inference {
   }
 
   /** Like [[inferFromIris]] but also returns the collected above-threshold
-    * candidate prefixes, enabling the caller's FIXED-POINT EARLY EXIT (see
-    * [[roundsExhausted]]): when every candidate resolves against the updated
-    * registry, the next round cannot add anything — skipping it saves a full
-    * explode+aggregate pass over the triple table per converged pipeline run.
+    * candidate prefixes, from which [[nextCandidates]] derives the next
+    * round's on the driver.
     */
   def inferFromIrisWithCandidates(
       iris: DataFrame,
@@ -292,36 +276,63 @@ object Inference {
     (inferred, nGarbage, rows)
   }
 
-  /** Sound fixed-point test for the inference round loop. A prefix can only
-    * be a NEXT-round candidate if it was an above-threshold candidate THIS
-    * round (the unresolved set shrinks monotonically, so per-prefix counts
-    * only decrease). A candidate is dead for the next round when either
-    *
-    *   - its prefix string resolves against the updated registry (a
-    *     registered namespace that prefixes the candidate prefixes every IRI
-    *     under it — all its occurrences leave the unresolved set), or
-    *   - its EXACT next-round count drops below the threshold: the namespaces
-    *     added this round are prefix-free (subsumption in `withNamespaces`),
-    *     so the occurrences leaving the unresolved set under candidate P are
-    *     exactly the sizes of added namespaces that extend P.
-    *
-    * When the candidate collection was not truncated and every candidate is
-    * dead, the next round provably adds nothing — skip the whole
-    * explode+aggregate pass.
+  /** True when `ns` is a host-gated segment boundary: it ends in '/' or '#'
+    * and [[segPrefixes]] emits that boundary (the namespace has a
+    * `scheme://host` authority). For such a namespace and any IRI x,
+    * `x.startsWith(ns)` exactly when `segPrefixes(x)` contains `ns`: the
+    * boundaries and the host gate of x up to `ns.length` are those of `ns`.
+    * Whether `segPrefixes` emits the last boundary of `ns` shows in any IRI
+    * that extends `ns`, since its own output ends in the leaf `ns` either way.
     */
-  def roundsExhausted(
+  def isSegBoundary(ns: String): Boolean =
+    (ns.endsWith("/") || ns.endsWith("#")) && segPrefixes(ns + "x").contains(ns)
+
+  /** Whether [[nextCandidates]] gives the next round's candidates exactly:
+    * this round's collect was not truncated, so it holds every prefix at or
+    * above the threshold, and every added namespace is a host-gated segment
+    * boundary ([[isSegBoundary]]). Otherwise the next round counts again.
+    */
+  def nextRoundDerivable(
       candidates: Seq[PrefixCount],
-      added: Seq[(String, Long)],
-      registry: Registry,
-      minNsSize: Long,
+      added: Seq[String],
       maxCollected: Int = MaxCollected
   ): Boolean =
-    candidates.size < maxCollected && candidates.forall { c =>
-      registry.resolve(c.prefix).isDefined || {
-        val resolvedUnder = added.collect {
-          case (ns, size) if ns.startsWith(c.prefix) => size
-        }.sum
-        c.count - resolvedUnder < minNsSize
-      }
-    }
+    candidates.size < maxCollected && added.forall(isSegBoundary)
+
+  /** The next round's candidates, from this round's and the namespaces it
+    * added, without counting again (chilon removes the added namespaces'
+    * subtrees from its IriTrie and bubbles the counts up,
+    * `remove_prefixes`, `src/iri_trie.rs:223-243`).
+    *
+    * The unresolved set only shrinks, so a prefix below the threshold now
+    * stays below it: the next candidates are a subset of `candidates`. An
+    * IRI leaves the set when an added namespace N prefixes it, which for a
+    * segment boundary N means N is one of its segment prefixes. So
+    *   - a candidate that starts with some N loses every occurrence;
+    *   - any other candidate P loses size(N) for each N with P among N's
+    *     segment prefixes (P != N): every IRI under N has P as a segment
+    *     prefix too. The added namespaces are prefix-free, so no occurrence
+    *     is subtracted twice;
+    *   - a candidate neither above nor below any N loses nothing: a leaf
+    *     candidate `http://x.test/p` is not among the segment prefixes of
+    *     `http://x.test/p/`, and no IRI under the latter equals it.
+    * Exact under [[nextRoundDerivable]].
+    *
+    * @param added the added namespaces with their sizes (their counts among
+    *              `candidates`)
+    */
+  def nextCandidates(
+      candidates: Seq[PrefixCount],
+      added: Seq[(String, Long)],
+      minNsSize: Long
+  ): Seq[PrefixCount] = {
+    val lost = mutable.HashMap.empty[String, Long]
+    for ((ns, size) <- added; p <- segPrefixes(ns) if p != ns)
+      lost(p) = lost.getOrElse(p, 0L) + size
+    candidates.iterator
+      .filterNot(c => added.exists { case (ns, _) => c.prefix.startsWith(ns) })
+      .map(c => c.copy(count = c.count - lost.getOrElse(c.prefix, 0L)))
+      .filter(_.count >= minNsSize)
+      .toVector
+  }
 }

@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import graft.extract.OpenIE
-import graft.model.{Kind, Page, Triple}
-import graft.ns.{Inference, NsSource, Registry}
+import graft.model.{Page, Triple}
+import graft.ns.{Inference, Registry}
 import graft.sinks.{Snapshot, TtlSink, VisJson}
 import graft.summarize.Normalize
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, functions => F}
@@ -14,11 +14,13 @@ import java.nio.file.Paths
   *
   *   Stage A  pages -> triples (flatMap generator: extractText check, mentions,
   *            entity linking, OpenIE, canonicalization) — checkpointed
-  *            snapshot whose read-back job also folds the summary keys under
-  *            the pre-inference registry (F0)
-  *   Stage B  namespace inference rounds over still-unresolved IRIs
-  *            (salted prefix aggregation -> driver expansion -> registry),
-  *            run only when F0 holds an unresolved IRI
+  *            snapshot whose write job also folds the summary keys under the
+  *            pre-inference registry (F0)
+  *   Stage B  namespace inference rounds over still-unresolved IRIs, run
+  *            only when F0 holds an unresolved IRI: round 1 is a salted
+  *            prefix aggregation -> driver expansion -> registry; later
+  *            rounds subtract the added namespaces' subtrees from round 1's
+  *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
   *            re-folded (F1); `ignoreUnknown` filters the merged keys on the
   *            driver
@@ -38,16 +40,17 @@ object Pipeline {
       inferNs: Boolean = true,
       ignoreUnknown: Boolean = false,
       // expansion adds <= maxNs namespaces per round, so rich corpora need
-      // several rounds to converge; the fixed-point early exit makes unused
-      // rounds free (a converged corpus stops after round 1 regardless)
+      // several rounds to converge; rounds after the first are derived on
+      // the driver, and they stop once no candidate is left
       maxInferenceRounds: Int = 4,
       salt: Int = 0,
       minNsSize: Long = Inference.MinNsSize,
       minDomainOccurs: Long = Inference.MinDomainOccurs,
       maxNs: Int = Inference.MaxNs,
-      // driver-side candidate collect budget per round; corpora with more
-      // above-threshold prefixes than this converge over multiple rounds
-      // (rounds 3+ are delta-filtered, never a corpus rescan)
+      // driver-side candidate collect budget; corpora with more
+      // above-threshold prefixes than this converge over multiple rounds,
+      // each after a truncated collect counting again over the corpus
+      // (an untruncated round's successors are derived on the driver)
       maxCollected: Int = Inference.MaxCollected,
       resume: Boolean = true,
       countGarbage: Boolean = false,
@@ -295,7 +298,10 @@ object Pipeline {
     *     an empty set: it is recorded with 0 rows and no Spark job, and `f0`
     *     is the final summary. Otherwise [[runInference]] runs.
     *   - When inference added namespaces, only the rows they resolve are
-    *     re-folded ([[Normalize.refold]], F1), not the whole table.
+    *     re-folded ([[Normalize.refold]], F1), not the whole table. The
+    *     same pass samples up to 10 IRIs left unresolved for the
+    *     housekeeping; when inference ran and added nothing, that sample is
+    *     the pass's only work.
     *   - The sinks and the summary snapshot are written on the driver.
     *
     * Returns the final registry, the housekeeping, the added namespaces and
@@ -318,12 +324,16 @@ object Pipeline {
       } else runInference(triples, r0, cfg, metrics)
 
     // ---- Stage C: re-fold what the added namespaces resolve --------------
-    val (rows, groups) = timed(metrics, "summarize") {
-      val counts =
-        if (inferredAll.isEmpty) f0
-        else Normalize.refold(triples, f0, inferredAll, registry)
+    // The same pass samples example IRIs still unresolved under the final
+    // registry (O6; the reference logs some, iri_trie.rs:232-236), from the
+    // positions where F0 holds one: they are all the final keys can hold.
+    val (rows, groups, examples) = timed(metrics, "summarize") {
+      val positions = Normalize.unresolvedPositions(f0)
+      val (counts, examples) =
+        if (inferredAll.isEmpty && positions.isEmpty) (f0, Nil)
+        else Normalize.refold(triples, f0, inferredAll, registry, positions)
       val (r, g, _, _) = Normalize.fromKeyCounts(counts, registry, cfg.ignoreUnknown)
-      ((r, g), r.size.toLong)
+      ((r, g, examples), r.size.toLong)
     }
     val summary = spark.createDataFrame(rows)
       .select(F.col("s_ns"), F.col("p_ns"), F.col("o_ns"), F.col("is_datatype"), F.col("occurs"))
@@ -340,19 +350,24 @@ object Pipeline {
         "summary", lineage, rows.size.toLong)
       ((), rows.size.toLong)
     }
-    (registry, hk, inferredAll, summary)
+    (registry, hk.copy(exampleUnresolved = examples), inferredAll, summary)
   }
 
   /** Stage B: inference rounds to the order-independent fixed point.
     *
     * Round 1 scans the triple table once (explode s/p/o, keep registry
-    * misses). Rounds 2+ never rescan the corpus: longest-prefix resolution is
-    * MONOTONE in the registry (adding namespaces only adds matches), so the
-    * round-k unresolved set is exactly the round-(k-1) unresolved set minus
-    * the IRIs matched by the namespaces added in round k-1 — a broadcast
-    * delta-trie filter over the (persisted, shrinking) unresolved relation.
-    * At 100 TB that is the difference between one corpus pass total and one
-    * corpus pass PER ROUND.
+    * misses), aggregates the segment prefixes and collects those at or above
+    * `minNsSize`. Rounds 2+ run on the driver: the unresolved set only
+    * shrinks, so the next round's candidates are this round's minus the
+    * subtrees of the namespaces it added ([[Inference.nextCandidates]]).
+    * Rounds stop when one adds nothing or no candidate is left.
+    *
+    * The derivation is exact when the collect was not truncated
+    * (`maxCollected`) and every added namespace is a host-gated segment
+    * boundary ([[Inference.nextRoundDerivable]]), and it cannot count the
+    * garbage domains. When a condition fails, or `countGarbage` is set, the
+    * next round runs round 1's query again under the grown registry. Nothing
+    * is cached.
     */
   private[graft] def runInference(
       triples: DataFrame,
@@ -363,83 +378,48 @@ object Pipeline {
     var registry = initial
     val inferredAll = Vector.newBuilder[String]
     var hk = InferHk(0, 0L, 0L, 0L, 0L)
-    var unresolved: DataFrame = null // persisted unresolved-IRI relation
-    if (cfg.inferNs) try {
-      var round = 0
-      var added = true
-      var deltaPairs: Seq[(String, String)] = Nil
-      while (added && round < cfg.maxInferenceRounds) {
-        round += 1
-        val t0 = System.nanoTime()
-        added = {
-          val t1 = System.nanoTime()
-          // unresolved IRIs from all three positions, one row per occurrence
-          // (reference inserts only registry-misses into the IriTrie,
-          // src/prefixes.rs:193-207). Round 1 never caches (most corpora
-          // converge in one round via the early exit — a cache write would be
-          // pure overhead); round 2 scans once more with the grown registry
-          // and persists its (smaller) result; rounds 3+ delta-filter the
-          // cache. Cost is <= the rescan-every-round shape at EVERY round
-          // count, and rounds 3+ stop touching the corpus entirely.
-          val iris =
-            if (unresolved == null) {
-              val full = triples
-                .select(F.explode(F.array(
-                  F.when(F.col("sKind") === Kind.IRI, F.col("s")),
-                  F.col("p"),
-                  F.when(F.col("oKind") === Kind.IRI, F.col("o"))
-                )).as("iri"))
-                .filter(F.col("iri").isNotNull)
-                .filter(Normalize.resolveCol(F.col("iri"), registry).isNull)
-              if (round == 1) full
-              else {
-                val p = full.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-                unresolved = p
-                p
-              }
-            } else {
-              val deltaReg = Registry.fromPairs(deltaPairs, NsSource.Inference)
-              val next = unresolved
-                .filter(Normalize.resolveCol(F.col("iri"), deltaReg).isNull)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              next.count() // materialize before dropping the parent cache
-              unresolved.unpersist()
-              unresolved = next
-              next
-            }
-          val (inferred, nGarbage, candidates) = Inference.inferFromIrisWithCandidates(
-            iris, cfg.salt, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage,
-            cfg.maxCollected)
-          val (reg2, addedNs) = registry.withNamespaces(inferred)
-          registry = reg2
-          inferredAll ++= addedNs
-          deltaPairs = addedNs.map(ns => ns -> ns)
-          // fixed-point early exit: if every above-threshold candidate is
-          // dead (resolves, or provably drops below threshold next round),
-          // don't pay another aggregate pass over the unresolved set
-          val addedSizes = inferred.collect {
-            case (ns, size, _) if addedNs.contains(ns) => (ns, size)
-          }
-          val exhausted = Inference.roundsExhausted(
-            candidates, addedSizes, registry, cfg.minNsSize, cfg.maxCollected)
-          // O6: once a round adds nothing, `iris` IS the still-unresolved
-          // set — sample 10 examples (the reference logs example IRIs,
-          // iri_trie.rs:232-236)
-          val examples =
-            if (addedNs.isEmpty) Inference.sampleUnresolved(iris)
-            else hk.exampleUnresolved
-          hk = InferHk(hk.rounds + 1, hk.wallMs + (System.nanoTime() - t1) / 1000000,
-            hk.inferredNs + inferred.size, hk.addedNs + addedNs.size,
-            hk.discardedNs + nGarbage, examples)
-          val go = addedNs.nonEmpty && !exhausted
-          metrics += StageMetrics(s"infer_round_$round", addedNs.size.toLong,
-            (System.nanoTime() - t0) / 1000000)
-          go
-        }
+    // the next round's candidates when derived on the driver; None counts
+    var derived: Option[Seq[Inference.PrefixCount]] = None
+    var go = cfg.inferNs
+    while (go && hk.rounds < cfg.maxInferenceRounds) {
+      val t0 = System.nanoTime()
+      val (inferred, nGarbage, candidates) = derived match {
+        case Some(c) =>
+          (Inference.inferNamespaces(c, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs)._1, 0L, c)
+        case None =>
+          Inference.inferFromIrisWithCandidates(unresolvedIris(triples, registry), cfg.salt,
+            cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage, cfg.maxCollected)
       }
-    } finally if (unresolved != null) unresolved.unpersist()
+      val (reg2, addedNs) = registry.withNamespaces(inferred)
+      registry = reg2
+      inferredAll ++= addedNs
+      val next =
+        if (addedNs.isEmpty || !Inference.nextRoundDerivable(candidates, addedNs, cfg.maxCollected))
+          None
+        else {
+          val sizes = inferred.collect { case (ns, size, _) if addedNs.contains(ns) => ns -> size }
+          Some(Inference.nextCandidates(candidates, sizes, cfg.minNsSize))
+        }
+      // an empty derived set ends the rounds also when garbage is counted
+      go = addedNs.nonEmpty && !next.exists(_.isEmpty)
+      derived = next.filter(_ => !cfg.countGarbage)
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      hk = InferHk(hk.rounds + 1, hk.wallMs + wallMs, hk.inferredNs + inferred.size,
+        hk.addedNs + addedNs.size, hk.discardedNs + nGarbage)
+      metrics += StageMetrics(s"infer_round_${hk.rounds}", addedNs.size.toLong, wallMs)
+    }
     (registry, hk, inferredAll.result())
   }
+
+  /** The IRIs of `triples` that `registry` does not resolve, from all three
+    * positions, one row per occurrence (the reference inserts only registry
+    * misses into its IriTrie, `src/prefixes.rs:193-207`).
+    */
+  private def unresolvedIris(triples: DataFrame, registry: Registry): DataFrame =
+    triples
+      .select(F.explode(F.array(Seq("s", "p", "o").map(Normalize.iriCol): _*)).as("iri"))
+      .filter(F.col("iri").isNotNull)
+      .filter(Normalize.resolveCol(F.col("iri"), registry).isNull)
 
   def metricsJson(ms: Seq[StageMetrics]): String =
     ms.map { m =>

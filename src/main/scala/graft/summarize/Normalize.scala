@@ -290,6 +290,15 @@ object Normalize {
     (summaryRows, groups.toSeq, blank, unknown)
   }
 
+  /** The IRI in term position "s", "p" or "o" of a triple, or null when
+    * that term is a blank node or a literal.
+    */
+  private[graft] def iriCol(position: String): Column = position match {
+    case "s" => F.when(F.col("sKind") === Kind.IRI, F.col("s"))
+    case "p" => F.col("p")
+    case "o" => F.when(F.col("oKind") === Kind.IRI, F.col("o"))
+  }
+
   /** True when some key holds an IRI no namespace resolves: an UNKNOWN
     * subject or predicate, or an UNKNOWN object that is not a literal's
     * datatype. These are exactly the IRIs inference counts
@@ -298,9 +307,15 @@ object Normalize {
     * count an empty set.
     */
   private[graft] def hasUnresolvedIri(counts: Map[Row, Long]): Boolean =
-    counts.keysIterator.exists { r =>
-      r.getString(0) == Unknown || r.getString(1) == Unknown ||
-        (r.getString(2) == Unknown && !r.getBoolean(3))
+    unresolvedPositions(counts).nonEmpty
+
+  /** The term columns ("s", "p", "o") in which some key holds an unresolved
+    * IRI, in the sense of [[hasUnresolvedIri]].
+    */
+  private[graft] def unresolvedPositions(counts: Map[Row, Long]): Seq[String] =
+    Seq("s", "p", "o").zipWithIndex.collect {
+      case (c, i) if counts.keysIterator.exists(r =>
+        r.getString(i) == Unknown && (i < 2 || !r.getBoolean(3))) => c
     }
 
   /** Moves key counts to registry `after` from the registry it extends by
@@ -314,19 +329,37 @@ object Normalize {
     * the new one with every position holding an added namespace's alias put
     * back to UNKNOWN, because a term the registry resolved keeps its
     * namespace.
+    *
+    * The same pass samples the IRIs in term columns `samplePositions` that
+    * `after` leaves unresolved (at most one per row, s before p before o):
+    * the first `n` in partition order, each task keeping the first `n` it
+    * meets. It scans every row, so the sample is empty only when no such
+    * IRI exists. With nothing `added` the pass only samples.
+    *
+    * @return the moved key counts and the sample
     */
   private[graft] def refold(
       triples: DataFrame,
       counts: Map[Row, Long],
       added: Seq[String],
-      after: Registry
-  ): Map[Row, Long] = {
+      after: Registry,
+      samplePositions: Seq[String] = Nil,
+      n: Int = 10
+  ): (Map[Row, Long], Seq[String]) = {
     val addedReg = Registry.fromPairs(added.map(ns => ns -> ns), graft.ns.NsSource.Inference)
     def hit(c: Column) = resolveCol(c, addedReg).isNotNull
-    val touched = triples.filter(
+    val touched =
       (F.col("sKind") === Kind.IRI && hit(F.col("s"))) || hit(F.col("p")) ||
         (F.col("oKind") === Kind.IRI && hit(F.col("o"))) ||
-        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt"))))
+        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt")))
+    val unresolved = F.coalesce(samplePositions.map { p =>
+      F.when(resolveCol(iriCol(p), after).isNull, iriCol(p))
+    } :+ F.lit(null).cast("string"): _*)
+    val keyed = summaryKeys(
+      triples.withColumn("_touched", touched).withColumn("_unresolved", unresolved)
+        .filter(F.col("_touched") || F.col("_unresolved").isNotNull),
+      after, Seq("_touched", "_unresolved"))
+    val (moved, sample) = countWhereAndSample(keyed, "_touched", "_unresolved", n)
     val addedAliases = added.flatMap(after.byNs.get).map(_.alias).toSet
     def oldKey(key: Row): Row = {
       val v = key.toSeq.toArray
@@ -335,14 +368,51 @@ object Normalize {
       Row.fromSeq(v.toSeq)
     }
     val merged = mutable.HashMap.empty[Row, Long] ++= counts
-    foldKeys(touched, after).foreach { case (newKey, n) =>
+    moved.foreach { case (newKey, c) =>
       val old = oldKey(newKey)
-      val left = merged.getOrElse(old, 0L) - n
-      require(left >= 0, s"re-fold moves $n rows out of key $old, which holds fewer")
+      val left = merged.getOrElse(old, 0L) - c
+      require(left >= 0, s"re-fold moves $c rows out of key $old, which holds fewer")
       if (left == 0) merged -= old else merged(old) = left
-      merged(newKey) = merged.getOrElse(newKey, 0L) + n
+      merged(newKey) = merged.getOrElse(newKey, 0L) + c
     }
-    merged.toMap
+    (merged.toMap, sample)
+  }
+
+  /** In one single-stage job: [[countRows]] of the rows of `df` whose
+    * boolean column `where` holds, projected to its other columns but
+    * `sample`; and the first `n` non-null values of string column `sample`
+    * in partition order, each task keeping the first `n` it meets.
+    */
+  private[graft] def countWhereAndSample(
+      df: DataFrame,
+      where: String,
+      sample: String,
+      n: Int
+  ): (Map[Row, Long], Seq[String]) = {
+    val schema = df.schema
+    val (w, s) = (schema.fieldIndex(where), schema.fieldIndex(sample))
+    val keyOrdinals = schema.indices.filterNot(i => i == w || i == s)
+    val keySchema = StructType(keyOrdinals.map(schema(_)))
+    val rdd = df.queryExecution.toRdd
+    val merged = mutable.HashMap.empty[Row, Long]
+    val sampled = new Array[Array[String]](rdd.getNumPartitions)
+    df.sparkSession.sparkContext.runJob(rdd,
+      (rows: Iterator[InternalRow]) => {
+        val counts = new KeyCounts
+        val project = UnsafeProjection.create(keyOrdinals.map(i =>
+          BoundReference(i, schema(i).dataType, schema(i).nullable)))
+        val first = mutable.ArrayBuffer.empty[String]
+        rows.foreach { r =>
+          if (!r.isNullAt(w) && r.getBoolean(w)) counts.add(project(r))
+          if (first.size < n && !r.isNullAt(s)) first += r.getUTF8String(s).toString
+        }
+        (counts.toRows(keySchema), first.toArray)
+      },
+      (i: Int, part: (Array[(Row, Long)], Array[String])) => {
+        part._1.foreach { case (k, c) => merged(k) = merged.getOrElse(k, 0L) + c }
+        sampled(i) = part._2
+      })
+    (merged.toMap, sampled.iterator.flatten.take(n).toSeq)
   }
 
   /** Distinct (alias, ns) groups actually used + blank/unknown flags

@@ -40,29 +40,119 @@ class InferenceSpec extends AnyFunSuite {
     assert(gen == local)
   }
 
-  test("roundsExhausted: sound fixed-point early exit") {
-    import graft.ns.{Inference, Registry, NsSource}
+  test("nextCandidates: exact next-round candidates after the added namespaces") {
     val minNs = 1000L
-    val reg = Registry.fromPairs(
-      Seq("hot" -> "http://hot.example.net/ns/"), NsSource.Inference)
-    val added = Seq("http://hot.example.net/ns/" -> 4800L)
-    // parent domain candidate: unresolved, but its exact next-round count
-    // (5000 - 4800 under the added child) is below threshold -> dead
-    val covered = Seq(
-      Inference.PrefixCount("http://hot.example.net/", 1, 5000),
-      Inference.PrefixCount("http://hot.example.net/ns/", 2, 4800))
-    assert(Inference.roundsExhausted(covered, added, reg, minNs))
-    // an unresolved candidate that STAYS above threshold blocks the exit
-    val open = covered :+ Inference.PrefixCount("http://cold.example.io/", 1, 2000)
-    assert(!Inference.roundsExhausted(open, added, reg, minNs))
-    // so does a parent with enough residual mass outside the added child
-    val fatParent = Seq(
-      Inference.PrefixCount("http://hot.example.net/", 1, 9000),
-      Inference.PrefixCount("http://hot.example.net/ns/", 2, 4800))
-    assert(!Inference.roundsExhausted(fatParent, added, reg, minNs))
-    // a truncated collection is never exhausted (unseen candidates may exist)
+    val ns = "http://hot.example.net/ns/"
+    val added = Seq(ns -> 4800L)
+    // parent domain candidate: 5000 - 4800 under the added child is below
+    // the threshold, and the child itself resolves -> nothing is left
+    val covered = Seq(PrefixCount("http://hot.example.net/", 1, 5000), PrefixCount(ns, 2, 4800))
+    assert(Inference.nextRoundDerivable(covered, added.map(_._1)))
+    assert(Inference.nextCandidates(covered, added, minNs).isEmpty)
+    // an unresolved candidate outside the added subtree stays as it was
+    val cold = PrefixCount("http://cold.example.io/", 1, 2000)
+    assert(Inference.nextCandidates(covered :+ cold, added, minNs) == Seq(cold))
+    // a parent with enough mass outside the added child stays, with the rest
+    val fatParent = Seq(PrefixCount("http://hot.example.net/", 1, 9000), PrefixCount(ns, 2, 4800))
+    assert(Inference.nextCandidates(fatParent, added, minNs) ==
+      Seq(PrefixCount("http://hot.example.net/", 1, 4200)))
+    // a truncated collect may miss candidates: the next round counts again
     val truncated = Seq.fill(Inference.MaxCollected)(covered.head)
-    assert(!Inference.roundsExhausted(truncated, added, reg, minNs))
+    assert(!Inference.nextRoundDerivable(truncated, added.map(_._1)))
+    // a leaf candidate beside the namespace that extends it loses nothing:
+    // no IRI under http://x.test/p/ is http://x.test/p
+    val leaf = Seq(PrefixCount("http://x.test/", 1, 8000), PrefixCount("http://x.test/p", 2, 3000),
+      PrefixCount("http://x.test/p/", 2, 4000))
+    assert(Inference.nextCandidates(leaf, Seq("http://x.test/p/" -> 4000L), minNs) ==
+      Seq(PrefixCount("http://x.test/", 1, 4000), PrefixCount("http://x.test/p", 2, 3000)))
+    // added namespaces that are not host-gated segment boundaries
+    for (bad <- Seq("http://x.test/p", "urn:x/", "http:///x/", "http://host", "1http://h/"))
+      assert(!Inference.nextRoundDerivable(leaf, Seq(bad)), bad)
+    for (good <- Seq("http://h/", "http://x.test/p/", "http://o.test/onto#", "http://a/b#c#"))
+      assert(Inference.isSegBoundary(good), good)
+  }
+
+  test("nextCandidates equals a Spark recount of what is still unresolved (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.apache.spark.sql.{functions => F}
+    import graft.ns.Registry
+    val spark = SparkSuite.spark
+    import spark.implicits._
+    val minNs = 20L
+    // occurrences under a directory, over a few local names
+    def under(dir: String, n: Int): Seq[String] = (0 until n).map(i => dir + "e" + (i % 7))
+    val genCount = Gen.oneOf(Gen.choose(3, 15), Gen.choose(20, 60)) // below / above
+    // a host with children above and below the threshold, one level deeper
+    // under its first child, and sub-threshold tail directories that may
+    // sum past it: the host and that child can register after their children
+    def genTree(h: String) = for {
+      kids <- Gen.listOfN(3, genCount)
+      grand <- Gen.listOfN(2, genCount)
+      tails <- Gen.choose(0, 8)
+      deepTails <- Gen.choose(0, 6)
+    } yield kids.zipWithIndex.flatMap { case (n, j) => under(s"${h}c$j/", n) } ++
+      grand.zipWithIndex.flatMap { case (n, j) => under(s"${h}c0/g$j/", n) } ++
+      (0 until tails).flatMap(k => under(s"${h}t$k/", 6)) ++
+      (0 until deepTails).flatMap(k => under(s"${h}c0/t$k/", 6))
+    // a '#'-namespace, and a hot predicate whose whole IRI is a leaf
+    // candidate next to a namespace that extends it. A leaf that is no
+    // valid URI (a broken %-escape) is proposed but never registered, so it
+    // stays a candidate while the namespace beside it is added
+    def genHash(h: String) = genCount.map(n => under(s"${h}onto#", n))
+    def genLeaf(h: String) = for {
+      a <- genCount; b <- genCount
+      (leaf, ns) <- Gen.oneOf(("p", "p/"), ("p", "p1/"), ("p%4", "p%41/"))
+    } yield Seq.fill(a)(h + leaf) ++ under(h + ns, b)
+    val genCorpus = for {
+      trees <- Gen.choose(1, 3)
+      parts <- Gen.sequence[List[Seq[String]], Seq[String]](
+        (0 until trees).map(i => genTree(s"http://h$i.test/")) ++
+          Seq(genHash("http://o.test/"), genLeaf("http://x.test/"),
+            Gen.const(under("http://dbpedia.org/resource/", 30))))
+      maxNs <- Gen.choose(3, 8)
+    } yield (parts.flatten, maxNs)
+    def recount(iris: org.apache.spark.sql.DataFrame, reg: Registry): Set[PrefixCount] =
+      Inference.prefixCounts(iris.filter(
+        graft.summarize.Normalize.resolveCol(F.col("iri"), reg).isNull))
+        .filter(F.col("count") >= minNs).collect()
+        .map(r => PrefixCount(r.getString(0), r.getInt(1), r.getLong(2))).toSet
+    var derivedRounds = 0
+    var leafRounds = 0
+    var deepest = 0
+    val prop = Prop.forAllNoShrink(genCorpus) { case (corpus, maxNs) =>
+      val iris = corpus.toDF("iri")
+      var reg = Registry.community()
+      var cands = recount(iris, reg)
+      var round = 1
+      var exact = true
+      var go = true
+      while (go && round <= 4) {
+        val (inferred, _) = Inference.inferNamespaces(cands.toSeq, minNs, 5L, maxNs)
+        val (next, added) = reg.withNamespaces(inferred)
+        go = added.nonEmpty
+        if (go) {
+          val truth = recount(iris, next)
+          if (Inference.nextRoundDerivable(cands.toSeq, added)) {
+            val sizes = inferred.collect { case (ns, n, _) if added.contains(ns) => ns -> n }
+            exact &&= Inference.nextCandidates(cands.toSeq, sizes, minNs).toSet == truth
+            derivedRounds += 1
+            if (cands.exists(c => added.exists(ns =>
+                ns.startsWith(c.prefix) && !Inference.segPrefixes(ns).contains(c.prefix))))
+              leafRounds += 1
+            deepest = math.max(deepest, round + 1)
+          }
+          reg = next
+          cands = truth
+          round += 1
+        }
+      }
+      exact
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(7L)).withWorkers(1), prop)
+    assert(res.passed, res.status)
+    assert(derivedRounds >= 25 && leafRounds > 0 && deepest >= 4,
+      (derivedRounds, leafRounds, deepest))
   }
 
   test("segPrefixes matches seg_tree.rs from_test segment set") {
@@ -172,22 +262,5 @@ class InferenceSpec extends AnyFunSuite {
     val desc = iris.count(i => i != p && i.startsWith(p))
     val uniq = iris.filter(i => i != p && i.startsWith(p)).distinct.size
     assert(own == 1 && desc == 2 && uniq == 2)
-  }
-
-  test("sampleUnresolved: at most 10 unresolved IRIs, the same from every call") {
-    val spark = SparkSuite.spark
-    import spark.implicits._
-    import org.apache.spark.sql.{functions => F}
-    val registry = graft.ns.Registry.community()
-    val iris = ((0 until 200).map(i => s"http://dbpedia.org/resource/R$i") ++
-      (0 until 60).map(i => s"http://nowhere$i.invalid/x$i")).toDF("iri").repartition(5)
-    val unresolved = iris.filter(
-      graft.summarize.Normalize.resolveCol(F.col("iri"), registry).isNull)
-    val first = Inference.sampleUnresolved(unresolved)
-    assert(first.size == 10)
-    assert(first.forall(registry.resolve(_).isEmpty))
-    assert(Inference.sampleUnresolved(unresolved) == first)
-    assert(Inference.sampleUnresolved(unresolved, n = 3) == first.take(3))
-    assert(Inference.sampleUnresolved(unresolved.filter(F.lit(false))).isEmpty)
   }
 }

@@ -236,10 +236,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(fold.isEmpty && Snapshot.readLineage(dir).map(_._1).contains(666L))
   }
 
-  test("multi-round inference: delta-filtered rounds reach the same fixed point") {
+  test("multi-round inference: truncated Spark rounds reach the same fixed point") {
     // three inferable namespaces; a collect budget of 2 candidates per round
-    // forces one namespace per round (rounds 2+ run off the cached unresolved
-    // relation — round 3+ exercises the delta-trie filter path)
+    // forces one namespace per round, and each truncated collect makes the
+    // next round count again over the corpus instead of deriving it
     val rows =
       (0 until 300).map(i => ("http://hota.example.net/ns/item" + (i % 60), s"u$i")) ++
       (0 until 200).map(i => ("http://hotb.example.org/res/r" + (i % 40), s"v$i")) ++
