@@ -228,6 +228,21 @@ object Inference {
     (h.toSeq.map(c => (c.prefix, c.size, NsSource.Inference: NsSource)), garbage)
   }
 
+  /** O6 diagnostic (reference logs example unresolved IRIs,
+    * `src/iri_trie.rs:232-236`): a bounded sample of the still-unresolved set,
+    * recorded into tasks.json so an operator can see WHAT is not resolving.
+    */
+  def sampleUnresolved(iris: DataFrame, n: Int = 10): Seq[String] = {
+    // one job over every partition, each task stopping after n rows, then
+    // the first n in partition order — where `limit(n).collect()` scans one
+    // partition and then scales up, a job per attempt
+    val firstCol = iris.select(iris.columns.head).queryExecution.toRdd
+    iris.sparkSession.sparkContext
+      .runJob(firstCol, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        it.take(n).map(_.getUTF8String(0).toString).toArray)
+      .iterator.flatten.take(n).toSeq
+  }
+
   /** Full distributed inference round: count, threshold, collect, expand.
     * Returns (inferred namespaces, #garbage domains).
     */

@@ -298,10 +298,10 @@ object Pipeline {
     *     an empty set: it is recorded with 0 rows and no Spark job, and `f0`
     *     is the final summary. Otherwise [[runInference]] runs.
     *   - When inference added namespaces, only the rows they resolve are
-    *     re-folded ([[Normalize.refold]], F1), not the whole table. The
-    *     same pass samples up to 10 IRIs left unresolved for the
-    *     housekeeping; when inference ran and added nothing, that sample is
-    *     the pass's only work.
+    *     re-folded ([[Normalize.refold]], F1), not the whole table.
+    *   - When inference ran and the final keys still hold an unresolved IRI,
+    *     one early-stopping job samples up to 10 of them for the
+    *     housekeeping; otherwise no job samples.
     *   - The sinks and the summary snapshot are written on the driver.
     *
     * Returns the final registry, the housekeeping, the added namespaces and
@@ -324,14 +324,17 @@ object Pipeline {
       } else runInference(triples, r0, cfg, metrics)
 
     // ---- Stage C: re-fold what the added namespaces resolve --------------
-    // The same pass samples example IRIs still unresolved under the final
-    // registry (O6; the reference logs some, iri_trie.rs:232-236), from the
-    // positions where F0 holds one: they are all the final keys can hold.
     val (rows, groups, examples) = timed(metrics, "summarize") {
-      val positions = Normalize.unresolvedPositions(f0)
-      val (counts, examples) =
-        if (inferredAll.isEmpty && positions.isEmpty) (f0, Nil)
-        else Normalize.refold(triples, f0, inferredAll, registry, positions)
+      val counts =
+        if (inferredAll.isEmpty) f0
+        else Normalize.refold(triples, f0, inferredAll, registry)
+      // example IRIs left unresolved under the final registry (O6; the
+      // reference logs some, iri_trie.rs:232-236), from the positions where
+      // the final keys hold one; a fully resolved input runs no job here
+      val positions = if (hk.rounds > 0) Normalize.unresolvedPositions(counts) else Nil
+      val examples =
+        if (positions.isEmpty) Nil
+        else Inference.sampleUnresolved(unresolvedIris(triples, registry, positions))
       val (r, g, _, _) = Normalize.fromKeyCounts(counts, registry, cfg.ignoreUnknown)
       ((r, g, examples), r.size.toLong)
     }
@@ -411,13 +414,18 @@ object Pipeline {
     (registry, hk, inferredAll.result())
   }
 
-  /** The IRIs of `triples` that `registry` does not resolve, from all three
-    * positions, one row per occurrence (the reference inserts only registry
-    * misses into its IriTrie, `src/prefixes.rs:193-207`).
+  /** The IRIs of `triples` that `registry` does not resolve, from the term
+    * `positions` (all three by default), one row per occurrence (the
+    * reference inserts only registry misses into its IriTrie,
+    * `src/prefixes.rs:193-207`).
     */
-  private def unresolvedIris(triples: DataFrame, registry: Registry): DataFrame =
+  private def unresolvedIris(
+      triples: DataFrame,
+      registry: Registry,
+      positions: Seq[String] = Seq("s", "p", "o")
+  ): DataFrame =
     triples
-      .select(F.explode(F.array(Seq("s", "p", "o").map(Normalize.iriCol): _*)).as("iri"))
+      .select(F.explode(F.array(positions.map(Normalize.iriCol): _*)).as("iri"))
       .filter(F.col("iri").isNotNull)
       .filter(Normalize.resolveCol(F.col("iri"), registry).isNull)
 

@@ -329,37 +329,19 @@ object Normalize {
     * the new one with every position holding an added namespace's alias put
     * back to UNKNOWN, because a term the registry resolved keeps its
     * namespace.
-    *
-    * The same pass samples the IRIs in term columns `samplePositions` that
-    * `after` leaves unresolved (at most one per row, s before p before o):
-    * the first `n` in partition order, each task keeping the first `n` it
-    * meets. It scans every row, so the sample is empty only when no such
-    * IRI exists. With nothing `added` the pass only samples.
-    *
-    * @return the moved key counts and the sample
     */
   private[graft] def refold(
       triples: DataFrame,
       counts: Map[Row, Long],
       added: Seq[String],
-      after: Registry,
-      samplePositions: Seq[String] = Nil,
-      n: Int = 10
-  ): (Map[Row, Long], Seq[String]) = {
+      after: Registry
+  ): Map[Row, Long] = {
     val addedReg = Registry.fromPairs(added.map(ns => ns -> ns), graft.ns.NsSource.Inference)
     def hit(c: Column) = resolveCol(c, addedReg).isNotNull
-    val touched =
+    val touched = triples.filter(
       (F.col("sKind") === Kind.IRI && hit(F.col("s"))) || hit(F.col("p")) ||
         (F.col("oKind") === Kind.IRI && hit(F.col("o"))) ||
-        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt")))
-    val unresolved = F.coalesce(samplePositions.map { p =>
-      F.when(resolveCol(iriCol(p), after).isNull, iriCol(p))
-    } :+ F.lit(null).cast("string"): _*)
-    val keyed = summaryKeys(
-      triples.withColumn("_touched", touched).withColumn("_unresolved", unresolved)
-        .filter(F.col("_touched") || F.col("_unresolved").isNotNull),
-      after, Seq("_touched", "_unresolved"))
-    val (moved, sample) = countWhereAndSample(keyed, "_touched", "_unresolved", n)
+        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt"))))
     val addedAliases = added.flatMap(after.byNs.get).map(_.alias).toSet
     def oldKey(key: Row): Row = {
       val v = key.toSeq.toArray
@@ -368,51 +350,14 @@ object Normalize {
       Row.fromSeq(v.toSeq)
     }
     val merged = mutable.HashMap.empty[Row, Long] ++= counts
-    moved.foreach { case (newKey, c) =>
+    foldKeys(touched, after).foreach { case (newKey, n) =>
       val old = oldKey(newKey)
-      val left = merged.getOrElse(old, 0L) - c
-      require(left >= 0, s"re-fold moves $c rows out of key $old, which holds fewer")
+      val left = merged.getOrElse(old, 0L) - n
+      require(left >= 0, s"re-fold moves $n rows out of key $old, which holds fewer")
       if (left == 0) merged -= old else merged(old) = left
-      merged(newKey) = merged.getOrElse(newKey, 0L) + c
+      merged(newKey) = merged.getOrElse(newKey, 0L) + n
     }
-    (merged.toMap, sample)
-  }
-
-  /** In one single-stage job: [[countRows]] of the rows of `df` whose
-    * boolean column `where` holds, projected to its other columns but
-    * `sample`; and the first `n` non-null values of string column `sample`
-    * in partition order, each task keeping the first `n` it meets.
-    */
-  private[graft] def countWhereAndSample(
-      df: DataFrame,
-      where: String,
-      sample: String,
-      n: Int
-  ): (Map[Row, Long], Seq[String]) = {
-    val schema = df.schema
-    val (w, s) = (schema.fieldIndex(where), schema.fieldIndex(sample))
-    val keyOrdinals = schema.indices.filterNot(i => i == w || i == s)
-    val keySchema = StructType(keyOrdinals.map(schema(_)))
-    val rdd = df.queryExecution.toRdd
-    val merged = mutable.HashMap.empty[Row, Long]
-    val sampled = new Array[Array[String]](rdd.getNumPartitions)
-    df.sparkSession.sparkContext.runJob(rdd,
-      (rows: Iterator[InternalRow]) => {
-        val counts = new KeyCounts
-        val project = UnsafeProjection.create(keyOrdinals.map(i =>
-          BoundReference(i, schema(i).dataType, schema(i).nullable)))
-        val first = mutable.ArrayBuffer.empty[String]
-        rows.foreach { r =>
-          if (!r.isNullAt(w) && r.getBoolean(w)) counts.add(project(r))
-          if (first.size < n && !r.isNullAt(s)) first += r.getUTF8String(s).toString
-        }
-        (counts.toRows(keySchema), first.toArray)
-      },
-      (i: Int, part: (Array[(Row, Long)], Array[String])) => {
-        part._1.foreach { case (k, c) => merged(k) = merged.getOrElse(k, 0L) + c }
-        sampled(i) = part._2
-      })
-    (merged.toMap, sampled.iterator.flatten.take(n).toSeq)
+    merged.toMap
   }
 
   /** Distinct (alias, ns) groups actually used + blank/unknown flags

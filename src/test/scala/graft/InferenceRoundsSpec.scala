@@ -137,7 +137,7 @@ class InferenceRoundsSpec extends AnyFunSuite {
     assert(run(cfg0.copy(maxCollected = round1Candidates(paths))) == derived)
   }
 
-  test("example_unresolved: sampled under the final registry in the re-fold pass") {
+  test("example_unresolved: sampled under the final registry, only when something is left") {
     def run(unlisted: Boolean) = countingJobs { _ =>
       val out = SparkSuite.tmpDir("rounds-ex")
       val res = RdfPipeline.run(spark, tailHostFixture(unlisted), cfg0.copy(outDir = out))
@@ -153,8 +153,8 @@ class InferenceRoundsSpec extends AnyFunSuite {
     // everything resolves after inference: no example
     val ((_, none), jobsResolved) = run(unlisted = false)
     assert(none.isEmpty)
-    // the sample rides the re-fold: the scan, round 1's aggregate and
-    // collect, and the re-fold, whether or not something is left unresolved
-    assert(jobs == jobsResolved && jobs <= 4, (jobs, jobsResolved))
+    // the scan, round 1's aggregate and collect, and the re-fold; the sample
+    // is one more job, run only when something is left unresolved
+    assert(jobsResolved <= 4 && jobs == jobsResolved + 1, (jobs, jobsResolved))
   }
 }

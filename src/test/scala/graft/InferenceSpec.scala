@@ -263,4 +263,21 @@ class InferenceSpec extends AnyFunSuite {
     val uniq = iris.filter(i => i != p && i.startsWith(p)).distinct.size
     assert(own == 1 && desc == 2 && uniq == 2)
   }
+
+  test("sampleUnresolved: at most 10 unresolved IRIs, the same from every call") {
+    val spark = SparkSuite.spark
+    import spark.implicits._
+    import org.apache.spark.sql.{functions => F}
+    val registry = graft.ns.Registry.community()
+    val iris = ((0 until 200).map(i => s"http://dbpedia.org/resource/R$i") ++
+      (0 until 60).map(i => s"http://nowhere$i.invalid/x$i")).toDF("iri").repartition(5)
+    val unresolved = iris.filter(
+      graft.summarize.Normalize.resolveCol(F.col("iri"), registry).isNull)
+    val first = Inference.sampleUnresolved(unresolved)
+    assert(first.size == 10)
+    assert(first.forall(registry.resolve(_).isEmpty))
+    assert(Inference.sampleUnresolved(unresolved) == first)
+    assert(Inference.sampleUnresolved(unresolved, n = 3) == first.take(3))
+    assert(Inference.sampleUnresolved(unresolved.filter(F.lit(false))).isEmpty)
+  }
 }

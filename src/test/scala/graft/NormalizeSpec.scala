@@ -111,27 +111,6 @@ class NormalizeSpec extends AnyFunSuite {
     assert(withIds.length == 1) // the single IRI-object row (occurs=1) is filtered
     assert(withIds(0).getAs[String]("stmt_id") == "#t0001")
   }
-
-  test("refold: samples at most n unresolved IRIs, the same from every call") {
-    import org.apache.spark.sql.{functions => F}
-    val registry = Registry.community()
-    val subjects = (0 until 200).map(i => s"http://dbpedia.org/resource/R$i") ++
-      (0 until 60).map(i => s"http://nowhere$i.invalid/x$i")
-    val triples = subjects.map(s =>
-      Triple(s, Kind.IRI, "http://dbpedia.org/ontology/knows", "v", Kind.LIT_PLAIN, None, None, "u"))
-      .toDS().toDF().repartition(5)
-    def sample(df: org.apache.spark.sql.DataFrame, n: Int = 10) = {
-      val (moved, ex) = Normalize.refold(df, Map.empty, Nil, registry, Seq("s", "p", "o"), n)
-      assert(moved.isEmpty) // nothing added, nothing moves
-      ex
-    }
-    val first = sample(triples)
-    assert(first.size == 10 && first.distinct.size == 10)
-    assert(first.forall(registry.resolve(_).isEmpty))
-    assert(sample(triples) == first)
-    assert(sample(triples, n = 3) == first.take(3))
-    assert(sample(triples.filter(F.lit(false))).isEmpty)
-  }
 }
 
 /** Parity of the fused fold against the relational reference pair. */
