@@ -439,14 +439,20 @@ object Pipeline {
 
   /** tasks.json (reference `MetaInfo`, `src/meta_info.rs:31-46,104-141,241-246`):
     * per-stage roll-ups (duration + row count), inference housekeeping, and —
-    * on the RDF-file path — per-file byte size and kind tallies.
+    * on the RDF-file path — per-file byte size and kind tallies, and the rows
+    * of each scan partition (`scan_partition_rows`, its skew; omitted when
+    * empty).
     */
-  def tasksJson(ms: Seq[StageMetrics], hk: InferHk, files: Seq[FileMetrics]): String = {
+  def tasksJson(ms: Seq[StageMetrics], hk: InferHk, files: Seq[FileMetrics],
+      scanPartitionRows: Seq[Long] = Nil): String = {
     val filesJson = files.map { f =>
       s"""    {"file": ${Registry.jstr(f.file)}, "size_bytes": ${f.sizeBytes}, "triples": ${f.triples}, "iris": ${f.iris}, "blanks": ${f.blanks}, "literals": ${f.literals}}"""
     }.mkString("[\n", ",\n", "\n  ]")
+    val scanJson =
+      if (scanPartitionRows.isEmpty) ""
+      else s"""\n  "scan_partition_rows": ${scanPartitionRows.mkString("[", ", ", "]")},"""
     s"""{
-  "stages": ${metricsJson(ms).linesIterator.mkString("\n  ")},
+  "stages": ${metricsJson(ms).linesIterator.mkString("\n  ")},$scanJson
   "infer_hk": {"rounds": ${hk.rounds}, "wall_ms": ${hk.wallMs}, "inferred_ns": ${hk.inferredNs}, "added_ns": ${hk.addedNs}, "discarded_ns": ${hk.discardedNs}, "example_unresolved": ${hk.exampleUnresolved.map(Registry.jstr).mkString("[", ", ", "]")}},
   "files": ${if (files.isEmpty) "[]" else filesJson}
 }"""

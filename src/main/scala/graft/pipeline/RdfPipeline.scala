@@ -10,7 +10,8 @@ import java.nio.file.Paths
 /** The reference's own entry point re-expressed: RDF files in, condensed
   * namespace summary out (chilon_rs `src/main.rs:38-165`).
   *
-  * Stage order: one parallel scan (Turtle one file per task) whose single job
+  * Stage order: one parallel scan (line-format files cut into equal byte
+  * ranges, the other files read whole, one task per group) whose single job
   * fills the triple cache and returns the per-file tallies, while the parse
   * hands on the `@prefix` declarations -> their merge into the community
   * registry (N7, `src/prefixes.rs:249-277`) -> one exchange-free fold of the
@@ -33,43 +34,49 @@ object RdfPipeline {
   /** The reference applies the 200-grapheme cap to EVERY parsed IRI
     * (`normalize_iri`, src/prefixes.rs:431-444), so corpora with >200-char
     * IRIs summarize identically. Applied to s (when IRI), p, o (when IRI) and
-    * the datatype IRI. The UDF only runs on rows that can exceed the cap
-    * (length guard keeps the common path in codegen).
+    * the datatype IRI, in one projection that keeps the column order. The
+    * UDF only runs on rows that can exceed the cap (length guard keeps the
+    * common path in codegen).
     */
   def truncateIris(df: DataFrame): DataFrame = {
     val trunc = F.udf((s: String) => graft.extract.Canonical.graphemeTruncate(s))
-    def capped(c: org.apache.spark.sql.Column) =
-      F.when(F.length(c) > graft.extract.Canonical.MaxGraphemes, trunc(c)).otherwise(c)
-    df
-      .withColumn("s", F.when(F.col("sKind") === graft.model.Kind.IRI, capped(F.col("s")))
-        .otherwise(F.col("s")))
-      .withColumn("p", capped(F.col("p")))
-      .withColumn("o", F.when(F.col("oKind") === graft.model.Kind.IRI, capped(F.col("o")))
-        .otherwise(F.col("o")))
-      .withColumn("oDt", capped(F.col("oDt")))
+    def capped(c: String) =
+      F.when(F.length(F.col(c)) > graft.extract.Canonical.MaxGraphemes, trunc(F.col(c)))
+        .otherwise(F.col(c))
+    def cappedIri(c: String, kind: String) =
+      F.when(F.col(kind) === graft.model.Kind.IRI, capped(c)).otherwise(F.col(c))
+    df.select(df.columns.toSeq.map {
+      case "s" => cappedIri("s", "sKind").as("s")
+      case c @ ("p" | "oDt") => capped(c).as(c)
+      case "o" => cappedIri("o", "oKind").as("o")
+      case c => F.col(c)
+    }: _*)
   }
 
-  def run(spark: SparkSession, paths: Seq[String], cfg: Pipeline.Config): RdfResult = {
+  def run(spark: SparkSession, paths: Seq[String], cfg: Pipeline.Config): RdfResult =
+    run(spark, RdfSource.scan(spark, paths), paths, cfg)
+
+  /** [[run]] over a scan of `paths` already planned. */
+  private[graft] def run(spark: SparkSession, scan: RdfSource.Scan, paths: Seq[String],
+      cfg: Pipeline.Config): RdfResult = {
     val metrics = Vector.newBuilder[Pipeline.StageMetrics]
 
     // one parse: the job that fills the triple cache also returns the
-    // per-file kind tallies, and the Turtle parse passes the @prefix
-    // declarations out through an accumulator. Line-format inputs declare
-    // nothing, so their registry is known before the scan, and the same job
-    // also folds the summary keys under it (F0).
-    val scan = RdfSource.scan(spark, paths)
-    val declaring = !paths.forall(RdfSource.isLineFormat)
+    // per-file kind tallies and each partition's rows, and the Turtle parse
+    // passes the @prefix declarations out through an accumulator. Line-format
+    // files declare nothing, so when every listed file is one, the registry
+    // is known before the scan, and the same job also folds the summary keys
+    // under it (F0).
+    val declaring = scan.files.exists(f => !RdfSource.isLineFormat(f._1))
     val community = Registry.community()
     var cached: Option[DataFrame] = None
     Pipeline.releaseOnFailure(cached) {
-      val (triples, tallies, scanFold) = Pipeline.timed(metrics, "scan") {
+      val (triples, scanned) = Pipeline.timed(metrics, "scan") {
         val df = truncateIris(scan.triples.toDF())
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         cached = Some(df)
-        val (t, f) =
-          if (declaring) (graft.sinks.Metrics.tally(df), None)
-          else graft.sinks.Metrics.tallyAndFold(df, community) match { case (t, f) => (t, Some(f)) }
-        ((df, t, f), t.valuesIterator.map(_.triples).sum)
+        val f = graft.sinks.Metrics.tally(df, Option.when(!declaring)(community))
+        ((df, f), f.tallies.valuesIterator.map(_.triples).sum)
       }
 
       // registry: community + per-file @prefix decls (alias from file;
@@ -83,7 +90,7 @@ object RdfPipeline {
 
       // the summary keys under r0 (F0): one job over the cache after the
       // declarations merge, unless the scan folded them
-      val f0 = scanFold.getOrElse(Pipeline.timed(metrics, "fold") {
+      val f0 = scanned.keys.getOrElse(Pipeline.timed(metrics, "fold") {
         val f = Normalize.foldKeys(triples, r0)
         (f, f.size.toLong)
       })
@@ -93,9 +100,9 @@ object RdfPipeline {
       val (registry, hk, _, summary) =
         Pipeline.summarizeAndSink(spark, triples, r0, f0, cfg, paths, metrics)
 
-      // per-file metrics (reference Task records, meta_info.rs:31-46): byte
-      // size and the scan job's kind tallies, keyed by the srcUrl the scan
-      // stamped (file:/... for Turtle, file:///... for the line formats)
+      // per-file metrics (reference Task records, meta_info.rs:31-46): the
+      // listed byte size and the scan job's kind tallies, keyed by the srcUrl
+      // the scan stamped (the listed file:/... path)
       val files = Pipeline.timed(metrics, "file_metrics") {
         // normalize BOTH sides to an absolute filesystem path and match
         // exactly — suffix matching would misattribute when one input path is
@@ -109,26 +116,21 @@ object RdfPipeline {
           try Paths.get(noScheme).toAbsolutePath.normalize.toString
           catch { case _: Exception => noScheme }
         }
-        val byPath = tallies.map { case (src, t) => canon(src) -> t }
-        // a directory or glob input expands to the files the scan read
-        val listed = paths.flatMap { p =>
-          if (RdfSource.isLineFormat(p)) Seq(p)
-          else RdfSource.listFiles(spark, Seq(p)).map(f => canon(f._1)) match {
-            case Seq(f) if f == canon(p) => Seq(p)
-            case fs => fs
-          }
-        }
-        val fs = (p: String) =>
-          try java.nio.file.Files.size(Paths.get(p)) catch { case _: Exception => 0L }
+        val byPath = scanned.tallies.map { case (src, t) => canon(src) -> t }
+        // a directory or glob input expands to the files the scan listed; a
+        // file input keeps the name it was given
+        val given = paths.map(p => canon(p) -> p).toMap
         val none = graft.sinks.Metrics.Tally(0L, 0L, 0L, 0L)
-        val out = listed.map { p =>
-          val t = byPath.getOrElse(canon(p), none)
-          Pipeline.FileMetrics(p, fs(p), t.triples, t.iris, t.blanks, t.literals)
+        val out = scan.files.map { case (src, len) =>
+          val f = canon(src)
+          val t = byPath.getOrElse(f, none)
+          Pipeline.FileMetrics(given.getOrElse(f, f), len, t.triples, t.iris, t.blanks, t.literals)
         }
         (out, out.size.toLong)
       }
       val ms = metrics.result()
-      TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), Pipeline.tasksJson(ms, hk, files))
+      TtlSink.write(Paths.get(cfg.outDir, "tasks.json"),
+        Pipeline.tasksJson(ms, hk, files, scanned.partitionRows))
       RdfResult(summary, registry, triples, ms)
     }
   }

@@ -3,10 +3,10 @@ package graft.rdf
 import graft.model.{Kind, Triple}
 
 /** Line-oriented N-Triples / N-Quads parser (reference source formats,
-  * chilon_rs `src/parse.rs:63-86`). N-Triples is newline-delimited, so it
-  * splits cleanly across partitions: `spark.read.text(...).flatMap(parseLine)`
-  * keeps parsing fully distributed with no per-file state. Quads project to
-  * triples by dropping the graph term (`src/parse.rs:40-47`).
+  * chilon_rs `src/parse.rs:63-86`). N-Triples is newline-delimited, so a
+  * file can be cut at any byte offset: [[RdfSource]] reads each range's lines
+  * and maps them through [[parseLine]], with no per-file state. Quads project
+  * to triples by dropping the graph term (`src/parse.rs:40-47`).
   *
   * RDF-star (`<< >>`) is rejected like the reference
   * (`src/prefixes.rs:394-396`). Grammar follows the W3C N-Triples spec

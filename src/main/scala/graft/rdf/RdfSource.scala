@@ -2,25 +2,33 @@ package graft.rdf
 
 import graft.model.{PrefixDecl, Triple}
 import java.nio.charset.StandardCharsets
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, PathFilter}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapred.{FileSplit, LineRecordReader}
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.{AccumulatorV2, SerializableConfiguration}
+import scala.collection.mutable
 
 /** RDF file sources (reference S1-S4, chilon_rs `src/extract.rs:44-66`,
   * `src/parse.rs:63-86`).
   *
-  * Format dispatch by extension after stripping `.gz`/`.bz2` (Hadoop codecs
-  * decompress transparently):
-  *   - `.nt` / `.nq`: line-delimited, parsed fully distributed via
-  *     `spark.read.textFile(...).flatMap` — no per-file state, clean splits;
-  *   - `.ttl` (and anything else, like the reference's fallback): stateful
-  *     `@prefix`, each file parsed whole by one task; files are listed
-  *     like `binaryFiles` lists them and packed by size into at most
-  *     `defaultParallelism` tasks (the reference parses one file per
-  *     thread).
+  * Every input is listed ([[listFiles]]) and read by one split planner
+  * ([[plan]]) and one reader: one task per planned group, at most
+  * `defaultParallelism` groups while each stays under
+  * `spark.sql.files.maxPartitionBytes`. Format dispatch is by the listed
+  * file's extension after stripping `.gz`/`.bz2` (Hadoop codecs decompress
+  * transparently):
+  *   - plain `.nt` / `.nq`: line-delimited, so they are cut at byte offsets
+  *     into equal shares and each range is read through Hadoop's
+  *     `LineRecordReader` (the boundary rule of `TextInputFormat`: a range
+  *     owns the lines that start inside it);
+  *   - compressed `.nt` / `.nq` and `.ttl` (and anything else, like the
+  *     reference's fallback): each file read whole by one task, Turtle
+  *     through [[TurtleStream]] (stateful `@prefix`; the reference parses
+  *     one file per thread).
   *
   * `@prefix` declarations are a side output merged into the driver registry
   * (reference `handle_pref_decls`, `src/prefixes.rs:249-277`): [[scan]]
@@ -38,17 +46,11 @@ object RdfSource {
     s.endsWith(".nt") || s.endsWith(".nq")
   }
 
-  /** Distributed scan of N-Triples / N-Quads files. */
-  def readNTriples(spark: SparkSession, paths: Seq[String]): Dataset[Triple] = {
-    import spark.implicits._
-    spark.read
-      .textFile(paths: _*)
-      .select(
-        org.apache.spark.sql.functions.input_file_name().as("f"),
-        org.apache.spark.sql.functions.col("value"))
-      .as[(String, String)]
-      .flatMap { case (f, line) => NTriples.parseLine(line, f) }
-  }
+  /** Strict scan of N-Triples / N-Quads files (fail fast on a malformed
+    * line): the triples of [[scan]].
+    */
+  def readNTriples(spark: SparkSession, paths: Seq[String]): Dataset[Triple] =
+    scan(spark, paths).triples
 
   /** One routed-aside malformed input line — the dead-letter record. */
   final case class BadRecord(src: String, line: String, msg: String)
@@ -62,7 +64,8 @@ object RdfSource {
     * parser, so accepted lines are bit-identical between them. Each side
     * is a filter over the same one-pass parse relation — callers that
     * consume both should cache/checkpoint the input split to avoid a
-    * second scan.
+    * second scan. It reads through `spark.read.textFile` (Spark's own file
+    * splits, `srcUrl` as `input_file_name` gives it), not [[scan]]'s planner.
     */
   def readNTriplesLenient(
       spark: SparkSession, paths: Seq[String]
@@ -84,8 +87,8 @@ object RdfSource {
     (parsed.flatMap(_._1), parsed.flatMap(_._2))
   }
 
-  /** The files a Turtle input list names, listed as `binaryFiles` lists
-    * them: globs expand, a directory contributes its direct children
+  /** The files an input list names, listed as `binaryFiles` lists them:
+    * globs expand, a directory contributes its direct children
     * (non-recursive; sub-directories are skipped), and names starting with
     * `_` or `.` are hidden. Each file comes back as its fully qualified path
     * (`file:/…`), the string the scan stamps into `srcUrl`, with its byte
@@ -126,72 +129,157 @@ object RdfSource {
     groups.map(_.result()).filter(_.nonEmpty).toSeq
   }
 
-  /** Parse batches of the listed Turtle files: one task per group of
-    * [[pack]], at most `defaultParallelism` groups, so every file streams
-    * whole through one [[TurtleStream]] (the parser state is per file) while
-    * the files spread over the cores.
-    *
-    * Each file streams through [[TurtleStream]] (statement-boundary chunker
-    * feeding the stateful parser), so task memory is bounded by the longest
-    * single statement + one batch — a multi-GB `.ttl` file never
-    * materializes as one JVM String (the reference's constant-memory
-    * contract, `src/parse.rs:24-51` at `Readme.md:23` scale). `.gz`/`.bz2`
-    * files are wrapped in their Hadoop codec stream (the codecs the text
-    * path uses).
+  /** The bytes `[start, start + length)` of one listed file; a file read
+    * whole is the range over its full length.
     */
-  private def parseTurtle(spark: SparkSession, files: Seq[(String, Long)]): RDD[Turtle.Result] = {
+  private[graft] final case class Split(path: String, start: Long, length: Long)
+
+  /** The scan's groups, one task each. Files that must be read whole (those
+    * `cuttable` rejects: Turtle, compressed line formats, whose length says
+    * little about their rows) are [[pack]]ed onto `k` groups first; the
+    * cuttable files then fill the groups in listing order, each group up to
+    * `min(maxBytes, ⌈Σ length / k⌉)` bytes, cut at any byte offset. Bytes
+    * left over once the `k` groups are full (inputs larger than `k ×
+    * maxBytes`) open further groups of that size. Empty cuttable files get
+    * no range.
+    */
+  private[graft] def plan(
+      files: Seq[(String, Long)],
+      k: Int,
+      maxBytes: Long,
+      openCost: Long,
+      cuttable: String => Boolean
+  ): Seq[Seq[Split]] = {
+    require(k >= 1, s"k = $k groups")
+    val (cut, whole) = files.partition { case (f, _) => cuttable(f) }
+    val length = whole.toMap
+    val packed = if (whole.isEmpty) Nil else pack(whole, k, openCost)
+    val groups = mutable.ArrayBuffer.from(packed.map(_.map(f => Split(f, 0L, length(f))).toVector))
+    while (groups.size < k) groups += Vector.empty
+    val load = mutable.ArrayBuffer.from(groups.map(_.map(_.length).sum))
+    val target = math.max(1L, math.min(maxBytes, (files.map(_._2).sum + k - 1) / k))
+    var g = 0
+    cut.foreach { case (f, len) =>
+      var off = 0L
+      while (off < len) {
+        while (g < groups.size && load(g) >= target) g += 1
+        if (g == groups.size) { groups += Vector.empty; load += 0L }
+        val n = math.min(target - load(g), len - off)
+        groups(g) :+= Split(f, off, n)
+        load(g) += n
+        off += n
+      }
+    }
+    groups.filter(_.nonEmpty).toSeq
+  }
+
+  /** The lines of a line-format range, through Hadoop's `LineRecordReader`
+    * (a compressed file is decompressed and read to its end). The reader is
+    * closed on exhaustion and, for an unfinished range, when the task ends.
+    */
+  private[graft] def lines(conf: Configuration, s: Split): Iterator[String] = {
+    val reader = new LineRecordReader(conf, new FileSplit(new Path(s.path), s.start, s.length,
+      Array.empty[String]))
+    var open = true
+    def close(): Unit = if (open) { open = false; reader.close() }
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
+    val key = reader.createKey()
+    val value = reader.createValue()
+    new Iterator[String] {
+      private var ready = false
+      def hasNext: Boolean = {
+        if (!ready && open) {
+          ready = reader.next(key, value)
+          if (!ready) close()
+        }
+        ready
+      }
+      def next(): String = {
+        if (!hasNext) throw new NoSuchElementException("end of range")
+        ready = false
+        value.toString
+      }
+    }
+  }
+
+  /** Parse batches of one whole Turtle file through [[TurtleStream]]
+    * (statement-boundary chunker feeding the stateful parser), so task
+    * memory is bounded by the longest single statement + one batch — a
+    * multi-GB `.ttl` file never materializes as one JVM String (the
+    * reference's constant-memory contract, `src/parse.rs:24-51` at
+    * `Readme.md:23` scale). `.gz`/`.bz2` files are wrapped in their Hadoop
+    * codec stream.
+    */
+  private def turtle(conf: Configuration, f: String): Iterator[Turtle.Result] = {
+    val path = new Path(f)
+    val raw = path.getFileSystem(conf).open(path)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => raw.close()))
+    val codec = new CompressionCodecFactory(conf).getCodec(path)
+    val in: java.io.InputStream = if (codec != null) codec.createInputStream(raw) else raw
+    TurtleStream.batches(new java.io.InputStreamReader(in, StandardCharsets.UTF_8), f)
+  }
+
+  /** [[plan]] over the listed files with the session's settings: `k`
+    * groups (`defaultParallelism` by default), `spark.sql.files.maxPartitionBytes`
+    * as the cap and `spark.sql.files.openCostInBytes` as the weight of
+    * opening a whole file; plain line-format files are cut.
+    */
+  private[graft] def planFiles(
+      spark: SparkSession, files: Seq[(String, Long)], k: Int): Seq[Seq[Split]] = {
+    def bytes(key: String) =
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(spark.conf.get(key))
+    val codecs = new CompressionCodecFactory(spark.sparkContext.hadoopConfiguration)
+    plan(files, k, bytes("spark.sql.files.maxPartitionBytes"),
+      bytes("spark.sql.files.openCostInBytes"),
+      f => isLineFormat(f) && codecs.getCodec(new Path(f)) == null)
+  }
+
+  /** The triples of the planned groups, one task per group, each stamped
+    * with its listed file as `srcUrl`; `decl` sees every `@prefix`
+    * declaration the Turtle files make.
+    */
+  private def parse(spark: SparkSession, groups: Seq[Seq[Split]],
+      decl: PrefixDecl => Unit): RDD[Triple] = {
     val sc = spark.sparkContext
-    val openCost = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.openCostInBytes"))
-    val groups = pack(files, sc.defaultParallelism, openCost)
     val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
-    sc.parallelize(groups, math.max(1, groups.size)).flatMap(_.iterator.flatMap { f =>
-      val path = new Path(f)
-      val raw = path.getFileSystem(conf.value.value).open(path)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => raw.close()))
-      val codec = new CompressionCodecFactory(conf.value.value).getCodec(path)
-      val in: java.io.InputStream = if (codec != null) codec.createInputStream(raw) else raw
-      TurtleStream.batches(new java.io.InputStreamReader(in, StandardCharsets.UTF_8), f)
+    sc.parallelize(groups, math.max(1, groups.size)).flatMap(_.iterator.flatMap { s =>
+      if (isLineFormat(s.path)) lines(conf.value.value, s).flatMap(NTriples.parseLine(_, s.path))
+      else turtle(conf.value.value, s.path).flatMap { r =>
+        r.prefixes.foreach(decl)
+        r.triples
+      }
     })
   }
 
-  /** Per-file scan of Turtle files; returns triples + the distinct `@prefix`
-    * declarations. The two datasets share one lineage but each action on
-    * one parses the files again; [[scan]] gets both from one parse.
-    */
-  def readTurtle(spark: SparkSession, paths: Seq[String]): (Dataset[Triple], Dataset[PrefixDecl]) = {
-    import spark.implicits._
-    val parsed = parseTurtle(spark, listFiles(spark, paths))
-    val triples = spark.createDataset(parsed.flatMap(_.triples))
-    val decls = spark.createDataset(parsed.flatMap(_.prefixes)).distinct()
-    (triples, decls)
-  }
-
-  /** The line-format files' scan united with the Turtle one (reference S2). */
-  private def union(spark: SparkSession, lineFiles: Seq[String],
-      turtle: Option[Dataset[Triple]]): Dataset[Triple] = {
-    import spark.implicits._
-    (Option.when(lineFiles.nonEmpty)(readNTriples(spark, lineFiles)) ++ turtle)
-      .reduceOption(_ union _).getOrElse(spark.emptyDataset[Triple])
-  }
-
   /** Format-dispatching scan over a mixed path list (reference S2): triples
-    * plus the distinct `@prefix` declarations of the Turtle inputs. Paths
-    * that are not line-format files (directories and globs included) take
-    * the Turtle path, which also parses N-Triples.
+    * plus the distinct `@prefix` declarations of the Turtle inputs. The two
+    * datasets share no parse: each action on one reads its files again;
+    * [[scan]] gets both from one parse.
     */
   def read(spark: SparkSession, paths: Seq[String]): (Dataset[Triple], Dataset[PrefixDecl]) = {
     import spark.implicits._
-    val (lineFiles, ttlFiles) = paths.partition(isLineFormat)
-    val ttl = Option.when(ttlFiles.nonEmpty)(readTurtle(spark, ttlFiles))
-    (union(spark, lineFiles, ttl.map(_._1)), ttl.fold(spark.emptyDataset[PrefixDecl])(_._2))
+    val files = listFiles(spark, paths)
+    val ttl = files.map(_._1).filterNot(isLineFormat)
+    val sc = spark.sparkContext
+    val decls =
+      if (ttl.isEmpty) spark.emptyDataset[PrefixDecl]
+      else {
+        val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+        spark.createDataset(sc.parallelize(ttl, math.min(ttl.size, sc.defaultParallelism))
+          .flatMap(f => turtle(conf.value.value, f).flatMap(_.prefixes))).distinct()
+      }
+    val triples = parse(spark, planFiles(spark, files, sc.defaultParallelism), _ => ())
+    (spark.createDataset(triples), decls)
   }
 
-  /** A one-pass scan: the triple table, and the `@prefix` declarations its
-    * Turtle parse met on the way, collected by an accumulator instead of a
-    * second parse.
+  /** A one-pass scan: the triple table, the listed files it reads, and the
+    * `@prefix` declarations its Turtle parse met on the way, collected by an
+    * accumulator instead of a second parse.
     */
-  final class Scan private[RdfSource] (val triples: Dataset[Triple], decls: DeclSet) {
+  final class Scan private[graft] (
+      val triples: Dataset[Triple],
+      val files: Seq[(String, Long)],
+      private[graft] val decls: DeclSet) {
 
     /** The distinct declarations, in the total order `(ns.length, ns, alias)`
       * the registry merge needs: when two files declare one namespace under
@@ -208,22 +296,20 @@ object RdfSource {
     decls.toSeq.distinct.sortBy(d => (d.ns.length, d.ns, d.alias))
 
   /** [[read]] with the declarations as a side output of the one parse. */
-  def scan(spark: SparkSession, paths: Seq[String]): Scan = {
+  def scan(spark: SparkSession, paths: Seq[String]): Scan =
+    scan(spark, paths, spark.sparkContext.defaultParallelism)
+
+  /** [[scan]] planned onto `k` groups. */
+  private[graft] def scan(spark: SparkSession, paths: Seq[String], k: Int): Scan = {
     import spark.implicits._
     val decls = new DeclSet
     spark.sparkContext.register(decls, "rdf.prefix_decls")
-    val (lineFiles, ttlFiles) = paths.partition(isLineFormat)
-    val ttl = Option.when(ttlFiles.nonEmpty) {
-      spark.createDataset(parseTurtle(spark, listFiles(spark, ttlFiles)).flatMap { r =>
-        r.prefixes.foreach(decls.add)
-        r.triples
-      })
-    }
-    new Scan(union(spark, lineFiles, ttl), decls)
+    val files = listFiles(spark, paths)
+    new Scan(spark.createDataset(parse(spark, planFiles(spark, files, k), decls.add)), files, decls)
   }
 
   /** Set of declarations, merged on the driver as tasks finish. */
-  private[rdf] final class DeclSet extends AccumulatorV2[PrefixDecl, Set[PrefixDecl]] {
+  private[graft] final class DeclSet extends AccumulatorV2[PrefixDecl, Set[PrefixDecl]] {
     private var set = Set.empty[PrefixDecl]
     def isZero: Boolean = set.isEmpty
     def copy(): DeclSet = { val c = new DeclSet; c.set = set; c }

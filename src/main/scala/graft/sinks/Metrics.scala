@@ -15,24 +15,28 @@ object Metrics {
     */
   final case class Tally(triples: Long, iris: Long, blanks: Long, literals: Long)
 
+  /** What the scan job folds: the kind tallies per source, the summary
+    * keys when it was given a registry, and the rows of each partition.
+    */
+  private[graft] final case class ScanFold(
+      tallies: Map[String, Tally], keys: Option[Map[Row, Long]], partitionRows: Seq[Long])
+
   /** [[perSource]] collected to the driver as one single-stage job with no
-    * exchange ([[graft.summarize.Normalize.countRows]] over `(srcUrl, sKind,
-    * oKind)`, whose distinct rows are at most sources × 2 × 5). Run over a
+    * exchange ([[graft.summarize.Normalize.countRowsBy]] over `(srcUrl,
+    * sKind, oKind)`, whose distinct rows are at most sources × 2 × 5), and
+    * with a `registry` also the summary keys of the triples under it
+    * ([[graft.summarize.Normalize.foldKeys]]) from the same job. Run over a
     * freshly persisted table, this job is also the one that fills its cache.
     */
-  def tally(triples: DataFrame): Map[String, Tally] =
-    tallies(graft.summarize.Normalize.countRows(triples.select(TallyColumns.map(F.col): _*)))
-
-  /** [[tally]] and the summary keys of the triples under `registry`
-    * ([[graft.summarize.Normalize.foldKeys]]) from one job.
-    */
-  private[graft] def tallyAndFold(
-      triples: DataFrame, registry: graft.ns.Registry): (Map[String, Tally], Map[Row, Long]) = {
+  private[graft] def tally(triples: DataFrame, registry: Option[graft.ns.Registry]): ScanFold = {
     import graft.summarize.Normalize
-    val Seq(t, keys) = Normalize.countRowsBy(
-      Normalize.summaryKeys(triples, registry, TallyColumns),
-      Seq(TallyColumns, Normalize.KeyColumns))
-    (tallies(t), keys)
+    val counted = registry match {
+      case Some(r) => Normalize.countRowsBy(Normalize.summaryKeys(triples, r, TallyColumns),
+        Seq(TallyColumns, Normalize.KeyColumns))
+      case None => Normalize.countRowsBy(triples.select(TallyColumns.map(F.col): _*),
+        Seq(TallyColumns))
+    }
+    ScanFold(tallies(counted.maps.head), counted.maps.lift(1), counted.partitionRows)
   }
 
   private val TallyColumns = Seq("srcUrl", "sKind", "oKind")

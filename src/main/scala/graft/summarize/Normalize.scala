@@ -71,58 +71,58 @@ object Normalize {
     */
   private[graft] val KeyColumns: Seq[String] = Seq("s_ns", "p_ns", "o_ns", "is_datatype", "o_kind")
 
-  /** [[normalize]] without the row filter, against a driver-side registry. */
+  /** The resolved struct(alias, ns), or null, of the subject, the predicate,
+    * and the object's IRI or a typed literal's datatype.
+    */
+  private def resolved(reg: Registry): Seq[Column] = Seq(
+    resolveCol(F.col("s"), reg),
+    resolveCol(F.col("p"), reg),
+    F.when(F.col("oKind") === Kind.IRI, resolveCol(F.col("o"), reg))
+      .when(F.col("oKind") === Kind.LIT_TYPED, resolveCol(F.col("oDt"), reg))
+      .otherwise(F.lit(null)))
+
+  /** s_ns, p_ns, o_ns and is_datatype from the structs of [[resolved]]. */
+  private def keyCols(sr: Column, pr: Column, or: Column): Seq[Column] = Seq(
+    F.when(F.col("sKind") === Kind.BLANK, Blank)
+      .otherwise(F.coalesce(sr.getField("alias"), F.lit(Unknown))).as("s_ns"),
+    F.coalesce(pr.getField("alias"), F.lit(Unknown)).as("p_ns"),
+    F.when(F.col("oKind") === Kind.BLANK, Blank)
+      .when(F.col("oKind") === Kind.LIT_PLAIN, PlainLitGroup._1)
+      .when(F.col("oKind") === Kind.LIT_LANG, LangLitGroup._1)
+      .otherwise(F.coalesce(or.getField("alias"), F.lit(Unknown))).as("o_ns"),
+    F.col("oKind").isin(Kind.LIT_PLAIN, Kind.LIT_LANG, Kind.LIT_TYPED).as("is_datatype"))
+
+  /** [[normalize]] without the row filter, against a driver-side registry.
+    * Each resolved struct feeds a key and a pair column, so the structs are
+    * projected first and each lookup runs once per term.
+    */
   private def withKeys(triples: DataFrame, reg: Registry): DataFrame = {
-    def resolve(c: Column) = resolveCol(c, reg)
     def pairCol(alias: Column, ns: Column): Column =
       F.struct(alias.as("alias"), ns.as("ns"))
-
+    def pair(r: Column): Column = pairCol(r.getField("alias"), r.getField("ns"))
+    val names = Seq("_sr", "_pr", "_or")
+    val Seq(sr, pr, or) = names.map(F.col)
     triples
-      .withColumn("_sr", resolve(F.col("s")))
-      .withColumn("_pr", resolve(F.col("p")))
-      .withColumn(
-        "_or",
-        F.when(F.col("oKind") === Kind.IRI, resolve(F.col("o")))
-          .when(F.col("oKind") === Kind.LIT_TYPED, resolve(F.col("oDt")))
-          .otherwise(F.lit(null))
-      )
-      .withColumn(
-        "s_ns",
-        F.when(F.col("sKind") === Kind.BLANK, Blank)
-          .otherwise(F.coalesce(F.col("_sr.alias"), F.lit(Unknown)))
-      )
-      .withColumn("p_ns", F.coalesce(F.col("_pr.alias"), F.lit(Unknown)))
-      .withColumn(
-        "o_ns",
-        F.when(F.col("oKind") === Kind.BLANK, Blank)
-          .when(F.col("oKind") === Kind.LIT_PLAIN, PlainLitGroup._1)
-          .when(F.col("oKind") === Kind.LIT_LANG, LangLitGroup._1)
-          .otherwise(F.coalesce(F.col("_or.alias"), F.lit(Unknown)))
-      )
-      .withColumn(
-        "is_datatype",
-        F.col("oKind").isin(Kind.LIT_PLAIN, Kind.LIT_LANG, Kind.LIT_TYPED)
-      )
-      .withColumn("s_pair", pairCol(F.col("_sr.alias"), F.col("_sr.ns")))
-      .withColumn("p_pair", pairCol(F.col("_pr.alias"), F.col("_pr.ns")))
-      .withColumn(
-        "o_pair",
+      .select(F.col("*") +: resolved(reg).zip(names).map { case (c, n) => c.as(n) }: _*)
+      .select(triples.columns.toSeq.map(F.col) ++ keyCols(sr, pr, or) ++ Seq(
+        pair(sr).as("s_pair"),
+        pair(pr).as("p_pair"),
         F.when(F.col("oKind") === Kind.LIT_PLAIN,
             pairCol(F.lit(PlainLitGroup._1), F.lit(PlainLitGroup._2)))
           .when(F.col("oKind") === Kind.LIT_LANG,
             pairCol(F.lit(LangLitGroup._1), F.lit(LangLitGroup._2)))
-          .otherwise(pairCol(F.col("_or.alias"), F.col("_or.ns")))
-      )
-      .drop("_sr", "_pr", "_or")
+          .otherwise(pair(or)).as("o_pair")): _*)
   }
 
   /** The [[KeyColumns]] of every triple under `reg`, with no row filter,
-    * after the columns `carry` of `triples`.
+    * after the columns `carry` of `triples`: one projection, in which each
+    * lookup is used once.
     */
   private[graft] def summaryKeys(
-      triples: DataFrame, reg: Registry, carry: Seq[String] = Nil): DataFrame =
-    withKeys(triples, reg).withColumn("o_kind", F.col("oKind"))
-      .select((carry ++ KeyColumns).map(F.col): _*)
+      triples: DataFrame, reg: Registry, carry: Seq[String] = Nil): DataFrame = {
+    val Seq(sr, pr, or) = resolved(reg)
+    triples.select(carry.map(F.col) ++ keyCols(sr, pr, or) :+ F.col("oKind").as("o_kind"): _*)
+  }
 
   /** The core summary group-count (reference `TripleFreq::add`,
     * `src/normalize.rs:34-46`): low-cardinality keys, so map-side combine
@@ -173,18 +173,27 @@ object Normalize {
     * summary-sized outputs only.
     */
   private[graft] def countRows(df: DataFrame): Map[Row, Long] =
-    countRowsBy(df, Seq(df.columns.toSeq)).head
+    countRowsBy(df, Seq(df.columns.toSeq)).maps.head
+
+  /** [[countRowsBy]]'s result: one merged map per projection, and the rows
+    * of each partition of the input, by partition index.
+    */
+  private[graft] final case class Counted(maps: Seq[Map[Row, Long]], partitionRows: Seq[Long])
 
   /** [[countRows]] of several projections of `df` (each a list of its
     * columns) in one pass, one map per projection: the merged maps are as
-    * large as each projection's distinct-row space, not their product.
+    * large as each projection's distinct-row space, not their product. Each
+    * partition's row count comes from the same job, as its task's maps
+    * reach the driver.
     */
-  private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]]): Seq[Map[Row, Long]] = {
+  private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]]): Counted = {
     val schema = df.schema
     val subSchemas = projections.map(cols => StructType(cols.map(c => schema(c))))
     val ordinals = projections.map(_.map(schema.fieldIndex))
     val merged = projections.map(_ => mutable.HashMap.empty[Row, Long])
-    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+    val rdd = df.queryExecution.toRdd
+    val partitionRows = new Array[Long](rdd.getNumPartitions)
+    df.sparkSession.sparkContext.runJob(rdd,
       (rows: Iterator[InternalRow]) => {
         val counts = ordinals.map(_ => new KeyCounts).toArray
         val project = ordinals.toArray.map { ords =>
@@ -209,11 +218,13 @@ object Normalize {
         }
         counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) }
       },
-      (_: Int, parts: Array[Array[(Row, Long)]]) =>
+      (i: Int, parts: Array[Array[(Row, Long)]]) => {
+        partitionRows(i) = parts.headOption.fold(0L)(_.iterator.map(_._2).sum)
         parts.zip(merged).foreach { case (part, m) =>
           part.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
-        })
-    merged.map(_.toMap)
+        }
+      })
+    Counted(merged.map(_.toMap), partitionRows.toSeq)
   }
 
   /** One task's counts of `UnsafeRow` keys; a key is copied only when new. */
