@@ -1,20 +1,26 @@
 package graft.ns
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
 /** Namespace inference — the algorithmic heart of the reference
-  * (chilon_rs `src/iri_trie.rs`, `src/seg_tree.rs`), re-expressed as a shuffled
-  * Spark aggregation plus a driver-side expansion over the tiny thresholded result.
+  * (chilon_rs `src/iri_trie.rs`, `src/seg_tree.rs`), re-expressed as
+  * per-segment-prefix counts plus a driver-side expansion over the tiny
+  * thresholded result.
   *
   * The reference builds an in-memory char-trie of every unresolved IRI
   * (`IriTrie`), re-segments it at '/'/'#' boundaries into a `SegTree`
   * (`src/seg_tree.rs:16-64`), and expands a candidate heap
   * (`infer_namespaces_aux`, `src/seg_tree.rs:104-155`). Only segment-boundary
   * prefixes are ever read from the trie, so the distributed equivalent is:
-  * explode each IRI into its host-gated segment prefixes, `groupBy(prefix).count`,
-  * collect the >= MIN_NS_SIZE survivors, and run the same expansion loop on the
-  * driver; later rounds are derived on the driver from those counts
+  * count each IRI's host-gated segment prefixes, collect the >= MIN_NS_SIZE
+  * survivors, and run the same expansion loop on the driver. The counts come
+  * either from per-task hash maps merged on the driver, in the scan that
+  * reads line-format RDF inputs ([[PrefixFold]]; each task holds its share
+  * of chilon's `IRI_TRIE_SIZE`), or, past that bound and on every other
+  * path, from a shuffled `groupBy(prefix).count` ([[prefixCounts]]). Later
+  * rounds are derived on the driver from those counts
   * ([[nextCandidates]]). This computes the order-independent fixed point over
   * global counts (the reference's result depends on arrival order via
   * mid-stream maintenance, `src/prefixes.rs:209-247`; the P/R gate tolerates
@@ -79,6 +85,110 @@ object Inference {
   private def segPath(prefix: String): Array[String] = segPrefixes(prefix)
 
   final case class PrefixCount(prefix: String, depth: Int, count: Long)
+
+  /** Chilon's bound on its IriTrie (`IRI_TRIE_SIZE`, `src/prefixes.rs:217`):
+    * the most distinct prefixes a scan's tasks may hold together.
+    */
+  val IriTrieSize = 1000000
+
+  /** Round 1's prefix counts as a per-task fold ([[PrefixMap]]) of the
+    * string `columns`, each a row's unresolved IRI or null, with
+    * [[inferFromIrisWithCandidates]]'s collect: the prefixes counted at
+    * least `minNsSize` times, by (count desc, prefix), the first
+    * `maxCollected`. Each of n tasks holds at most ⌈`budget` / n⌉ distinct
+    * prefixes, so the driver never merges more than `budget`.
+    */
+  private[graft] final case class PrefixFold(
+      columns: Seq[String], minNsSize: Long, maxCollected: Int, budget: Int = IriTrieSize) {
+    def taskBudget(tasks: Int): Int = ((budget.toLong + tasks - 1) / math.max(tasks, 1)).toInt
+  }
+
+  /** What a [[PrefixFold]] found: round 1's candidates, or None when a task
+    * went over its budget; and each task's distinct prefixes, None for a
+    * task that went over.
+    */
+  private[graft] final case class FoldedPrefixes(
+      candidates: Option[Seq[PrefixCount]], taskEntries: Seq[Option[Int]])
+
+  /** One task's prefixes, their least depths and their counts. */
+  private[graft] type TaskPrefixes = (Array[UTF8String], Array[Int], Array[Long])
+
+  /** A prefix's count and the least depth it was seen at. */
+  private final class Slot(var count: Long, var depth: Int)
+
+  /** One task's segment-prefix counts, keyed by byte slices of the IRIs; a
+    * key is copied only when new. Past `budget` distinct prefixes it drops
+    * its map, and [[result]] is None.
+    */
+  private[graft] final class PrefixMap(budget: Int) {
+    private var counts = new java.util.HashMap[UTF8String, Slot]()
+    private val sink: SegPrefixesGen.Sink = (pos, prefix) =>
+      if (counts != null) {
+        val slot = counts.get(prefix)
+        if (slot != null) {
+          slot.count += 1
+          if (pos + 1 < slot.depth) slot.depth = pos + 1
+        } else if (counts.size < budget) counts.put(prefix.copy(), new Slot(1L, pos + 1))
+        else counts = null
+      }
+
+    /** Counts the segment prefixes of one IRI occurrence. */
+    def add(iri: UTF8String): Unit = if (counts != null) SegPrefixesGen.walk(iri, sink)
+
+    /** The prefixes, their least depths and their counts. */
+    def result: Option[TaskPrefixes] =
+      Option(counts).map { c =>
+        val (keys, depths, ns) =
+          (new Array[UTF8String](c.size), new Array[Int](c.size), new Array[Long](c.size))
+        var i = 0
+        c.forEach { (k, slot) =>
+          keys(i) = k; depths(i) = slot.depth; ns(i) = slot.count
+          i += 1
+        }
+        (keys, depths, ns)
+      }
+  }
+
+  /** The driver's side of a [[PrefixFold]]: merges each task's
+    * [[PrefixMap.result]] as it arrives, then collects the candidates and
+    * drops the merged map.
+    */
+  private[graft] final class PrefixMerge(fold: PrefixFold, tasks: Int) {
+    private var merged = new java.util.HashMap[UTF8String, Slot]()
+    private val entries = Array.fill[Option[Int]](tasks)(None)
+
+    def add(task: Int, part: Option[TaskPrefixes]): Unit = {
+      entries(task) = part.map(_._1.length)
+      part match {
+        case Some((keys, depths, ns)) if merged != null =>
+          var i = 0
+          while (i < keys.length) {
+            val slot = merged.get(keys(i))
+            if (slot == null) merged.put(keys(i), new Slot(ns(i), depths(i)))
+            else {
+              slot.count += ns(i)
+              if (depths(i) < slot.depth) slot.depth = depths(i)
+            }
+            i += 1
+          }
+        case Some(_) =>
+        case None => merged = null
+      }
+    }
+
+    def result(): FoldedPrefixes = {
+      val candidates = Option(merged).map { m =>
+        val kept = mutable.ArrayBuffer.empty[(UTF8String, Slot)]
+        m.forEach((k, slot) => if (slot.count >= fold.minNsSize) kept += (k -> slot))
+        kept.sortWith { case ((ka, a), (kb, b)) =>
+          a.count > b.count || (a.count == b.count && ka.compareTo(kb) < 0)
+        }.iterator.take(fold.maxCollected)
+          .map { case (k, slot) => PrefixCount(k.toString, slot.depth, slot.count) }.toVector
+      }
+      merged = null
+      FoldedPrefixes(candidates, entries.toSeq)
+    }
+  }
 
   /** Distributed hierarchical prefix counting (replaces IriTrie build, SURVEY A2).
     *

@@ -128,7 +128,12 @@ object Registry {
 
   val communityPairs: Seq[(String, String)] = fixPv(communityRows())
 
-  def community(): Registry = fromPairs(communityPairs, NsSource.Community)
+  /** The registry of [[communityPairs]], built once per JVM: a registry is
+    * immutable, so every run shares this one and its lazily built tries.
+    */
+  def community(): Registry = communityRegistry
+
+  private lazy val communityRegistry = fromPairs(communityPairs, NsSource.Community)
 
   def empty: Registry = new Registry(TreeMap.empty, PrefixTrie.empty)
 
@@ -210,6 +215,7 @@ object Registry {
     * declaration list (same per-decl semantics, O(registry + decls) total).
     */
   def addDeclaredAll(reg: Registry, decls: Seq[(String, String)]): Registry = {
+    if (decls.isEmpty) return reg // nothing to add: no trie to rebuild
     var byNs = reg.byNs
     var aliases = reg.aliasMap
     val mut = new MutablePrefixTrie[NsEntry]

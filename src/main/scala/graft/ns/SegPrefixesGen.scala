@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `(pos, prefix)` rows exactly like `posexplode(segUdf(iri))` but walking
   * the input `UTF8String`'s bytes directly: no UTF8String->String decode, no
   * Array[String] materialization, and every emitted prefix is a byte-slice
-  * VIEW over one shared array (`UTF8String.fromBytes(arr, 0, len)`), so the
-  * per-IRI cost is a single byte-array fetch.
+  * VIEW over one shared array, so the per-IRI cost is a single byte-array
+  * fetch. The walk ([[SegPrefixesGen.walk]]) also feeds the scan's per-task
+  * prefix counts (`Inference.PrefixMap`), which need no copy at all.
   *
   * Byte-wise correctness: the delimiters `/` and `#` and the `://` scheme
   * marker are ASCII, and UTF-8 multi-byte sequences never contain ASCII
@@ -37,45 +38,73 @@ case class SegPrefixesGen(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): SegPrefixesGen =
     copy(child = newChild)
 
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val v = child.eval(input)
+    if (v == null) return Nil
+    // one copy of a slice of the row buffer, then every prefix is a view
+    // over that copy
+    val u = UTF8String.fromBytes(v.asInstanceOf[UTF8String].getBytes)
+    val out = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
+    SegPrefixesGen.walk(u, (pos, prefix) => out += new GenericInternalRow(Array[Any](pos, prefix)))
+    out
+  }
+}
+
+object SegPrefixesGen {
+
+  /** Receives each segment prefix of an IRI with its position (0 = the
+    * first segment).
+    */
+  trait Sink {
+    def apply(pos: Int, prefix: UTF8String): Unit
+  }
+
   @inline private def isAsciiLetter(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')
 
   @inline private def isSchemeByte(b: Byte): Boolean =
     isAsciiLetter(b) || (b >= '0' && b <= '9') || b == '+' || b == '-' || b == '.'
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) return Nil
-    val u = v.asInstanceOf[UTF8String]
-    val bytes = u.getBytes // no copy when the UTF8String spans its base array
-    val n = bytes.length
-
+  /** [[Inference.segPrefixes]] of `u`, in order, each a byte-slice view
+    * over `u`'s memory (valid while `u` is). A scheme region with a
+    * non-ASCII byte takes the reference Scala implementation instead.
+    */
+  def walk(u: UTF8String, sink: Sink): Unit = {
+    val n = u.numBytes
     // first "://" (':' and '/' are ASCII -> byte scan == char scan)
     var sep = -1
     var j = 0
     while (sep < 0 && j + 2 < n) {
-      if (bytes(j) == ':' && bytes(j + 1) == '/' && bytes(j + 2) == '/') sep = j
+      if (u.getByte(j) == ':' && u.getByte(j + 1) == '/' && u.getByte(j + 2) == '/') sep = j
       j += 1
     }
     // scheme region must be ASCII for the byte-wise class checks to match
     // Character.isLetter/isLetterOrDigit; otherwise take the exact slow path
     var k = 0
-    while (k < sep) { if (bytes(k) < 0) return slowPath(u); k += 1 }
+    while (k < sep) {
+      if (u.getByte(k) < 0) {
+        Inf.segPrefixes(u.toString).iterator.zipWithIndex.foreach { case (p, pos) =>
+          sink(pos, UTF8String.fromString(p))
+        }
+        return
+      }
+      k += 1
+    }
 
-    val schemeOk = sep > 0 && isAsciiLetter(bytes(0)) && {
+    val schemeOk = sep > 0 && isAsciiLetter(u.getByte(0)) && {
       var ok = true
       var i = 1
-      while (ok && i < sep) { ok = isSchemeByte(bytes(i)); i += 1 }
+      while (ok && i < sep) { ok = isSchemeByte(u.getByte(i)); i += 1 }
       ok
     }
     val authStart = if (schemeOk) sep + 3 else -1
 
-    val out = new scala.collection.mutable.ArrayBuffer[InternalRow](4)
+    val base = u.getBaseObject
+    val offset = u.getBaseOffset
     var pos = 0
     var lastEnd = -1
     @inline def emit(end: Int): Unit = {
-      out += new GenericInternalRow(
-        Array[Any](pos, UTF8String.fromBytes(bytes, 0, end)))
+      sink(pos, UTF8String.fromAddress(base, offset, end))
       pos += 1
       lastEnd = end
     }
@@ -83,7 +112,7 @@ case class SegPrefixesGen(child: Expression)
     var hostFound = false
     var decided = authStart < 0
     while (i < n) {
-      val c = bytes(i)
+      val c = u.getByte(i)
       if (c == '/' || c == '#') {
         if (hostFound) emit(i + 1)
         else if (!decided) {
@@ -93,17 +122,6 @@ case class SegPrefixesGen(child: Expression)
       }
       i += 1
     }
-    if (out.isEmpty || lastEnd < n) emit(n)
-    out
-  }
-
-  /** Exact reference implementation for the rare non-ASCII-scheme row. */
-  private def slowPath(u: UTF8String): IterableOnce[InternalRow] = {
-    val arr = Inf.segPrefixes(u.toString)
-    var pos = -1
-    arr.iterator.map { p =>
-      pos += 1
-      new GenericInternalRow(Array[Any](pos, UTF8String.fromString(p)))
-    }.toSeq
+    if (pos == 0 || lastEnd < n) emit(n)
   }
 }

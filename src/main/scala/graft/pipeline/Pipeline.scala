@@ -18,8 +18,9 @@ import java.nio.file.Paths
   *            pre-inference registry (F0)
   *   Stage B  namespace inference rounds over still-unresolved IRIs, run
   *            only when F0 holds an unresolved IRI: round 1 is a salted
-  *            prefix aggregation -> driver expansion -> registry; later
-  *            rounds subtract the added namespaces' subtrees from round 1's
+  *            prefix aggregation (on line-format RDF inputs, counted by the
+  *            scan instead) -> driver expansion -> registry; later rounds
+  *            subtract the added namespaces' subtrees from round 1's
   *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
   *            re-folded (F1); `ignoreUnknown` filters the merged keys on the
@@ -283,7 +284,7 @@ object Pipeline {
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
   ): Result = {
     val (registry, hk, inferredAll, summary) =
-      summarizeAndSink(spark, triples, r0, f0, cfg, Seq(triplesDir), metrics)
+      summarizeAndSink(spark, triples, r0, f0, None, cfg, Seq(triplesDir), metrics)
     val ms = metrics.result()
     TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil))
     Result(summary, registry, triples, ms, inferredAll)
@@ -296,7 +297,9 @@ object Pipeline {
     *     registry `r0`, counted without the `ignoreUnknown` filter.
     *   - When no key holds an unresolved IRI, inference round 1 would count
     *     an empty set: it is recorded with 0 rows and no Spark job, and `f0`
-    *     is the final summary. Otherwise [[runInference]] runs.
+    *     is the final summary. Otherwise [[runInference]] runs, with
+    *     `round1` as round 1's candidates when the pass that folded `f0`
+    *     also counted them.
     *   - When inference added namespaces, only the rows they resolve are
     *     re-folded ([[Normalize.refold]], F1), not the whole table.
     *   - When inference ran and the final keys still hold an unresolved IRI,
@@ -312,6 +315,7 @@ object Pipeline {
       triples: DataFrame,
       r0: Registry,
       f0: Map[Row, Long],
+      round1: Option[Seq[Inference.PrefixCount]],
       cfg: Config,
       lineage: Seq[String],
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
@@ -321,7 +325,7 @@ object Pipeline {
       if (cfg.inferNs && cfg.maxInferenceRounds > 0 && !Normalize.hasUnresolvedIri(f0)) {
         metrics += StageMetrics("infer_round_1", 0L, 0L)
         (r0, InferHk(1, 0L, 0L, 0L, 0L), Vector.empty[String])
-      } else runInference(triples, r0, cfg, metrics)
+      } else runInference(triples, r0, cfg, metrics, round1)
 
     // ---- Stage C: re-fold what the added namespaces resolve --------------
     val (rows, groups, examples) = timed(metrics, "summarize") {
@@ -358,9 +362,12 @@ object Pipeline {
 
   /** Stage B: inference rounds to the order-independent fixed point.
     *
-    * Round 1 scans the triple table once (explode s/p/o, keep registry
-    * misses), aggregates the segment prefixes and collects those at or above
-    * `minNsSize`. Rounds 2+ run on the driver: the unresolved set only
+    * Round 1 takes `round1` as its candidates when a pass that runs anyway
+    * counted them (the scan of line-format RDF inputs,
+    * [[graft.sinks.Metrics.tally]]). Otherwise it scans the triple table
+    * once (explode s/p/o, keep registry misses), aggregates the segment
+    * prefixes and collects those at or above `minNsSize`, the same
+    * candidates. Rounds 2+ run on the driver: the unresolved set only
     * shrinks, so the next round's candidates are this round's minus the
     * subtrees of the namespaces it added ([[Inference.nextCandidates]]).
     * Rounds stop when one adds nothing or no candidate is left.
@@ -376,13 +383,15 @@ object Pipeline {
       triples: DataFrame,
       initial: Registry,
       cfg: Config,
-      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
+      metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]],
+      round1: Option[Seq[Inference.PrefixCount]] = None
   ): (Registry, InferHk, Vector[String]) = {
     var registry = initial
     val inferredAll = Vector.newBuilder[String]
     var hk = InferHk(0, 0L, 0L, 0L, 0L)
-    // the next round's candidates when derived on the driver; None counts
-    var derived: Option[Seq[Inference.PrefixCount]] = None
+    // this round's candidates when counted already or derived on the
+    // driver; None counts
+    var derived: Option[Seq[Inference.PrefixCount]] = round1
     var go = cfg.inferNs
     while (go && hk.rounds < cfg.maxInferenceRounds) {
       val t0 = System.nanoTime()
@@ -439,18 +448,22 @@ object Pipeline {
 
   /** tasks.json (reference `MetaInfo`, `src/meta_info.rs:31-46,104-141,241-246`):
     * per-stage roll-ups (duration + row count), inference housekeeping, and —
-    * on the RDF-file path — per-file byte size and kind tallies, and the rows
+    * on the RDF-file path — per-file byte size and kind tallies, the rows
     * of each scan partition (`scan_partition_rows`, its skew; omitted when
+    * empty) and, when the scan counted round 1, each scan task's distinct
+    * prefixes (`scan_prefix_entries`, null for a task over its budget,
+    * whose run then counted round 1 in a Spark aggregate; omitted when
     * empty).
     */
   def tasksJson(ms: Seq[StageMetrics], hk: InferHk, files: Seq[FileMetrics],
-      scanPartitionRows: Seq[Long] = Nil): String = {
+      scanPartitionRows: Seq[Long] = Nil, scanPrefixEntries: Seq[Option[Int]] = Nil): String = {
     val filesJson = files.map { f =>
       s"""    {"file": ${Registry.jstr(f.file)}, "size_bytes": ${f.sizeBytes}, "triples": ${f.triples}, "iris": ${f.iris}, "blanks": ${f.blanks}, "literals": ${f.literals}}"""
     }.mkString("[\n", ",\n", "\n  ]")
-    val scanJson =
-      if (scanPartitionRows.isEmpty) ""
-      else s"""\n  "scan_partition_rows": ${scanPartitionRows.mkString("[", ", ", "]")},"""
+    def field(name: String, values: Seq[String]) =
+      if (values.isEmpty) "" else s"""\n  "$name": ${values.mkString("[", ", ", "]")},"""
+    val scanJson = field("scan_partition_rows", scanPartitionRows.map(_.toString)) +
+      field("scan_prefix_entries", scanPrefixEntries.map(_.fold("null")(_.toString)))
     s"""{
   "stages": ${metricsJson(ms).linesIterator.mkString("\n  ")},$scanJson
   "infer_hk": {"rounds": ${hk.rounds}, "wall_ms": ${hk.wallMs}, "inferred_ns": ${hk.inferredNs}, "added_ns": ${hk.addedNs}, "discarded_ns": ${hk.discardedNs}, "example_unresolved": ${hk.exampleUnresolved.map(Registry.jstr).mkString("[", ", ", "]")}},

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.model.Kind
+import graft.ns.Inference
 import org.apache.spark.sql.{DataFrame, Row, functions => F}
 
 /** Per-input metrics (reference A4: per-file triples/iris/blanks/literals
@@ -16,27 +17,35 @@ object Metrics {
   final case class Tally(triples: Long, iris: Long, blanks: Long, literals: Long)
 
   /** What the scan job folds: the kind tallies per source, the summary
-    * keys when it was given a registry, and the rows of each partition.
+    * keys when it was given a registry, the rows of each partition, and
+    * round 1's prefix counts when it was asked for them.
     */
   private[graft] final case class ScanFold(
-      tallies: Map[String, Tally], keys: Option[Map[Row, Long]], partitionRows: Seq[Long])
+      tallies: Map[String, Tally], keys: Option[Map[Row, Long]], partitionRows: Seq[Long],
+      prefixes: Option[Inference.FoldedPrefixes])
 
   /** [[perSource]] collected to the driver as one single-stage job with no
     * exchange ([[graft.summarize.Normalize.countRowsBy]] over `(srcUrl,
     * sKind, oKind)`, whose distinct rows are at most sources × 2 × 5), and
     * with a `registry` also the summary keys of the triples under it
-    * ([[graft.summarize.Normalize.foldKeys]]) from the same job. Run over a
+    * ([[graft.summarize.Normalize.foldKeys]]) from the same job. Given
+    * `prefixes` as well, the same job counts the segment prefixes of the
+    * IRIs the registry leaves unresolved: inference round 1. Run over a
     * freshly persisted table, this job is also the one that fills its cache.
     */
-  private[graft] def tally(triples: DataFrame, registry: Option[graft.ns.Registry]): ScanFold = {
+  private[graft] def tally(triples: DataFrame, registry: Option[graft.ns.Registry],
+      prefixes: Option[Inference.PrefixFold] = None): ScanFold = {
     import graft.summarize.Normalize
     val counted = registry match {
-      case Some(r) => Normalize.countRowsBy(Normalize.summaryKeys(triples, r, TallyColumns),
-        Seq(TallyColumns, Normalize.KeyColumns))
+      case Some(r) =>
+        Normalize.countRowsBy(
+          Normalize.summaryKeys(triples, r, TallyColumns, unresolved = prefixes.isDefined),
+          Seq(TallyColumns, Normalize.KeyColumns), prefixes)
       case None => Normalize.countRowsBy(triples.select(TallyColumns.map(F.col): _*),
         Seq(TallyColumns))
     }
-    ScanFold(tallies(counted.maps.head), counted.maps.lift(1), counted.partitionRows)
+    ScanFold(tallies(counted.maps.head), counted.maps.lift(1), counted.partitionRows,
+      counted.prefixes)
   }
 
   private val TallyColumns = Seq("srcUrl", "sKind", "oKind")

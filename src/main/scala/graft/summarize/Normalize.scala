@@ -1,7 +1,7 @@
 package graft.summarize
 
 import graft.model.Kind
-import graft.ns.Registry
+import graft.ns.{Inference, Registry}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -114,15 +114,38 @@ object Normalize {
           .otherwise(pair(or)).as("o_pair")): _*)
   }
 
-  /** The [[KeyColumns]] of every triple under `reg`, with no row filter,
-    * after the columns `carry` of `triples`: one projection, in which each
-    * lookup is used once.
+  /** The IRIs inference counts, one column per term position: the subject,
+    * the predicate and the object IRI when the registry leaves it
+    * unresolved, else null. Datatypes are never among them.
     */
-  private[graft] def summaryKeys(
-      triples: DataFrame, reg: Registry, carry: Seq[String] = Nil): DataFrame = {
-    val Seq(sr, pr, or) = resolved(reg)
-    triples.select(carry.map(F.col) ++ keyCols(sr, pr, or) :+ F.col("oKind").as("o_kind"): _*)
-  }
+  private[graft] val UnresolvedIriColumns: Seq[String] =
+    Seq("s_unresolved", "p_unresolved", "o_unresolved")
+
+  /** The [[KeyColumns]] of every triple under `reg`, with no row filter,
+    * after the columns `carry` of `triples`, and with `unresolved` also the
+    * [[UnresolvedIriColumns]]. Each lookup runs once: without `unresolved`
+    * each resolved struct feeds one key in a single projection; with it a
+    * struct feeds a key and an unresolved IRI, so the structs are projected
+    * first.
+    */
+  private[graft] def summaryKeys(triples: DataFrame, reg: Registry, carry: Seq[String] = Nil,
+      unresolved: Boolean = false): DataFrame =
+    if (!unresolved) {
+      val Seq(sr, pr, or) = resolved(reg)
+      triples.select(carry.map(F.col) ++ keyCols(sr, pr, or) :+ F.col("oKind").as("o_kind"): _*)
+    } else {
+      val names = Seq("_sr", "_pr", "_or")
+      val Seq(sr, pr, or) = names.map(F.col)
+      def iri(kind: String) = F.col(kind) === Kind.IRI
+      val iris = Seq(
+        F.when(sr.isNull && iri("sKind"), F.col("s")),
+        F.when(pr.isNull, F.col("p")),
+        F.when(or.isNull && iri("oKind"), F.col("o")))
+      triples
+        .select(F.col("*") +: resolved(reg).zip(names).map { case (c, n) => c.as(n) }: _*)
+        .select(carry.map(F.col) ++ keyCols(sr, pr, or) ++ (F.col("oKind").as("o_kind") +:
+          iris.zip(UnresolvedIriColumns).map { case (c, n) => c.as(n) }): _*)
+    }
 
   /** The core summary group-count (reference `TripleFreq::add`,
     * `src/normalize.rs:34-46`): low-cardinality keys, so map-side combine
@@ -175,27 +198,36 @@ object Normalize {
   private[graft] def countRows(df: DataFrame): Map[Row, Long] =
     countRowsBy(df, Seq(df.columns.toSeq)).maps.head
 
-  /** [[countRowsBy]]'s result: one merged map per projection, and the rows
-    * of each partition of the input, by partition index.
+  /** [[countRowsBy]]'s result: one merged map per projection, the rows of
+    * each partition of the input, by partition index, and what its prefix
+    * fold found, when it was given one.
     */
-  private[graft] final case class Counted(maps: Seq[Map[Row, Long]], partitionRows: Seq[Long])
+  private[graft] final case class Counted(maps: Seq[Map[Row, Long]], partitionRows: Seq[Long],
+      prefixes: Option[Inference.FoldedPrefixes])
 
   /** [[countRows]] of several projections of `df` (each a list of its
     * columns) in one pass, one map per projection: the merged maps are as
     * large as each projection's distinct-row space, not their product. Each
     * partition's row count comes from the same job, as its task's maps
-    * reach the driver.
+    * reach the driver. With `prefixes`, the same tasks also count the
+    * segment prefixes of its IRI columns ([[Inference.PrefixMap]]), and the
+    * driver merges them as they arrive ([[Inference.PrefixMerge]]).
     */
-  private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]]): Counted = {
+  private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]],
+      prefixes: Option[Inference.PrefixFold] = None): Counted = {
     val schema = df.schema
     val subSchemas = projections.map(cols => StructType(cols.map(c => schema(c))))
     val ordinals = projections.map(_.map(schema.fieldIndex))
     val merged = projections.map(_ => mutable.HashMap.empty[Row, Long])
+    val iriOrdinals = prefixes.fold(Array.empty[Int])(_.columns.map(schema.fieldIndex).toArray)
     val rdd = df.queryExecution.toRdd
     val partitionRows = new Array[Long](rdd.getNumPartitions)
+    val budget = prefixes.fold(0)(_.taskBudget(rdd.getNumPartitions))
+    val prefixMerge = prefixes.map(new Inference.PrefixMerge(_, rdd.getNumPartitions))
     df.sparkSession.sparkContext.runJob(rdd,
       (rows: Iterator[InternalRow]) => {
         val counts = ordinals.map(_ => new KeyCounts).toArray
+        val prefixMap = if (iriOrdinals.isEmpty) null else new Inference.PrefixMap(budget)
         val project = ordinals.toArray.map { ords =>
           if (ords == schema.indices) {
             lazy val toUnsafe = UnsafeProjection.create(schema)
@@ -215,16 +247,24 @@ object Normalize {
             counts(g).add(project(g)(r))
             g += 1
           }
+          g = 0
+          while (g < iriOrdinals.length) {
+            if (!r.isNullAt(iriOrdinals(g))) prefixMap.add(r.getUTF8String(iriOrdinals(g)))
+            g += 1
+          }
         }
-        counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) }
+        (counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) },
+          Option(prefixMap).flatMap(_.result))
       },
-      (i: Int, parts: Array[Array[(Row, Long)]]) => {
+      (i: Int, res: (Array[Array[(Row, Long)]], Option[Inference.TaskPrefixes])) => {
+        val (parts, taskPrefixes) = res
         partitionRows(i) = parts.headOption.fold(0L)(_.iterator.map(_._2).sum)
         parts.zip(merged).foreach { case (part, m) =>
           part.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
         }
+        prefixMerge.foreach(_.add(i, taskPrefixes))
       })
-    Counted(merged.map(_.toMap), partitionRows.toSeq)
+    Counted(merged.map(_.toMap), partitionRows.toSeq, prefixMerge.map(_.result()))
   }
 
   /** One task's counts of `UnsafeRow` keys; a key is copied only when new. */

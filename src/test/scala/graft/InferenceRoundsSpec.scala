@@ -10,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Inference rounds after the first are derived on the driver from round 1's
   * collected prefix counts; a Spark round runs again only when the
@@ -120,21 +121,67 @@ class InferenceRoundsSpec extends AnyFunSuite {
       (hk.rounds, hk.inferredNs, hk.addedNs, hk.discardedNs))
   }
 
+  /** output.ttl, all-prefixes.json and infer_hk without its wall time. */
+  private def outputs(out: String): (String, String, String) = {
+    def text(name: String) = new String(Files.readAllBytes(Paths.get(out, name)), "UTF-8")
+    val hk = json.readTree(Paths.get(out, "tasks.json").toFile).get("infer_hk")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    hk.remove("wall_ms")
+    (text("output.ttl"), text("all-prefixes.json"), hk.toString)
+  }
+
+  /** `scan_prefix_entries` of tasks.json, None when absent. */
+  private def prefixEntries(out: String): Option[Seq[Option[Long]]] =
+    Option(json.readTree(Paths.get(out, "tasks.json").toFile).get("scan_prefix_entries"))
+      .map(_.elements().asScala.map(e => Option.when(!e.isNull)(e.asLong)).toSeq)
+
   test("RDF path: driver-derived rounds write what the Spark-round fallback writes") {
     val paths = tailHostFixture(unlisted = true)
     def run(cfg: Pipeline.Config): (String, String, String) = {
       val out = SparkSuite.tmpDir("rounds-out")
       val res = RdfPipeline.run(spark, paths, cfg.copy(outDir = out))
       res.triples.unpersist()
-      def text(name: String) = new String(Files.readAllBytes(Paths.get(out, name)), "UTF-8")
-      val hk = json.readTree(Paths.get(out, "tasks.json").toFile).get("infer_hk")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      hk.remove("wall_ms")
-      (text("output.ttl"), text("all-prefixes.json"), hk.toString)
+      outputs(out)
     }
     val derived = run(cfg0)
     assert(derived._3.contains("\"rounds\":2") && derived._3.contains("\"added_ns\":5"), derived._3)
     assert(run(cfg0.copy(maxCollected = round1Candidates(paths))) == derived)
+  }
+
+  test("round 1 rides the scan; over the prefix budget it counts in Spark and writes the same") {
+    val paths = tailHostFixture(unlisted = true)
+    def run(budget: Int) = countingJobs { _ =>
+      val out = SparkSuite.tmpDir("rounds-ride")
+      val res = RdfPipeline.run(spark, RdfSource.scan(spark, paths), paths,
+        cfg0.copy(outDir = out), budget)
+      res.triples.unpersist()
+      (outputs(out), prefixEntries(out))
+    }
+    val ((ride, rideEntries), rideJobs) = run(Inference.IriTrieSize)
+    val ((fallback, overEntries), fallbackJobs) = run(0)
+    assert(fallback == ride)
+    assert(ride._3.contains("\"rounds\":2") && ride._3.contains("\"added_ns\":5"), ride._3)
+    // every scan task counted: distinct prefixes per task, and none over
+    assert(rideEntries.exists(e => e.nonEmpty && e.forall(_.exists(_ > 0))), rideEntries)
+    assert(overEntries.exists(e => e.nonEmpty && e.forall(_.isEmpty)), overEntries)
+    // the scan, the re-fold and the sample; the fallback adds round 1's
+    // aggregate
+    assert(rideJobs == 3 && fallbackJobs > rideJobs, (rideJobs, fallbackJobs))
+  }
+
+  test("countGarbage: round 1 counts in a Spark aggregate, and the scan counts no prefix") {
+    val paths = tailHostFixture(unlisted = true)
+    def run(cfg: Pipeline.Config) = countingJobs { _ =>
+      val out = SparkSuite.tmpDir("rounds-gc")
+      val res = RdfPipeline.run(spark, paths, cfg.copy(outDir = out))
+      res.triples.unpersist()
+      (outputs(out), prefixEntries(out))
+    }
+    val ((ride, _), _) = run(cfg0)
+    val ((gc, entries), jobs) = run(cfg0.copy(countGarbage = true))
+    assert(entries.isEmpty)
+    assert(jobs > 3, jobs)
+    assert((gc._1, gc._2) == (ride._1, ride._2))
   }
 
   test("example_unresolved: sampled under the final registry, only when something is left") {
@@ -153,8 +200,8 @@ class InferenceRoundsSpec extends AnyFunSuite {
     // everything resolves after inference: no example
     val ((_, none), jobsResolved) = run(unlisted = false)
     assert(none.isEmpty)
-    // the scan, round 1's aggregate and collect, and the re-fold; the sample
-    // is one more job, run only when something is left unresolved
-    assert(jobsResolved <= 4 && jobs == jobsResolved + 1, (jobs, jobsResolved))
+    // the scan, which also counts round 1, and the re-fold; the sample is
+    // one more job, run only when something is left unresolved
+    assert((jobs, jobsResolved) == (3, 2))
   }
 }

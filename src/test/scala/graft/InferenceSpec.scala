@@ -40,6 +40,60 @@ class InferenceSpec extends AnyFunSuite {
     assert(gen == local)
   }
 
+  test("the scan's round-1 fold collects what the Spark aggregate collects (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.apache.spark.sql.{functions => F}
+    import graft.summarize.Normalize
+    val spark = SparkSuite.spark
+    import spark.implicits._
+    val cols = Seq("u1", "u2", "u3")
+    // hosts with directories, '#'-namespaces, hostless and non-ASCII-scheme
+    // IRIs, and a few hot leaves that reach the threshold themselves
+    val genIri = Gen.frequency(
+      6 -> (for { h <- Gen.choose(0, 3); d <- Gen.choose(0, 4); e <- Gen.choose(0, 9) }
+        yield s"http://h$h.test/d$d/e$e"),
+      2 -> Gen.choose(0, 2).map(h => s"http://o$h.test/onto#T"),
+      2 -> Gen.oneOf("éxyz://host/a/b", "ü+x://h.test/p/q", "http://höst.test/ä/ö#ü",
+        "http://unicode.test/路径/x"),
+      1 -> Gen.oneOf("urn:isbn:12345", "no-scheme", "http://host"),
+      2 -> Gen.oneOf("http://leaf.test/p", "http://leaf.test/q"))
+    val genRow = Gen.listOfN(3, Gen.option(genIri)).map(_.map(_.orNull))
+    val genCase = for {
+      rows <- Gen.choose(20, 200).flatMap(Gen.listOfN(_, genRow))
+      minNs <- Gen.choose(1, 12)
+      maxCollected <- Gen.oneOf(1, 3, 8, 1000)
+    } yield (rows, minNs.toLong, maxCollected)
+    var truncated = 0
+    var leaves = 0
+    var nonAscii = 0
+    val prop = Prop.forAllNoShrink(genCase) { case (rows, minNs, maxCollected) =>
+      val df = rows.map { case Seq(a, b, c) => (a, b, c) }.toDF(cols: _*)
+      val want = Inference.prefixCounts(
+        df.select(F.explode(F.array(cols.map(F.col): _*)).as("iri")).filter(F.col("iri").isNotNull))
+        .filter(F.col("count") >= minNs)
+        .orderBy(F.col("count").desc, F.col("prefix"))
+        .limit(maxCollected)
+        .collect().map(r => PrefixCount(r.getString(0), r.getInt(1), r.getLong(2))).toVector
+      val folded = Normalize.countRowsBy(df, Seq(Seq("u1")),
+        Some(Inference.PrefixFold(cols, minNs, maxCollected))).prefixes.get
+      val all = rows.flatten.filter(_ != null).flatMap(i => Inference.segPrefixes(i).toSeq)
+      if (all.distinct.count(p => all.count(_ == p) >= minNs) > maxCollected) truncated += 1
+      if (want.exists(_.prefix.startsWith("http://leaf.test/"))) leaves += 1
+      if (want.exists(c => c.prefix.startsWith("é") || c.prefix.startsWith("ü"))) nonAscii += 1
+      folded.candidates.contains(want) && folded.taskEntries.forall(_.isDefined)
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(30)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L)).withWorkers(1), prop)
+    assert(res.passed, res.status)
+    assert(truncated > 0 && leaves > 0 && nonAscii > 0, (truncated, leaves, nonAscii))
+
+    // a task over its budget drops its map, and the fold gives no candidates
+    val df = Seq(("http://a.test/x", "http://b.test/y")).toDF("u1", "u2")
+    val over = Normalize.countRowsBy(df, Seq(Seq("u1")),
+      Some(Inference.PrefixFold(Seq("u1", "u2"), 1L, 10, budget = 0))).prefixes.get
+    assert(over.candidates.isEmpty && over.taskEntries.contains(None), over)
+  }
+
   test("nextCandidates: exact next-round candidates after the added namespaces") {
     val minNs = 1000L
     val ns = "http://hot.example.net/ns/"

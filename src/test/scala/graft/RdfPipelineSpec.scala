@@ -149,6 +149,41 @@ class RdfPipelineSpec extends AnyFunSuite {
     assert(ts.exists(r => r.getAs[String]("o") == "lit"))
   }
 
+  test("the cap's byte-length guard keeps short multi-byte IRIs whole and cuts long ones") {
+    val dir = SparkSuite.tmpDir("rdfpipe-cap-bytes")
+    val out = SparkSuite.tmpDir("rdfpipe-cap-bytes-out")
+    // 173 graphemes in 473 UTF-8 bytes: past the guard, under the cap
+    val cjk = "http://cjk.example.com/" + ("語" * 150)
+    // 250 graphemes: cut to 200 as before
+    val long = "http://cut.example.com/" + ("語" * 227)
+    assert(cjk.getBytes("UTF-8").length > 200 && long.length == 250)
+    val nt = s"<$cjk> <http://dbpedia.org/ontology/knows> <$long> .\n"
+    Files.write(Paths.get(dir, "cjk.nt"), nt.getBytes("UTF-8"))
+    val res = RdfPipeline.run(spark, Seq(s"$dir/cjk.nt"),
+      Pipeline.Config(outDir = out, minOccurs = 1, inferNs = false))
+    val Array(t) = res.triples.collect()
+    res.triples.unpersist()
+    assert(t.getAs[String]("s") == cjk)
+    assert(t.getAs[String]("o") == long.take(200))
+  }
+
+  test("the community registry is built once; a second run writes the same all-prefixes.json") {
+    assert(graft.ns.Registry.community() eq graft.ns.Registry.community())
+    val dir = SparkSuite.tmpDir("rdfpipe-twice")
+    Files.write(Paths.get(dir, "a.nt"), (0 until 20).map(i =>
+      s"<http://dbpedia.org/resource/E$i> <http://twice.example.org/p> <http://twice.example.org/o$i> .\n"
+    ).mkString.getBytes("UTF-8"))
+    def prefixes(): String = {
+      val out = SparkSuite.tmpDir("rdfpipe-twice-out")
+      RdfPipeline.run(spark, Seq(dir), Pipeline.Config(outDir = out, minOccurs = 1,
+        minNsSize = 5, minDomainOccurs = 1)).triples.unpersist()
+      new String(Files.readAllBytes(Paths.get(out, "all-prefixes.json")), "UTF-8")
+    }
+    val first = prefixes()
+    assert(first.contains("http://twice.example.org/"), first)
+    assert(prefixes() == first)
+  }
+
   test("declared alias conflicting with existing alias falls back to generated") {
     val reg = graft.ns.Registry.community()
     val reg2 = graft.ns.Registry.addDeclared(reg, "http://other.example.org/rdfx/", "rdf")

@@ -263,5 +263,9 @@ class ScanSplitSpec extends AnyFunSuite {
     // file also the line at byte 0, so it reads the line its end falls on
     assert(tasks.get("scan_partition_rows").elements().asScala.map(_.asLong).toSeq ==
       Seq(251L, 249L, 251L, 249L))
+    // no IRI resolves: each task counts the host, the predicate and one
+    // leaf per subject
+    assert(tasks.get("scan_prefix_entries").elements().asScala.map(_.asLong).toSeq ==
+      Seq(253L, 251L, 253L, 251L))
   }
 }
