@@ -16,10 +16,12 @@ import scala.collection.mutable
   * prefixes are ever read from the trie, so the distributed equivalent is:
   * count each IRI's host-gated segment prefixes, collect the >= MIN_NS_SIZE
   * survivors, and run the same expansion loop on the driver. The counts come
-  * either from per-task hash maps merged on the driver, in the scan that
-  * reads line-format RDF inputs ([[PrefixFold]]; each task holds its share
-  * of chilon's `IRI_TRIE_SIZE`), or, past that bound and on every other
-  * path, from a shuffled `groupBy(prefix).count` ([[prefixCounts]]). Later
+  * either from per-task hash maps merged on the driver, in the pass that
+  * folds the summary keys before inference (the scan that reads line-format
+  * RDF inputs, the pages triple snapshot's write; [[PrefixFold]]; each task
+  * holds its share of chilon's `IRI_TRIE_SIZE`), or, past that bound and on
+  * every other path, from a shuffled `groupBy(prefix).count`
+  * ([[prefixCounts]]). Later
   * rounds are derived on the driver from those counts
   * ([[nextCandidates]]). This computes the order-independent fixed point over
   * global counts (the reference's result depends on arrival order via

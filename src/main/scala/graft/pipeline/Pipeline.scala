@@ -15,12 +15,19 @@ import java.nio.file.Paths
   *   Stage A  pages -> triples (flatMap generator: extractText check, mentions,
   *            entity linking, OpenIE, canonicalization) — checkpointed
   *            snapshot whose write job also folds the summary keys under the
-  *            pre-inference registry (F0)
+  *            pre-inference registry (F0), counts each write task's rows for
+  *            the manifest and, per task, the segment prefixes of the IRIs
+  *            that registry misses (inference round 1); the snapshot is read
+  *            back with the schema it was written with, so the write is the
+  *            only pass before F1
   *   Stage B  namespace inference rounds over still-unresolved IRIs, run
-  *            only when F0 holds an unresolved IRI: round 1 is a salted
-  *            prefix aggregation (on line-format RDF inputs, counted by the
-  *            scan instead) -> driver expansion -> registry; later rounds
-  *            subtract the added namespaces' subtrees from round 1's
+  *            only when F0 holds an unresolved IRI: round 1's candidates
+  *            come from the pass that folded F0 (the snapshot write, the job
+  *            that fills the triple cache, or the scan of line-format RDF
+  *            inputs), or from a salted prefix aggregation when a task went
+  *            over its prefix budget, with `countGarbage`, or after a
+  *            declaring RDF input -> driver expansion -> registry; later
+  *            rounds subtract the added namespaces' subtrees from round 1's
   *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
   *            re-folded (F1); `ignoreUnknown` filters the merged keys on the
@@ -132,7 +139,15 @@ object Pipeline {
   }
 
   def run(spark: SparkSession, pages: Dataset[Page], cfg: Config): Result =
-    runExtracting(spark, cfg, () => extractTriples(pages).toDF())
+    run(spark, pages, cfg, Inference.IriTrieSize)
+
+  /** [[run]], with `prefixBudget` bounding the distinct prefixes that the
+    * tasks of the pass folding F0 hold together while they count inference
+    * round 1 (tests force the fallback with 0).
+    */
+  private[graft] def run(spark: SparkSession, pages: Dataset[Page], cfg: Config,
+      prefixBudget: Int): Result =
+    runExtracting(spark, cfg, () => extractTriples(pages).toDF(), prefixBudget)
 
   /** [[run]] over an already-projected (url, text) relation (see
     * [[extractTriplesUrlText]]): identical stages and outputs — the page
@@ -142,32 +157,49 @@ object Pipeline {
     */
   def runUrlText(
       spark: SparkSession, urlText: Dataset[(String, String)], cfg: Config): Result =
-    runExtracting(spark, cfg, () => extractTriplesUrlText(urlText).toDF())
+    runExtracting(spark, cfg, () => extractTriplesUrlText(urlText).toDF(), Inference.IriTrieSize)
 
-  private def runExtracting(
-      spark: SparkSession, cfg: Config, extracted: () => DataFrame): Result = {
+  /** Inference round 1's prefix count, folded with F0 when inference runs
+    * and counts no garbage domains (the gate of [[RdfPipeline.run]]'s scan).
+    */
+  private def round1Fold(cfg: Config, prefixBudget: Int): Option[Inference.PrefixFold] =
+    Option.when(cfg.inferNs && cfg.maxInferenceRounds > 0 && !cfg.countGarbage)(
+      Inference.PrefixFold(Normalize.UnresolvedIriColumns, cfg.minNsSize, cfg.maxCollected,
+        prefixBudget))
+
+  /** F0 over `triples` under `r0` in one job, which also counts `round1`. */
+  private def foldF0(triples: DataFrame, r0: Registry,
+      round1: Option[Inference.PrefixFold]): Normalize.Counted =
+    Normalize.countRowsBy(Normalize.summaryKeys(triples, r0, unresolved = round1.isDefined),
+      Seq(Normalize.KeyColumns), round1)
+
+  private def runExtracting(spark: SparkSession, cfg: Config, extracted: () => DataFrame,
+      prefixBudget: Int): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
 
     // ---- Stage A: extraction (snapshot + resume) -------------------------
     val r0 = Registry.community()
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
+    val round1 = round1Fold(cfg, prefixBudget)
     var cached: Option[DataFrame] = None
     releaseOnFailure(cached) {
       val (triples, f0) = timed(metrics, "extract") {
-        val (df, folded) =
+        val (df, written) =
           if (cfg.resume)
             Snapshot.resumeOrWriteFolded(spark, triplesDir, "triples", Seq("pages"),
-              df => Normalize.summaryKeys(df, r0, df.columns.toSeq))(extracted())
+              df => Normalize.summaryKeys(df, r0, df.columns.toSeq, round1.isDefined),
+              round1)(extracted())
           else (extracted(), None)
-        // F0, the summary fold under r0, rides the extraction job when it
-        // writes the snapshot now, else the job that fills the cache when the
-        // table is cached, else it is a job of its own. Snapshot-backed runs
-        // re-read the snapshot instead of caching a second corpus-sized copy.
+        // F0, the summary fold under r0, and round 1's prefix count ride the
+        // extraction job when it writes the snapshot now, else the job that
+        // fills the cache when the table is cached, else they are a job of
+        // their own. Snapshot-backed runs re-read the snapshot instead of
+        // caching a second corpus-sized copy.
         val cache = cfg.cacheTriples.getOrElse(!cfg.resume)
         if (cache) cached = Some(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val out = cached.getOrElse(df)
-        val f0 = folded.filter(_ => !cache).getOrElse(Normalize.foldKeys(out, r0))
-        ((out, f0), f0.values.sum)
+        val f0 = written.filter(_ => !cache).getOrElse(foldF0(out, r0, round1))
+        ((out, f0), f0.partitionRows.sum)
       }
       runFromTriples(spark, triples, r0, f0, cfg, triplesDir, metrics)
     }
@@ -187,6 +219,7 @@ object Pipeline {
   ): Result = {
     val metrics = Vector.newBuilder[StageMetrics]
     val r0 = Registry.community()
+    val round1 = round1Fold(cfg, Inference.IriTrieSize)
     val triplesDir = Paths.get(cfg.outDir, "triples").toString
     var cached: Option[DataFrame] = None
     releaseOnFailure(cached) {
@@ -200,15 +233,17 @@ object Pipeline {
             computed += 1
           }
         }
-        // always snapshot-backed here: the chunk parquet is the materialization
-        val read = spark.read.parquet((0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
+        // always snapshot-backed here: the chunk parquet is the materialization,
+        // read with the schema its manifests record
+        val read = Snapshot.read(spark, (0 until nChunks).map(k => s"$triplesDir/chunk=$k"): _*)
         if (cfg.cacheTriples.contains(true))
           cached = Some(read.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         val df = cached.getOrElse(read)
         metrics += StageMetrics("chunks_computed", computed.toLong, 0L)
-        // the summary fold under r0 (F0) is the row count (and fills the cache)
-        val f0 = Normalize.foldKeys(df, r0)
-        ((df, f0), f0.values.sum)
+        // the summary fold under r0 (F0) is the row count (and fills the
+        // cache); it also counts inference round 1
+        val f0 = foldF0(df, r0, round1)
+        ((df, f0), f0.partitionRows.sum)
       }
       runFromTriples(spark, triples, r0, f0, cfg, triplesDir, metrics)
     }
@@ -278,15 +313,16 @@ object Pipeline {
       spark: SparkSession,
       triples: DataFrame,
       r0: Registry,
-      f0: Map[Row, Long],
+      f0: Normalize.Counted,
       cfg: Config,
       triplesDir: String,
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
   ): Result = {
-    val (registry, hk, inferredAll, summary) =
-      summarizeAndSink(spark, triples, r0, f0, None, cfg, Seq(triplesDir), metrics)
+    val (registry, hk, inferredAll, summary) = summarizeAndSink(spark, triples, r0,
+      f0.maps.head, f0.prefixes.flatMap(_.candidates), cfg, Seq(triplesDir), metrics)
     val ms = metrics.result()
-    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil))
+    TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil, f0.partitionRows,
+      f0.prefixes.fold(Seq.empty[Option[Int]])(_.taskEntries)))
     Result(summary, registry, triples, ms, inferredAll)
   }
 
@@ -364,7 +400,8 @@ object Pipeline {
     *
     * Round 1 takes `round1` as its candidates when a pass that runs anyway
     * counted them (the scan of line-format RDF inputs,
-    * [[graft.sinks.Metrics.tally]]). Otherwise it scans the triple table
+    * [[graft.sinks.Metrics.tally]]; the pages triple snapshot's write or the
+    * job that fills the triple cache). Otherwise it scans the triple table
     * once (explode s/p/o, keep registry misses), aggregates the segment
     * prefixes and collects those at or above `minNsSize`, the same
     * candidates. Rounds 2+ run on the driver: the unresolved set only
@@ -447,13 +484,14 @@ object Pipeline {
     }.mkString("[\n", ",\n", "\n]")
 
   /** tasks.json (reference `MetaInfo`, `src/meta_info.rs:31-46,104-141,241-246`):
-    * per-stage roll-ups (duration + row count), inference housekeeping, and —
-    * on the RDF-file path — per-file byte size and kind tallies, the rows
-    * of each scan partition (`scan_partition_rows`, its skew; omitted when
-    * empty) and, when the scan counted round 1, each scan task's distinct
-    * prefixes (`scan_prefix_entries`, null for a task over its budget,
-    * whose run then counted round 1 in a Spark aggregate; omitted when
-    * empty).
+    * per-stage roll-ups (duration + row count), inference housekeeping, on
+    * the RDF-file path per-file byte size and kind tallies, and the rows of
+    * each partition of the pass that folded F0 (`scan_partition_rows`: the
+    * RDF scan, or on the pages path the snapshot write or the job that
+    * fills the cache; its skew; omitted when empty) and, when that pass
+    * counted round 1, each of its tasks' distinct prefixes
+    * (`scan_prefix_entries`, null for a task over its budget, whose run
+    * then counted round 1 in a Spark aggregate; omitted when empty).
     */
   def tasksJson(ms: Seq[StageMetrics], hk: InferHk, files: Seq[FileMetrics],
       scanPartitionRows: Seq[Long] = Nil, scanPrefixEntries: Seq[Option[Int]] = Nil): String = {

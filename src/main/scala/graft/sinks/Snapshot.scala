@@ -1,11 +1,14 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import graft.ns.Inference
+import graft.summarize.Normalize
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.util.AccumulatorV2
-import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot emulation (north rule: per-partition checkpoint with
@@ -13,8 +16,9 @@ import scala.jdk.CollectionConverters._
   *
   * No Iceberg runtime jars exist in the sandbox (`/opt/spark/jars`), so the
   * snapshot layout is emulated — documented in BASELINE.md: a Parquet directory
-  * plus a `manifest.json` carrying schema, row count, per-partition row counts,
-  * input lineage, and the wall time of the producing job (and a line-oriented
+  * plus a `manifest.json` carrying schema, row count, the rows of each write
+  * task (so of each part file), input lineage, and the wall time of the
+  * producing job (and a line-oriented
   * `_lineage.tsv` sidecar for machine reads). `resumeOrWrite` is the
   * idempotent-resume primitive every pipeline stage goes through: it reuses a
   * snapshot only when the manifest exists, the recorded input lineage equals
@@ -84,79 +88,129 @@ object Snapshot {
   def write(df: DataFrame, dir: String, table: String, inputs: Seq[String]): DataFrame =
     writeFolded(df, dir, table, inputs, identity)._1
 
-  /** [[write]], also returning the row counts per key of `df`: `keys(df)`
-    * holds `df`'s columns, then the key columns. The keys are folded inside
-    * the write job itself, each task counting the keys of the rows it
-    * writes in a local map that reaches the driver through an accumulator
-    * (a result task's accumulator updates are applied once per partition,
-    * whatever the retries), so the write pays the key columns' evaluation
-    * but no second pass. The per-partition counts of the read-back come from
-    * one single-stage job that reads no column
-    * ([[graft.summarize.Normalize.countRows]] over `spark_partition_id()`),
-    * not a grouped aggregate with its exchange.
+  /** [[write]], also returning what the write job counted, in
+    * [[Normalize.countRowsBy]]'s shape: the row counts per key of `df`, the
+    * rows each write task wrote (by partition id, one entry per task, so per
+    * part file), and with `prefixes` round 1's prefix counts. `keys(df)`
+    * holds `df`'s columns, then the key columns and the `prefixes` columns,
+    * which are counted but never written. Each task counts the rows it
+    * writes, their keys in a local map and their IRIs in an
+    * [[Inference.PrefixMap]] under its share of the fold's budget, and
+    * reports them when its input ends; the driver merges the reports as
+    * tasks finish ([[TaskReports]]), the prefixes through an
+    * [[Inference.PrefixMerge]]. So the write pays the key columns'
+    * evaluation but no second pass. The manifest's per-partition counts are
+    * the tasks' rows, and the snapshot is read back with the schema it was
+    * written with, so no job reads it back.
     */
   private def writeFolded(df: DataFrame, dir: String, table: String, inputs: Seq[String],
-      keys: DataFrame => DataFrame): (DataFrame, Map[Row, Long]) = {
+      keys: DataFrame => DataFrame,
+      prefixes: Option[Inference.PrefixFold] = None): (DataFrame, Normalize.Counted) = {
     val t0 = System.nanoTime()
     val spark = df.sparkSession
     val keyed = keys(df)
     val width = df.schema.length
     require(keyed.columns.take(width).sameElements(df.columns), "keys(df) must start with df's columns")
-    val keyCounts = new RowCounts
-    val rows =
-      if (keyed.schema.length == width) df
-      else {
-        spark.sparkContext.register(keyCounts, "snapshot.keys")
-        val schema = keyed.schema
-        val rdd = keyed.queryExecution.toRdd.mapPartitions { it =>
-          def project(ords: Seq[Int]) = UnsafeProjection.create(
-            ords.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
-          val row = project(0 until width)
-          val key = project(width until schema.length)
-          val counts = new graft.summarize.Normalize.KeyCounts
-          var flushed = false
-          new Iterator[InternalRow] {
-            def hasNext: Boolean = it.hasNext || {
-              if (!flushed) {
-                flushed = true
-                keyCounts.add(counts.toRows(StructType(schema.drop(width))).toMap)
-              }
-              false
-            }
-            def next(): InternalRow = {
-              val r = it.next()
-              counts.add(key(r))
-              row(r)
-            }
+    val schema = keyed.schema
+    val iriOrdinals = prefixes.fold(Seq.empty[Int])(_.columns.map(schema.fieldIndex)).toArray
+    val keyOrdinals = (width until schema.length).filterNot(iriOrdinals.contains)
+    val keySchema = StructType(keyOrdinals.map(schema(_)))
+    val rdd = keyed.queryExecution.toRdd
+    val tasks = rdd.getNumPartitions
+    val budget = prefixes.fold(0)(_.taskBudget(tasks))
+    val partitionRows = new Array[Long](tasks)
+    val merged = mutable.HashMap.empty[Row, Long]
+    val prefixMerge = prefixes.map(new Inference.PrefixMerge(_, tasks))
+    var reportedTasks = 0
+    val reports = new TaskReports({ r =>
+      reportedTasks += 1
+      partitionRows(r.partition) = r.rows
+      r.keys.foreach { case (k, n) => merged(k) = merged.getOrElse(k, 0L) + n }
+      prefixMerge.foreach(_.add(r.partition, r.prefixes))
+    })
+    spark.sparkContext.register(reports)
+    val rows = rdd.mapPartitionsWithIndex { (task, it) =>
+      def project(ords: Seq[Int]) = UnsafeProjection.create(
+        ords.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
+      val row: InternalRow => InternalRow =
+        if (schema.length == width) identity else project(0 until width)
+      val key = if (keyOrdinals.isEmpty) null else project(keyOrdinals)
+      val counts = new Normalize.KeyCounts
+      val prefixMap = if (iriOrdinals.isEmpty) null else new Inference.PrefixMap(budget)
+      var n = 0L
+      var reported = false
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = it.hasNext || {
+          if (!reported) {
+            reported = true
+            reports.add(TaskReport(task, n, counts.toRows(keySchema),
+              Option(prefixMap).flatMap(_.result)))
           }
+          false
         }
-        org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, rdd, df.schema)
+        def next(): InternalRow = {
+          val r = it.next()
+          n += 1
+          if (key != null) counts.add(key(r))
+          var g = 0
+          while (g < iriOrdinals.length) {
+            if (!r.isNullAt(iriOrdinals(g))) prefixMap.add(r.getUTF8String(iriOrdinals(g)))
+            g += 1
+          }
+          row(r)
+        }
       }
-    rows.write.mode("overwrite").parquet(dir)
-    val written = spark.read.parquet(dir)
-    val perPart = graft.summarize.Normalize.countRows(written.select(F.spark_partition_id()))
-      .map { case (r, n) => (r.getInt(0), n) }
-      .toSeq
-      .sortBy(_._1)
-    val rowCount = perPart.map(_._2).sum
+    }
+    org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, rows, df.schema)
+      .write.mode("overwrite").parquet(dir)
+    require(reportedTasks == tasks, s"$reportedTasks of the write's $tasks tasks reported")
+    // file sources read every column as nullable
+    val readSchema = StructType(df.schema.fields.map(_.copy(nullable = true)))
+    val rowCount = partitionRows.sum
     val m = Manifest(
-      table, rowCount, perPart, inputs, written.schema.json,
+      table, rowCount, partitionRows.toSeq.zipWithIndex.map(_.swap), inputs, readSchema.json,
       (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
     TtlSink.write(manifestPath(dir), manifestJson(m))
     TtlSink.write(lineagePath(dir), lineageTsv(rowCount, inputs))
-    (written, keyCounts.value)
+    (spark.read.schema(readSchema).parquet(dir),
+      Normalize.Counted(Seq(merged.toMap), partitionRows.toSeq, prefixMerge.map(_.result())))
   }
 
-  /** Row counts merged on the driver as tasks finish. */
-  private final class RowCounts extends AccumulatorV2[Map[Row, Long], Map[Row, Long]] {
-    private var counts = Map.empty[Row, Long]
-    def isZero: Boolean = counts.isEmpty
-    def copy(): RowCounts = { val c = new RowCounts; c.counts = counts; c }
-    def reset(): Unit = counts = Map.empty
-    def add(part: Map[Row, Long]): Unit =
-      part.foreach { case (k, n) => counts = counts.updated(k, counts.getOrElse(k, 0L) + n) }
-    def merge(other: AccumulatorV2[Map[Row, Long], Map[Row, Long]]): Unit = add(other.value)
-    def value: Map[Row, Long] = counts
+  /** What one write task counted: the rows it wrote, their key counts and
+    * its prefixes (None when it counted none or went over its budget).
+    */
+  private final case class TaskReport(partition: Int, rows: Long, keys: Array[(Row, Long)],
+      prefixes: Option[Inference.TaskPrefixes])
+
+  /** Hands each write task's [[TaskReport]] to `onReport` on the driver as
+    * the task finishes: a result task's accumulator update is merged once
+    * per partition, whatever the retries. Registered without a name, so no
+    * report is copied to the listener bus.
+    */
+  private final class TaskReports(@transient private val onReport: TaskReport => Unit)
+      extends AccumulatorV2[TaskReport, Seq[TaskReport]] {
+    private var reports = List.empty[TaskReport]
+    def isZero: Boolean = reports.isEmpty
+    def copy(): TaskReports = { val c = new TaskReports(onReport); c.reports = reports; c }
+    def reset(): Unit = reports = Nil
+    def add(r: TaskReport): Unit = reports ::= r
+    def merge(other: AccumulatorV2[TaskReport, Seq[TaskReport]]): Unit = other.value.foreach(onReport)
+    def value: Seq[TaskReport] = reports
+  }
+
+  /** The schema a snapshot's manifest records: the one it is read with. */
+  private[graft] def manifestSchema(dir: String): StructType = {
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper().readTree(manifestPath(dir).toFile)
+    DataType.fromJson(manifest.get("schema").asText()).asInstanceOf[StructType]
+  }
+
+  /** The snapshots at `dirs`, read with the schema their manifests record,
+    * so no job infers it; they must all record the same one.
+    */
+  def read(spark: SparkSession, dirs: String*): DataFrame = {
+    val schemas = dirs.map(manifestSchema).distinct
+    require(schemas.size == 1, s"snapshots ${dirs.mkString(", ")} record different schemas")
+    spark.read.schema(schemas.head).parquet(dirs: _*)
   }
 
   /** Name of the one part file of a [[writeSmall]] snapshot. */
@@ -250,7 +304,8 @@ object Snapshot {
   /** Idempotent resume: reuse the snapshot ONLY if it is complete, was
     * produced from exactly these `inputs` (recorded lineage), and its parquet
     * row count still matches the recorded count (count() on parquet resolves
-    * from footer metadata — no data scan, cheap even at scale). Any mismatch —
+    * from footer metadata — no data scan, cheap even at scale; the read takes
+    * the manifest's schema, so no job infers it). Any mismatch —
     * different inputs into the same outDir, partial/corrupt data — recomputes
     * instead of silently reusing stale rows.
     */
@@ -262,29 +317,30 @@ object Snapshot {
   )(compute: => DataFrame): DataFrame =
     resumeOrWriteFolded(spark, dir, table, inputs, identity)(compute)._1
 
-  /** [[resumeOrWrite]]; when the snapshot is written now, also the row counts
-    * per key of `keys(compute)` (see [[writeFolded]]), folded by the write
-    * job. None when the snapshot is reused.
+  /** [[resumeOrWrite]]; when the snapshot is written now, also what the
+    * write job counted over `keys(compute)` (see [[writeFolded]]). None when
+    * the snapshot is reused.
     */
   private[graft] def resumeOrWriteFolded(
       spark: SparkSession,
       dir: String,
       table: String,
       inputs: Seq[String],
-      keys: DataFrame => DataFrame
-  )(compute: => DataFrame): (DataFrame, Option[Map[Row, Long]]) = {
+      keys: DataFrame => DataFrame,
+      prefixes: Option[Inference.PrefixFold] = None
+  )(compute: => DataFrame): (DataFrame, Option[Normalize.Counted]) = {
     // any failure reading the manifest/lineage/parquet (e.g. part files
     // deleted while the sidecars survive) means NOT reusable — recompute,
     // exactly as the doc promises, instead of surfacing an AnalysisException
     val reused =
       try isComplete(dir) && readLineage(dir).exists { case (rows, ins) =>
-        ins == inputs && spark.read.parquet(dir).count() == rows
+        ins == inputs && read(spark, dir).count() == rows
       }
       catch { case scala.util.control.NonFatal(_) => false }
-    if (reused) (spark.read.parquet(dir), None)
+    if (reused) (read(spark, dir), None)
     else {
-      val (written, perKey) = writeFolded(compute, dir, table, inputs, keys)
-      (written, Some(perKey))
+      val (written, counted) = writeFolded(compute, dir, table, inputs, keys, prefixes)
+      (written, Some(counted))
     }
   }
 }

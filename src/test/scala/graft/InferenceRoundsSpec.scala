@@ -1,12 +1,14 @@
 package graft
 
+import graft.extract.Synth
 import graft.ns.{Inference, Registry}
 import graft.pipeline.{Pipeline, RdfPipeline}
 import graft.rdf.RdfSource
+import graft.summarize.Normalize
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
@@ -203,5 +205,55 @@ class InferenceRoundsSpec extends AnyFunSuite {
     // the scan, which also counts round 1, and the re-fold; the sample is
     // one more job, run only when something is left unresolved
     assert((jobs, jobsResolved) == (3, 2))
+  }
+
+  /** `Pipeline.run` on 400 Synth pages, with the jobs it starts, its
+    * outputs, its `scan_prefix_entries` and its shuffled bytes.
+    */
+  private def runPages(cfg: Pipeline.Config, budget: Int = Inference.IriTrieSize) = {
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    val pages = Synth.pages(spark, 400)
+    spark.sparkContext.addSparkListener(listener)
+    val ((outs, entries, res), jobs) =
+      try countingJobs { _ =>
+        val out = SparkSuite.tmpDir("rounds-pages")
+        val res = Pipeline.run(spark, pages, cfg.copy(outDir = out), budget)
+        (outputs(out), prefixEntries(out), res)
+      }
+      finally spark.sparkContext.removeSparkListener(listener)
+    res.triples.unpersist()
+    (outs, entries, jobs, shuffled.get, res)
+  }
+
+  test("pages: round 1 rides the snapshot write in 2 jobs; over the prefix budget it counts in Spark and writes the same") {
+    val (ride, rideEntries, rideJobs, rideShuffled, res) = runPages(cfg0)
+    assert(res.inferredNamespaces.nonEmpty)
+    assert(Normalize.unresolvedPositions(Normalize.foldKeys(res.triples, res.registry)).isEmpty)
+    // inference adds namespaces and leaves nothing unresolved: the snapshot
+    // write, which folds F0 and counts round 1, and the re-fold
+    assert((rideJobs, rideShuffled) == ((2, 0L)), res.metrics)
+    assert(rideEntries.exists(e => e.nonEmpty && e.forall(_.exists(_ > 0))), rideEntries)
+    val (fallback, overEntries, fallbackJobs, shuffled, _) = runPages(cfg0, budget = 0)
+    assert(fallback == ride)
+    assert(overEntries.exists(e => e.nonEmpty && e.forall(_.isEmpty)), overEntries)
+    // round 1's aggregate and its exchange
+    assert(fallbackJobs > rideJobs && shuffled > 0L, (rideJobs, fallbackJobs, shuffled))
+    // cached instead of snapshotted: the job that fills the cache counts it
+    val (cached, cachedEntries, cachedJobs, _, _) = runPages(cfg0.copy(resume = false))
+    assert(cached == ride)
+    assert(cachedEntries.exists(e => e.nonEmpty && e.forall(_.exists(_ > 0))), cachedEntries)
+    assert(cachedJobs == rideJobs, (rideJobs, cachedJobs))
+  }
+
+  test("pages: countGarbage counts round 1 in a Spark aggregate and writes the same") {
+    val (ride, _, rideJobs, _, _) = runPages(cfg0)
+    val (gc, entries, jobs, _, _) = runPages(cfg0.copy(countGarbage = true))
+    assert(entries.isEmpty)
+    assert(jobs > rideJobs, (rideJobs, jobs))
+    assert(gc == ride)
   }
 }

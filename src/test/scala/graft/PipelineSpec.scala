@@ -97,8 +97,20 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(out, "vis-data.json")), "UTF-8")
     assert(vis.contains("\"nodes\"") && vis.contains("\"link_num\""))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(out, "all-prefixes.json")))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(out, "tasks.json")))
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(out, "summary", "_manifest.json")))
+    // tasks.json: the rows of each snapshot write task, which the manifest
+    // records too, and the distinct prefixes each counted for round 1
+    import scala.jdk.CollectionConverters._
+    val tasks = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Paths.get(out, "tasks.json").toFile)
+    def longs(field: String) = tasks.get(field).elements().asScala.map(_.asLong).toSeq
+    val partRows = longs("scan_partition_rows")
+    assert(partRows.sum == nTriples)
+    assert(partRows.zipWithIndex.collect { case (n, i) if n > 0 => (i, n) } ==
+      SnapshotFiles.rowsPerPart(spark, java.nio.file.Paths.get(out, "triples").toString))
+    val entries = tasks.get("scan_prefix_entries").elements().asScala.toSeq
+    assert(entries.size == partRows.size && entries.forall(!_.isNull))
+    assert(partRows.zip(longs("scan_prefix_entries")).forall { case (n, e) => (n > 0) == (e > 0) })
   }
 
   test("determinism: identical summary + ttl at different parallelism (north rule)") {
@@ -169,6 +181,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(out, "triples", "chunk=1", "_manifest.json")) == m0)
     assert(r2.triples.count() == n1)
+    // read with the schema the chunks' manifests record, the one Spark infers
+    assert(r2.triples.schema == spark.read.parquet(s"$out/triples/chunk=0").schema)
   }
 
   test("resume: second run reuses the triples snapshot") {
@@ -192,8 +206,13 @@ class PipelineSpec extends AnyFunSuite {
     Snapshot.resumeOrWrite(spark, dir, "t", Seq("inputA"))(df1)
     // same inputs -> reused (manifest untouched)
     val m1 = java.nio.file.Files.getLastModifiedTime(Snapshot.manifestPath(dir))
-    Snapshot.resumeOrWrite(spark, dir, "t", Seq("inputA"))(fail("must not recompute"))
+    val (_, reuseJobs) = SnapshotFiles.jobs(spark)(
+      Snapshot.resumeOrWrite(spark, dir, "t", Seq("inputA"))(fail("must not recompute")))
     assert(java.nio.file.Files.getLastModifiedTime(Snapshot.manifestPath(dir)) == m1)
+    // the check and the read take the manifest's schema: no job infers it,
+    // so the check's count is all the reuse runs
+    assert(SnapshotFiles.jobs(spark)(Snapshot.read(spark, dir))._2 == 0)
+    assert(reuseJobs == SnapshotFiles.jobs(spark)(Snapshot.read(spark, dir).count())._2)
     // different inputs into the same outDir -> recomputed, lineage updated
     val df2 = spark.range(25).toDF("n")
     val r2 = Snapshot.resumeOrWrite(spark, dir, "t", Seq("inputB"))(df2)
@@ -219,17 +238,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(r4.count() == 25)
   }
 
-  test("snapshot manifest: per-partition counts from the single-stage fold") {
+  test("snapshot manifest: per-partition counts from the write tasks") {
     import graft.sinks.Snapshot
     val dir = java.nio.file.Paths.get(SparkSuite.tmpDir("graft-parts"), "t").toString
     val df = spark.range(0, 1000, 1, 5).toDF("n").filter(F.col("n") % 3 =!= 0)
     val written = Snapshot.write(df, dir, "t", Seq("in"))
-    val want = written.groupBy(F.spark_partition_id().as("pid")).count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).toSeq
     val manifest = new String(java.nio.file.Files.readAllBytes(Snapshot.manifestPath(dir)), "UTF-8")
     val got = """\{"id": (\d+), "rows": (\d+)\}""".r.findAllMatchIn(manifest)
       .map(m => (m.group(1).toInt, m.group(2).toLong)).toSeq
-    assert(got == want && got.map(_._2).sum == 666L)
+    // one entry per write task, each the rows of its part file
+    assert(got.map(_._1) == (0 until 5))
+    assert(got == SnapshotFiles.rowsPerPart(spark, dir) && got.map(_._2).sum == 666L)
+    // read back with the written schema, which is the one Spark infers
+    assert(written.schema == spark.read.parquet(dir).schema)
+    assert(Snapshot.manifestSchema(dir) == written.schema)
     // a reused snapshot folds nothing; its lineage keeps the row count
     val (_, fold) = Snapshot.resumeOrWriteFolded(spark, dir, "t", Seq("in"), identity)(
       fail("reused"))
@@ -335,5 +357,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(kinds == Set(Kind.IRI, Kind.LIT_PLAIN, Kind.LIT_LANG, Kind.LIT_TYPED))
     val sKinds = triples.select(F.col("sKind")).distinct().collect().map(_.getByte(0)).toSet
     assert(sKinds == Set(Kind.IRI, Kind.BLANK))
+  }
+}
+
+/** The part files of a snapshot Spark wrote, and the jobs that read it. */
+object SnapshotFiles {
+  /** `body`'s result and the Spark jobs it started. */
+  def jobs[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val a =
+      try body
+      finally { org.apache.spark.ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    (a, n.get)
+  }
+
+  /** The rows of each part file with rows, keyed by the write task that
+    * wrote it (the number in `part-NNNNN-...`), in task order.
+    */
+  def rowsPerPart(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[(Int, Long)] = {
+    val task = """part-(\d+)-""".r.unanchored
+    spark.read.parquet(dir).groupBy(F.input_file_name()).count().collect().toSeq
+      .map { r => val task(n) = r.getString(0); (n.toInt, r.getLong(1)) }
+      .sortBy(_._1)
   }
 }
