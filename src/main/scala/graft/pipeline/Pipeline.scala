@@ -23,10 +23,10 @@ import java.nio.file.Paths
   *   Stage B  namespace inference rounds over still-unresolved IRIs, run
   *            only when F0 holds an unresolved IRI: round 1's candidates
   *            come from the pass that folded F0 (the snapshot write, the job
-  *            that fills the triple cache, or the scan of line-format RDF
-  *            inputs), or from a salted prefix aggregation when a task went
-  *            over its prefix budget, with `countGarbage`, or after a
-  *            declaring RDF input -> driver expansion -> registry; later
+  *            that fills the triple cache, or the RDF scan), or from a
+  *            salted prefix aggregation when a task went over its prefix
+  *            budget, with `countGarbage`, or when the RDF scan's registry
+  *            missed a declaration -> driver expansion -> registry; later
   *            rounds subtract the added namespaces' subtrees from round 1's
   *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
@@ -160,9 +160,9 @@ object Pipeline {
     runExtracting(spark, cfg, () => extractTriplesUrlText(urlText).toDF(), Inference.IriTrieSize)
 
   /** Inference round 1's prefix count, folded with F0 when inference runs
-    * and counts no garbage domains (the gate of [[RdfPipeline.run]]'s scan).
+    * and counts no garbage domains.
     */
-  private def round1Fold(cfg: Config, prefixBudget: Int): Option[Inference.PrefixFold] =
+  private[pipeline] def round1Fold(cfg: Config, prefixBudget: Int): Option[Inference.PrefixFold] =
     Option.when(cfg.inferNs && cfg.maxInferenceRounds > 0 && !cfg.countGarbage)(
       Inference.PrefixFold(Normalize.UnresolvedIriColumns, cfg.minNsSize, cfg.maxCollected,
         prefixBudget))
@@ -303,11 +303,12 @@ object Pipeline {
   }
 
   /** Runs `body`; when it throws, first unpersists what `cached` holds by
-    * then, so a failed run leaves no cached blocks behind.
+    * then, waiting for its blocks to go, so a failed run leaves no cached
+    * blocks behind.
     */
   private[pipeline] def releaseOnFailure[A](cached: => Option[DataFrame])(body: => A): A =
     try body
-    catch { case e: Throwable => cached.foreach(_.unpersist()); throw e }
+    catch { case e: Throwable => cached.foreach(_.unpersist(blocking = true)); throw e }
 
   private def runFromTriples(
       spark: SparkSession,
@@ -399,12 +400,11 @@ object Pipeline {
   /** Stage B: inference rounds to the order-independent fixed point.
     *
     * Round 1 takes `round1` as its candidates when a pass that runs anyway
-    * counted them (the scan of line-format RDF inputs,
-    * [[graft.sinks.Metrics.tally]]; the pages triple snapshot's write or the
-    * job that fills the triple cache). Otherwise it scans the triple table
-    * once (explode s/p/o, keep registry misses), aggregates the segment
-    * prefixes and collects those at or above `minNsSize`, the same
-    * candidates. Rounds 2+ run on the driver: the unresolved set only
+    * counted them (the RDF scan, [[RdfPipeline.scanFold]]; the pages triple
+    * snapshot's write or the job that fills the triple cache). Otherwise it
+    * scans the triple table once (explode s/p/o, keep registry misses),
+    * aggregates the segment prefixes and collects those at or above
+    * `minNsSize`, the same candidates. Rounds 2+ run on the driver: the unresolved set only
     * shrinks, so the next round's candidates are this round's minus the
     * subtrees of the namespaces it added ([[Inference.nextCandidates]]).
     * Rounds stop when one adds nothing or no candidate is left.
@@ -491,17 +491,26 @@ object Pipeline {
     * fills the cache; its skew; omitted when empty) and, when that pass
     * counted round 1, each of its tasks' distinct prefixes
     * (`scan_prefix_entries`, null for a task over its budget, whose run
-    * then counted round 1 in a Spark aggregate; omitted when empty).
+    * then counted round 1 in a Spark aggregate; omitted when empty). The
+    * RDF scan also records the rows each of its tasks cached for the later
+    * passes (`scan_cached_rows`) and, when some input is Turtle, what became
+    * of the declarations read at the files' heads (`decl_heads`: "held"
+    * when they gave the full parse's registry, so the scan's F0 and round 1
+    * stand; "missed" when they did not, so a `fold` stage ran; "skipped"
+    * when their read went over a bound).
     */
   def tasksJson(ms: Seq[StageMetrics], hk: InferHk, files: Seq[FileMetrics],
-      scanPartitionRows: Seq[Long] = Nil, scanPrefixEntries: Seq[Option[Int]] = Nil): String = {
+      scanPartitionRows: Seq[Long] = Nil, scanPrefixEntries: Seq[Option[Int]] = Nil,
+      scanCachedRows: Seq[Long] = Nil, declHeads: Option[String] = None): String = {
     val filesJson = files.map { f =>
       s"""    {"file": ${Registry.jstr(f.file)}, "size_bytes": ${f.sizeBytes}, "triples": ${f.triples}, "iris": ${f.iris}, "blanks": ${f.blanks}, "literals": ${f.literals}}"""
     }.mkString("[\n", ",\n", "\n  ]")
     def field(name: String, values: Seq[String]) =
       if (values.isEmpty) "" else s"""\n  "$name": ${values.mkString("[", ", ", "]")},"""
     val scanJson = field("scan_partition_rows", scanPartitionRows.map(_.toString)) +
-      field("scan_prefix_entries", scanPrefixEntries.map(_.fold("null")(_.toString)))
+      field("scan_prefix_entries", scanPrefixEntries.map(_.fold("null")(_.toString))) +
+      field("scan_cached_rows", scanCachedRows.map(_.toString)) +
+      declHeads.fold("")(h => s"""\n  "decl_heads": ${Registry.jstr(h)},""")
     s"""{
   "stages": ${metricsJson(ms).linesIterator.mkString("\n  ")},$scanJson
   "infer_hk": {"rounds": ${hk.rounds}, "wall_ms": ${hk.wallMs}, "inferred_ns": ${hk.inferredNs}, "added_ns": ${hk.addedNs}, "discarded_ns": ${hk.discardedNs}, "example_unresolved": ${hk.exampleUnresolved.map(Registry.jstr).mkString("[", ", ", "]")}},

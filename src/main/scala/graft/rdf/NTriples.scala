@@ -56,19 +56,35 @@ object NTriples {
       else fail("expected IRI or blank node subject")
     }
 
+    /** An IRIREF's text: a slice of the line when it holds no escape. */
     def iriRef(): String = {
       expect('<')
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != '>') {
-        val c = s.charAt(i)
-        // IRIREF excludes control/space and <"{}|^` (W3C N-Triples [8];
-        // only \u/\U escapes can reach them)
-        if (c <= ' ' || "<\"{}|^`".indexOf(c) >= 0) fail(s"character '$c' in IRIREF")
-        if (c == '\\') { sb.append(uchar()) } else { sb.append(c); i += 1 }
+      val start = i
+      while (i < s.length && s.charAt(i) != '>' && s.charAt(i) != '\\') {
+        checkIriChar(s.charAt(i))
+        i += 1
       }
-      expect('>')
-      sb.toString
+      if (i < s.length && s.charAt(i) == '\\') {
+        val sb = new java.lang.StringBuilder(i - start + 16).append(s, start, i)
+        while (i < s.length && s.charAt(i) != '>') {
+          val c = s.charAt(i)
+          checkIriChar(c)
+          if (c == '\\') sb.append(uchar()) else { sb.append(c); i += 1 }
+        }
+        expect('>')
+        sb.toString
+      } else {
+        val end = i
+        expect('>')
+        s.substring(start, end)
+      }
     }
+
+    // IRIREF excludes control/space and <"{}|^` (W3C N-Triples [8]; only
+    // \u/\U escapes can reach them)
+    private def checkIriChar(c: Char): Unit =
+      if (c <= ' ' || c == '<' || c == '"' || c == '{' || c == '}' || c == '|' || c == '^' ||
+          c == '`') fail(s"character '$c' in IRIREF")
 
     def blankLabel(): String = {
       i += 2 // "_:"
@@ -102,15 +118,24 @@ object NTriples {
       }
     }
 
+    /** A literal's lexical form: a slice of the line when it holds no escape. */
     def stringLiteral(): String = {
       expect('"')
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') sb.append(echar()) else { sb.append(c); i += 1 }
+      val start = i
+      while (i < s.length && s.charAt(i) != '"' && s.charAt(i) != '\\') i += 1
+      if (i < s.length && s.charAt(i) == '\\') {
+        val sb = new java.lang.StringBuilder(i - start + 16).append(s, start, i)
+        while (i < s.length && s.charAt(i) != '"') {
+          val c = s.charAt(i)
+          if (c == '\\') sb.append(echar()) else { sb.append(c); i += 1 }
+        }
+        expect('"')
+        sb.toString
+      } else {
+        val end = i
+        expect('"')
+        s.substring(start, end)
       }
-      expect('"')
-      sb.toString
     }
 
     private def echar(): String = {

@@ -202,21 +202,82 @@ object RdfSource {
     }
   }
 
+  /** A UTF-8 reader over one whole file and the raw stream under it; a
+    * `.gz`/`.bz2` file is wrapped in its Hadoop codec stream.
+    */
+  private def open(conf: Configuration, f: String): (java.io.Closeable, java.io.Reader) = {
+    val path = new Path(f)
+    val raw = path.getFileSystem(conf).open(path)
+    val codec = new CompressionCodecFactory(conf).getCodec(path)
+    val in: java.io.InputStream = if (codec != null) codec.createInputStream(raw) else raw
+    (raw, new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
+  }
+
   /** Parse batches of one whole Turtle file through [[TurtleStream]]
     * (statement-boundary chunker feeding the stateful parser), so task
     * memory is bounded by the longest single statement + one batch — a
     * multi-GB `.ttl` file never materializes as one JVM String (the
     * reference's constant-memory contract, `src/parse.rs:24-51` at
-    * `Readme.md:23` scale). `.gz`/`.bz2` files are wrapped in their Hadoop
-    * codec stream.
+    * `Readme.md:23` scale).
     */
   private def turtle(conf: Configuration, f: String): Iterator[Turtle.Result] = {
-    val path = new Path(f)
-    val raw = path.getFileSystem(conf).open(path)
+    val (raw, reader) = open(conf, f)
     Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => raw.close()))
-    val codec = new CompressionCodecFactory(conf).getCodec(path)
-    val in: java.io.InputStream = if (codec != null) codec.createInputStream(raw) else raw
-    TurtleStream.batches(new java.io.InputStreamReader(in, StandardCharsets.UTF_8), f)
+    TurtleStream.batches(reader, f)
+  }
+
+  /** Bounds of the driver's read of the Turtle heads ([[headDeclarations]]):
+    * the Turtle files it reads, and the characters it reads of each.
+    */
+  private[graft] val HeadFiles = 256
+  private[graft] val HeadChars = 1 << 20
+
+  /** The `@prefix` declarations at the head of each Turtle file among
+    * `files`: those its parse meets up to the first statement that yields a
+    * triple, read on the driver through [[TurtleStream]], so a compressed
+    * file is decompressed only that far. None when more than [[HeadFiles]]
+    * files are Turtle, or when a head runs past [[HeadChars]] characters or
+    * does not parse (the scan then reports the file).
+    */
+  private[graft] def headDeclarations(
+      conf: Configuration, files: Seq[String]): Option[Seq[PrefixDecl]] = {
+    val ttl = files.filterNot(isLineFormat)
+    if (ttl.size > HeadFiles) None
+    else ttl.foldLeft(Option(Vector.empty[PrefixDecl])) { (acc, f) =>
+      acc.flatMap(decls => head(conf, f).map(decls ++ _))
+    }
+  }
+
+  /** [[headDeclarations]] of one file. */
+  private def head(conf: Configuration, f: String): Option[Seq[PrefixDecl]] = {
+    val (_, reader) = open(conf, f)
+    val bounded = new java.io.Reader {
+      private var left = HeadChars
+      def read(buf: Array[Char], off: Int, len: Int): Int =
+        if (len == 0) 0
+        else if (left == 0)
+          throw new java.io.IOException(s"$f: no triple in its first $HeadChars characters")
+        else {
+          val n = reader.read(buf, off, math.min(len, left))
+          if (n > 0) left -= n
+          n
+        }
+      def close(): Unit = reader.close()
+    }
+    try {
+      // a small buffer, so little is decompressed past the head
+      val batches = TurtleStream.batches(new java.io.BufferedReader(bounded, 1 << 12), f,
+        batchChars = 1)
+      val decls = Vector.newBuilder[PrefixDecl]
+      var triple = false
+      while (!triple && batches.hasNext) {
+        val r = batches.next()
+        decls ++= r.prefixes
+        triple = r.triples.nonEmpty
+      }
+      Some(decls.result())
+    } catch { case scala.util.control.NonFatal(_) => None }
+    finally bounded.close()
   }
 
   /** [[plan]] over the listed files with the session's settings: `k`

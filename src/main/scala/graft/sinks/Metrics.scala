@@ -1,7 +1,6 @@
 package graft.sinks
 
 import graft.model.Kind
-import graft.ns.Inference
 import org.apache.spark.sql.{DataFrame, Row, functions => F}
 
 /** Per-input metrics (reference A4: per-file triples/iris/blanks/literals
@@ -16,41 +15,11 @@ object Metrics {
     */
   final case class Tally(triples: Long, iris: Long, blanks: Long, literals: Long)
 
-  /** What the scan job folds: the kind tallies per source, the summary
-    * keys when it was given a registry, the rows of each partition, and
-    * round 1's prefix counts when it was asked for them.
-    */
-  private[graft] final case class ScanFold(
-      tallies: Map[String, Tally], keys: Option[Map[Row, Long]], partitionRows: Seq[Long],
-      prefixes: Option[Inference.FoldedPrefixes])
+  /** The columns whose row counts give the [[Tally]] of each source. */
+  private[graft] val TallyColumns = Seq("srcUrl", "sKind", "oKind")
 
-  /** [[perSource]] collected to the driver as one single-stage job with no
-    * exchange ([[graft.summarize.Normalize.countRowsBy]] over `(srcUrl,
-    * sKind, oKind)`, whose distinct rows are at most sources × 2 × 5), and
-    * with a `registry` also the summary keys of the triples under it
-    * ([[graft.summarize.Normalize.foldKeys]]) from the same job. Given
-    * `prefixes` as well, the same job counts the segment prefixes of the
-    * IRIs the registry leaves unresolved: inference round 1. Run over a
-    * freshly persisted table, this job is also the one that fills its cache.
-    */
-  private[graft] def tally(triples: DataFrame, registry: Option[graft.ns.Registry],
-      prefixes: Option[Inference.PrefixFold] = None): ScanFold = {
-    import graft.summarize.Normalize
-    val counted = registry match {
-      case Some(r) =>
-        Normalize.countRowsBy(
-          Normalize.summaryKeys(triples, r, TallyColumns, unresolved = prefixes.isDefined),
-          Seq(TallyColumns, Normalize.KeyColumns), prefixes)
-      case None => Normalize.countRowsBy(triples.select(TallyColumns.map(F.col): _*),
-        Seq(TallyColumns))
-    }
-    ScanFold(tallies(counted.maps.head), counted.maps.lift(1), counted.partitionRows,
-      counted.prefixes)
-  }
-
-  private val TallyColumns = Seq("srcUrl", "sKind", "oKind")
-
-  private def tallies(counts: Map[Row, Long]): Map[String, Tally] =
+  /** The tallies of each source from the row counts of [[TallyColumns]]. */
+  private[graft] def tallies(counts: Map[Row, Long]): Map[String, Tally] =
     counts.groupMapReduce(_._1.getString(0)) { case (r, n) =>
       val (s, o) = (r.getByte(1), r.getByte(2))
       def when(c: Boolean) = if (c) n else 0L

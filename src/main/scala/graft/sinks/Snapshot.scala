@@ -2,13 +2,10 @@ package graft.sinks
 
 import graft.ns.Inference
 import graft.summarize.Normalize
+import graft.summarize.PassFold
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.util.AccumulatorV2
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style snapshot emulation (north rule: per-partition checkpoint with
@@ -93,15 +90,11 @@ object Snapshot {
     * rows each write task wrote (by partition id, one entry per task, so per
     * part file), and with `prefixes` round 1's prefix counts. `keys(df)`
     * holds `df`'s columns, then the key columns and the `prefixes` columns,
-    * which are counted but never written. Each task counts the rows it
-    * writes, their keys in a local map and their IRIs in an
-    * [[Inference.PrefixMap]] under its share of the fold's budget, and
-    * reports them when its input ends; the driver merges the reports as
-    * tasks finish ([[TaskReports]]), the prefixes through an
-    * [[Inference.PrefixMerge]]. So the write pays the key columns'
-    * evaluation but no second pass. The manifest's per-partition counts are
-    * the tasks' rows, and the snapshot is read back with the schema it was
-    * written with, so no job reads it back.
+    * which are counted but never written. The counts ride the write
+    * ([[PassFold]]), so the write pays the key columns' evaluation but no
+    * second pass. The manifest's per-partition counts are the tasks' rows,
+    * and the snapshot is read back with the schema it was written with, so
+    * no job reads it back.
     */
   private def writeFolded(df: DataFrame, dir: String, table: String, inputs: Seq[String],
       keys: DataFrame => DataFrame,
@@ -111,91 +104,21 @@ object Snapshot {
     val keyed = keys(df)
     val width = df.schema.length
     require(keyed.columns.take(width).sameElements(df.columns), "keys(df) must start with df's columns")
-    val schema = keyed.schema
-    val iriOrdinals = prefixes.fold(Seq.empty[Int])(_.columns.map(schema.fieldIndex)).toArray
-    val keyOrdinals = (width until schema.length).filterNot(iriOrdinals.contains)
-    val keySchema = StructType(keyOrdinals.map(schema(_)))
-    val rdd = keyed.queryExecution.toRdd
-    val tasks = rdd.getNumPartitions
-    val budget = prefixes.fold(0)(_.taskBudget(tasks))
-    val partitionRows = new Array[Long](tasks)
-    val merged = mutable.HashMap.empty[Row, Long]
-    val prefixMerge = prefixes.map(new Inference.PrefixMerge(_, tasks))
-    var reportedTasks = 0
-    val reports = new TaskReports({ r =>
-      reportedTasks += 1
-      partitionRows(r.partition) = r.rows
-      r.keys.foreach { case (k, n) => merged(k) = merged.getOrElse(k, 0L) + n }
-      prefixMerge.foreach(_.add(r.partition, r.prefixes))
-    })
-    spark.sparkContext.register(reports)
-    val rows = rdd.mapPartitionsWithIndex { (task, it) =>
-      def project(ords: Seq[Int]) = UnsafeProjection.create(
-        ords.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
-      val row: InternalRow => InternalRow =
-        if (schema.length == width) identity else project(0 until width)
-      val key = if (keyOrdinals.isEmpty) null else project(keyOrdinals)
-      val counts = new Normalize.KeyCounts
-      val prefixMap = if (iriOrdinals.isEmpty) null else new Inference.PrefixMap(budget)
-      var n = 0L
-      var reported = false
-      new Iterator[InternalRow] {
-        def hasNext: Boolean = it.hasNext || {
-          if (!reported) {
-            reported = true
-            reports.add(TaskReport(task, n, counts.toRows(keySchema),
-              Option(prefixMap).flatMap(_.result)))
-          }
-          false
-        }
-        def next(): InternalRow = {
-          val r = it.next()
-          n += 1
-          if (key != null) counts.add(key(r))
-          var g = 0
-          while (g < iriOrdinals.length) {
-            if (!r.isNullAt(iriOrdinals(g))) prefixMap.add(r.getUTF8String(iriOrdinals(g)))
-            g += 1
-          }
-          row(r)
-        }
-      }
-    }
-    org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, rows, df.schema)
+    val keyColumns = keyed.columns.toSeq.drop(width)
+      .filterNot(prefixes.fold(Seq.empty[String])(_.columns).contains)
+    val fold = new PassFold(keyed, width, Seq(keyColumns).filter(_.nonEmpty), prefixes)
+    org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, fold.rows, df.schema)
       .write.mode("overwrite").parquet(dir)
-    require(reportedTasks == tasks, s"$reportedTasks of the write's $tasks tasks reported")
+    val counted = fold.counted
     // file sources read every column as nullable
     val readSchema = StructType(df.schema.fields.map(_.copy(nullable = true)))
-    val rowCount = partitionRows.sum
+    val rowCount = counted.partitionRows.sum
     val m = Manifest(
-      table, rowCount, partitionRows.toSeq.zipWithIndex.map(_.swap), inputs, readSchema.json,
+      table, rowCount, counted.partitionRows.zipWithIndex.map(_.swap), inputs, readSchema.json,
       (System.nanoTime() - t0) / 1000000, System.currentTimeMillis())
     TtlSink.write(manifestPath(dir), manifestJson(m))
     TtlSink.write(lineagePath(dir), lineageTsv(rowCount, inputs))
-    (spark.read.schema(readSchema).parquet(dir),
-      Normalize.Counted(Seq(merged.toMap), partitionRows.toSeq, prefixMerge.map(_.result())))
-  }
-
-  /** What one write task counted: the rows it wrote, their key counts and
-    * its prefixes (None when it counted none or went over its budget).
-    */
-  private final case class TaskReport(partition: Int, rows: Long, keys: Array[(Row, Long)],
-      prefixes: Option[Inference.TaskPrefixes])
-
-  /** Hands each write task's [[TaskReport]] to `onReport` on the driver as
-    * the task finishes: a result task's accumulator update is merged once
-    * per partition, whatever the retries. Registered without a name, so no
-    * report is copied to the listener bus.
-    */
-  private final class TaskReports(@transient private val onReport: TaskReport => Unit)
-      extends AccumulatorV2[TaskReport, Seq[TaskReport]] {
-    private var reports = List.empty[TaskReport]
-    def isZero: Boolean = reports.isEmpty
-    def copy(): TaskReports = { val c = new TaskReports(onReport); c.reports = reports; c }
-    def reset(): Unit = reports = Nil
-    def add(r: TaskReport): Unit = reports ::= r
-    def merge(other: AccumulatorV2[TaskReport, Seq[TaskReport]]): Unit = other.value.foreach(onReport)
-    def value: Seq[TaskReport] = reports
+    (spark.read.schema(readSchema).parquet(dir), counted)
   }
 
   /** The schema a snapshot's manifest records: the one it is read with. */

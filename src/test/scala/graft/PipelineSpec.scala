@@ -111,6 +111,8 @@ class PipelineSpec extends AnyFunSuite {
     val entries = tasks.get("scan_prefix_entries").elements().asScala.toSeq
     assert(entries.size == partRows.size && entries.forall(!_.isNull))
     assert(partRows.zip(longs("scan_prefix_entries")).forall { case (n, e) => (n > 0) == (e > 0) })
+    // the RDF scan's own records
+    assert(!tasks.has("scan_cached_rows") && !tasks.has("decl_heads"))
   }
 
   test("determinism: identical summary + ttl at different parallelism (north rule)") {

@@ -169,7 +169,7 @@ class ScanSplitSpec extends AnyFunSuite {
     val n = 20000
     val paths = ntInferShaped(dir, n)
     val scan = RdfSource.scan(spark, paths, 4)
-    val rows = graft.sinks.Metrics.tally(scan.triples.toDF(), None).partitionRows
+    val rows = Normalize.countRowsBy(scan.triples.toDF(), Seq(Seq("srcUrl"))).partitionRows
     assert(rows.size == 4 && rows.sum == n)
     assert(rows.max.toDouble / (rows.sum.toDouble / rows.size) <= 1.35, rows)
 
@@ -267,5 +267,10 @@ class ScanSplitSpec extends AnyFunSuite {
     // leaf per subject
     assert(tasks.get("scan_prefix_entries").elements().asScala.map(_.asLong).toSeq ==
       Seq(253L, 251L, 253L, 251L))
+    // every row holds an unresolved IRI, so every row is cached; no Turtle
+    // file, so no head was read
+    assert(tasks.get("scan_cached_rows").elements().asScala.map(_.asLong).toSeq ==
+      Seq(251L, 249L, 251L, 249L))
+    assert(!tasks.has("decl_heads"))
   }
 }

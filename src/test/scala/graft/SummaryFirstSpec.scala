@@ -127,7 +127,7 @@ class SummaryFirstSpec extends AnyFunSuite {
     }
   }
 
-  test("a fully declared Turtle input runs 2 Spark jobs and shuffles nothing") {
+  test("a fully declared Turtle input runs 1 Spark job, shuffles and caches nothing") {
     val paths = declaredFixture(SparkSuite.tmpDir("sf-jobs-in"))
     val out = SparkSuite.tmpDir("sf-jobs-out")
     val sc = spark.sparkContext
@@ -138,17 +138,23 @@ class SummaryFirstSpec extends AnyFunSuite {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
+    val persisted = sc.getPersistentRDDs.keySet
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     val res =
       try RdfPipeline.run(spark, paths, Pipeline.Config(outDir = out))
       finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
-    res.triples.unpersist()
-    // the scan that fills the cache, and the summary fold
-    assert(jobs.get == 2, res.metrics)
+    // the scan, which also folds the summary keys under the declarations
+    // read at the files' heads
+    assert(jobs.get == 1, res.metrics)
     assert(shuffled.get == 0L)
-    val hk = json.readTree(Paths.get(out, "tasks.json").toFile).get("infer_hk")
+    assert(sc.getPersistentRDDs.keySet == persisted)
+    val tasks = json.readTree(Paths.get(out, "tasks.json").toFile)
+    val hk = tasks.get("infer_hk")
     assert(hk.get("rounds").asInt == 1 && hk.get("example_unresolved").size == 0)
+    assert(tasks.get("decl_heads").asText == "held")
+    assert(tasks.get("scan_cached_rows").elements().asScala.forall(_.asLong == 0L))
+    assert(!res.metrics.exists(_.name == "fold"))
   }
 
   test("a failed sink write propagates and leaves no cached blocks") {
