@@ -106,14 +106,19 @@ object Inference {
   }
 
   /** What a [[PrefixFold]] found: round 1's candidates, or None when a task
-    * went over its budget; and each task's distinct prefixes, None for a
-    * task that went over.
+    * went over its budget; each task's distinct prefixes, None for a task
+    * that went over; and, with the candidates, the IRI occurrences the
+    * tasks walked (every non-null value of the fold's columns).
     */
   private[graft] final case class FoldedPrefixes(
-      candidates: Option[Seq[PrefixCount]], taskEntries: Seq[Option[Int]])
+      candidates: Option[Seq[PrefixCount]], taskEntries: Seq[Option[Int]],
+      occurrences: Option[Long])
 
-  /** One task's prefixes, their least depths and their counts. */
-  private[graft] type TaskPrefixes = (Array[UTF8String], Array[Int], Array[Long])
+  /** One task's prefixes, their least depths and their counts, and the IRI
+    * occurrences it walked.
+    */
+  private[graft] final case class TaskPrefixes(
+      keys: Array[UTF8String], depths: Array[Int], counts: Array[Long], occurrences: Long)
 
   /** A prefix's count and the least depth it was seen at. */
   private final class Slot(var count: Long, var depth: Int)
@@ -124,6 +129,7 @@ object Inference {
     */
   private[graft] final class PrefixMap(budget: Int) {
     private var counts = new java.util.HashMap[UTF8String, Slot]()
+    private var occurrences = 0L
     private val sink: SegPrefixesGen.Sink = (pos, prefix) =>
       if (counts != null) {
         val slot = counts.get(prefix)
@@ -134,8 +140,11 @@ object Inference {
         else counts = null
       }
 
-    /** Counts the segment prefixes of one IRI occurrence. */
-    def add(iri: UTF8String): Unit = if (counts != null) SegPrefixesGen.walk(iri, sink)
+    /** Counts one IRI occurrence and its segment prefixes. */
+    def add(iri: UTF8String): Unit = if (counts != null) {
+      occurrences += 1
+      SegPrefixesGen.walk(iri, sink)
+    }
 
     /** The prefixes, their least depths and their counts. */
     def result: Option[TaskPrefixes] =
@@ -147,7 +156,7 @@ object Inference {
           keys(i) = k; depths(i) = slot.depth; ns(i) = slot.count
           i += 1
         }
-        (keys, depths, ns)
+        TaskPrefixes(keys, depths, ns, occurrences)
       }
   }
 
@@ -157,12 +166,14 @@ object Inference {
     */
   private[graft] final class PrefixMerge(fold: PrefixFold, tasks: Int) {
     private var merged = new java.util.HashMap[UTF8String, Slot]()
+    private var occurrences = 0L
     private val entries = Array.fill[Option[Int]](tasks)(None)
 
     def add(task: Int, part: Option[TaskPrefixes]): Unit = {
-      entries(task) = part.map(_._1.length)
+      entries(task) = part.map(_.keys.length)
       part match {
-        case Some((keys, depths, ns)) if merged != null =>
+        case Some(TaskPrefixes(keys, depths, ns, n)) if merged != null =>
+          occurrences += n
           var i = 0
           while (i < keys.length) {
             val slot = merged.get(keys(i))
@@ -188,7 +199,7 @@ object Inference {
           .map { case (k, slot) => PrefixCount(k.toString, slot.depth, slot.count) }.toVector
       }
       merged = null
-      FoldedPrefixes(candidates, entries.toSeq)
+      FoldedPrefixes(candidates, entries.toSeq, candidates.map(_ => occurrences))
     }
   }
 
@@ -340,11 +351,14 @@ object Inference {
     (h.toSeq.map(c => (c.prefix, c.size, NsSource.Inference: NsSource)), garbage)
   }
 
+  /** How many unresolved IRIs tasks.json lists as examples. */
+  val Examples = 10
+
   /** O6 diagnostic (reference logs example unresolved IRIs,
     * `src/iri_trie.rs:232-236`): a bounded sample of the still-unresolved set,
     * recorded into tasks.json so an operator can see WHAT is not resolving.
     */
-  def sampleUnresolved(iris: DataFrame, n: Int = 10): Seq[String] = {
+  def sampleUnresolved(iris: DataFrame, n: Int = Examples): Seq[String] = {
     // one job over every partition, each task stopping after n rows, then
     // the first n in partition order — where `limit(n).collect()` scans one
     // partition and then scales up, a job per attempt
@@ -425,6 +439,22 @@ object Inference {
       maxCollected: Int = MaxCollected
   ): Boolean =
     candidates.size < maxCollected && added.forall(isSegBoundary)
+
+  /** The IRI occurrences that stay unresolved once the namespaces `added`
+    * (each with its size, its count among its round's candidates) are
+    * registered, from round 1's `occurrences` (every unresolved occurrence
+    * its fold walked), without counting again (chilon knows what is left in
+    * its IriTrie, `src/iri_trie.rs:223-243`). A candidate's count is the
+    * occurrences it is a segment prefix of among those still unresolved in
+    * its round. For a host-gated segment boundary N ([[isSegBoundary]])
+    * those are exactly the occurrences N resolves, and each occurrence is
+    * resolved by one added namespace in one round, so the sizes sum to the
+    * occurrences resolved. None when some added namespace is no such
+    * boundary: it may resolve occurrences its size does not count.
+    */
+  def leftUnresolved(occurrences: Long, added: Seq[(String, Long)]): Option[Long] =
+    Option.when(added.forall { case (ns, _) => isSegBoundary(ns) })(
+      occurrences - added.iterator.map(_._2).sum)
 
   /** The next round's candidates, from this round's and the namespaces it
     * added, without counting again (chilon removes the added namespaces'

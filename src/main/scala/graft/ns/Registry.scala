@@ -207,6 +207,10 @@ object Registry {
   /** Insert a file-declared prefix (reference `handle_pref_decls`,
     * `src/prefixes.rs:249-277`): keep the declared alias when free, generate
     * one when empty or taken; skip when the namespace is already covered.
+    * A namespace without a host, for which [[genAlias]] has none, takes its
+    * taken declared alias plus the smallest free counter from 2 (`a2`,
+    * `a3`, ...), so every declaration with a non-empty alias is registered
+    * whatever order the files are merged in.
     */
   def addDeclared(reg: Registry, ns: String, declAlias: String): Registry =
     addDeclaredAll(reg, Seq(ns -> declAlias))
@@ -227,7 +231,8 @@ object Registry {
       if (!covered) {
         val alias =
           if (declAlias.nonEmpty && !aliases.contains(declAlias)) Some(declAlias)
-          else genAlias(ns, aliases)
+          else genAlias(ns, aliases).orElse(Option.when(declAlias.nonEmpty)(
+            Iterator.from(2).map(declAlias + _).find(!aliases.contains(_)).get))
         alias.foreach { a =>
           val e = NsEntry(a, NsSource.GraphFile)
           byNs += (ns -> e)

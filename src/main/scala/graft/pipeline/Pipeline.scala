@@ -17,9 +17,9 @@ import java.nio.file.Paths
   *            snapshot whose write job also folds the summary keys under the
   *            pre-inference registry (F0), counts each write task's rows for
   *            the manifest and, per task, the segment prefixes of the IRIs
-  *            that registry misses (inference round 1); the snapshot is read
-  *            back with the schema it was written with, so the write is the
-  *            only pass before F1
+  *            that registry misses and their occurrences (inference round
+  *            1); the snapshot is read back with the schema it was written
+  *            with, so the write is the only pass before F1
   *   Stage B  namespace inference rounds over still-unresolved IRIs, run
   *            only when F0 holds an unresolved IRI: round 1's candidates
   *            come from the pass that folded F0 (the snapshot write, the job
@@ -30,8 +30,11 @@ import java.nio.file.Paths
   *            rounds subtract the added namespaces' subtrees from round 1's
   *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
-  *            re-folded (F1); `ignoreUnknown` filters the merged keys on the
-  *            driver
+  *            re-folded (F1); F1 also samples `example_unresolved` when
+  *            round 1's unresolved occurrences less the added namespaces'
+  *            sizes leave some, and a job of its own samples them when that
+  *            count is unknown; `ignoreUnknown` filters the merged keys on
+  *            the driver
   *   Stage D  sinks: output.ttl, all-prefixes.json, vis-data.json, tasks.json,
   *            summary Parquet snapshot, all written on the driver
   *
@@ -320,7 +323,7 @@ object Pipeline {
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
   ): Result = {
     val (registry, hk, inferredAll, summary) = summarizeAndSink(spark, triples, r0,
-      f0.maps.head, f0.prefixes.flatMap(_.candidates), cfg, Seq(triplesDir), metrics)
+      f0.maps.head, f0.prefixes, cfg, Seq(triplesDir), metrics)
     val ms = metrics.result()
     TtlSink.write(Paths.get(cfg.outDir, "tasks.json"), tasksJson(ms, hk, Nil, f0.partitionRows,
       f0.prefixes.fold(Seq.empty[Option[Int]])(_.taskEntries)))
@@ -335,13 +338,18 @@ object Pipeline {
     *   - When no key holds an unresolved IRI, inference round 1 would count
     *     an empty set: it is recorded with 0 rows and no Spark job, and `f0`
     *     is the final summary. Otherwise [[runInference]] runs, with
-    *     `round1` as round 1's candidates when the pass that folded `f0`
-    *     also counted them.
+    *     `round1`'s candidates as round 1's when the pass that folded `f0`
+    *     also counted them under `r0`.
     *   - When inference added namespaces, only the rows they resolve are
     *     re-folded ([[Normalize.refold]], F1), not the whole table.
-    *   - When inference ran and the final keys still hold an unresolved IRI,
-    *     one early-stopping job samples up to 10 of them for the
-    *     housekeeping; otherwise no job samples.
+    *   - `example_unresolved` samples up to [[Inference.Examples]] IRIs the
+    *     final registry leaves unresolved, only when there are some. When
+    *     `round1` counted the unresolved occurrences and every added
+    *     namespace is a segment boundary, the occurrences left are known
+    *     before F1 ([[Inference.leftUnresolved]]): F1 takes the sample when
+    *     some are left and is the plain re-fold when none are. Otherwise,
+    *     when inference ran and the final keys still hold an unresolved
+    *     IRI, one early-stopping job after F1 samples them.
     *   - The sinks and the summary snapshot are written on the driver.
     *
     * Returns the final registry, the housekeeping, the added namespaces and
@@ -352,30 +360,38 @@ object Pipeline {
       triples: DataFrame,
       r0: Registry,
       f0: Map[Row, Long],
-      round1: Option[Seq[Inference.PrefixCount]],
+      round1: Option[Inference.FoldedPrefixes],
       cfg: Config,
       lineage: Seq[String],
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]]
   ): (Registry, InferHk, Vector[String], DataFrame) = {
     // ---- Stage B: inference rounds, when something is unresolved ---------
-    val (registry, hk, inferredAll) =
+    val (registry, hk, added) =
       if (cfg.inferNs && cfg.maxInferenceRounds > 0 && !Normalize.hasUnresolvedIri(f0)) {
         metrics += StageMetrics("infer_round_1", 0L, 0L)
-        (r0, InferHk(1, 0L, 0L, 0L, 0L), Vector.empty[String])
-      } else runInference(triples, r0, cfg, metrics, round1)
+        (r0, InferHk(1, 0L, 0L, 0L, 0L), Vector.empty[(String, Long)])
+      } else runInference(triples, r0, cfg, metrics, round1.flatMap(_.candidates))
+    val inferredAll = added.map(_._1)
+    // the IRI occurrences still unresolved, when round 1's fold counted them
+    val left = round1.flatMap(_.occurrences).filter(_ => added.nonEmpty)
+      .flatMap(Inference.leftUnresolved(_, added))
 
     // ---- Stage C: re-fold what the added namespaces resolve --------------
     val (rows, groups, examples) = timed(metrics, "summarize") {
-      val counts =
-        if (inferredAll.isEmpty) f0
-        else Normalize.refold(triples, f0, inferredAll, registry)
+      val (counts, sampled) =
+        if (inferredAll.isEmpty) (f0, Nil)
+        else Normalize.refold(triples, f0, inferredAll, registry,
+          if (left.exists(_ > 0)) Inference.Examples else 0)
       // example IRIs left unresolved under the final registry (O6; the
       // reference logs some, iri_trie.rs:232-236), from the positions where
-      // the final keys hold one; a fully resolved input runs no job here
+      // the final keys hold one; a fully resolved input samples nothing
       val positions = if (hk.rounds > 0) Normalize.unresolvedPositions(counts) else Nil
+      left.foreach(l => require((l > 0) == positions.nonEmpty,
+        s"$l IRI occurrences predicted unresolved, but the final keys hold " +
+          s"unresolved IRIs in ${positions.mkString("[", ", ", "]")}"))
       val examples =
-        if (positions.isEmpty) Nil
-        else Inference.sampleUnresolved(unresolvedIris(triples, registry, positions))
+        if (left.isDefined || positions.isEmpty) sampled
+        else Inference.sampleUnresolved(Normalize.unresolvedIris(triples, registry, positions))
       val (r, g, _, _) = Normalize.fromKeyCounts(counts, registry, cfg.ignoreUnknown)
       ((r, g, examples), r.size.toLong)
     }
@@ -415,6 +431,10 @@ object Pipeline {
     * garbage domains. When a condition fails, or `countGarbage` is set, the
     * next round runs round 1's query again under the grown registry. Nothing
     * is cached.
+    *
+    * Returns the final registry, the housekeeping and each added namespace
+    * with its size, its count among the candidates of the round that added
+    * it.
     */
   private[graft] def runInference(
       triples: DataFrame,
@@ -422,9 +442,9 @@ object Pipeline {
       cfg: Config,
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]],
       round1: Option[Seq[Inference.PrefixCount]] = None
-  ): (Registry, InferHk, Vector[String]) = {
+  ): (Registry, InferHk, Vector[(String, Long)]) = {
     var registry = initial
-    val inferredAll = Vector.newBuilder[String]
+    val addedAll = Vector.newBuilder[(String, Long)]
     var hk = InferHk(0, 0L, 0L, 0L, 0L)
     // this round's candidates when counted already or derived on the
     // driver; None counts
@@ -436,19 +456,18 @@ object Pipeline {
         case Some(c) =>
           (Inference.inferNamespaces(c, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs)._1, 0L, c)
         case None =>
-          Inference.inferFromIrisWithCandidates(unresolvedIris(triples, registry), cfg.salt,
-            cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage, cfg.maxCollected)
+          Inference.inferFromIrisWithCandidates(Normalize.unresolvedIris(triples, registry),
+            cfg.salt, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage,
+            cfg.maxCollected)
       }
       val (reg2, addedNs) = registry.withNamespaces(inferred)
       registry = reg2
-      inferredAll ++= addedNs
+      val sizes = inferred.collect { case (ns, size, _) if addedNs.contains(ns) => ns -> size }
+      addedAll ++= sizes
       val next =
         if (addedNs.isEmpty || !Inference.nextRoundDerivable(candidates, addedNs, cfg.maxCollected))
           None
-        else {
-          val sizes = inferred.collect { case (ns, size, _) if addedNs.contains(ns) => ns -> size }
-          Some(Inference.nextCandidates(candidates, sizes, cfg.minNsSize))
-        }
+        else Some(Inference.nextCandidates(candidates, sizes, cfg.minNsSize))
       // an empty derived set ends the rounds also when garbage is counted
       go = addedNs.nonEmpty && !next.exists(_.isEmpty)
       derived = next.filter(_ => !cfg.countGarbage)
@@ -457,23 +476,8 @@ object Pipeline {
         hk.addedNs + addedNs.size, hk.discardedNs + nGarbage)
       metrics += StageMetrics(s"infer_round_${hk.rounds}", addedNs.size.toLong, wallMs)
     }
-    (registry, hk, inferredAll.result())
+    (registry, hk, addedAll.result())
   }
-
-  /** The IRIs of `triples` that `registry` does not resolve, from the term
-    * `positions` (all three by default), one row per occurrence (the
-    * reference inserts only registry misses into its IriTrie,
-    * `src/prefixes.rs:193-207`).
-    */
-  private def unresolvedIris(
-      triples: DataFrame,
-      registry: Registry,
-      positions: Seq[String] = Seq("s", "p", "o")
-  ): DataFrame =
-    triples
-      .select(F.explode(F.array(positions.map(Normalize.iriCol): _*)).as("iri"))
-      .filter(F.col("iri").isNotNull)
-      .filter(Normalize.resolveCol(F.col("iri"), registry).isNull)
 
   def metricsJson(ms: Seq[StageMetrics]): String =
     ms.map { m =>

@@ -11,23 +11,29 @@ import java.nio.file.Paths
   * namespace summary out (chilon_rs `src/main.rs:38-165`).
   *
   * Stage order: the driver reads the `@prefix` declarations at the head of
-  * each Turtle file (up to its first triple) -> one parallel scan
-  * (line-format files cut into equal byte ranges, the other files read
-  * whole, one task per group) whose single job folds every row under the
-  * community registry plus those head declarations: the per-file tallies,
-  * the summary keys (F0) and the segment prefixes of the IRIs that registry
-  * leaves unresolved (round 1's candidates, like chilon's IriTrie); it
-  * caches only the rows whose keys hold an UNKNOWN, the only rows later
-  * passes read, while the parse hands on every `@prefix` declaration ->
-  * their merge into the community registry (N7, `src/prefixes.rs:249-277`);
-  * when the merge differs from the scan's registry, F0 is one more fold
-  * over a fresh read (`fold`) and round 1 runs its aggregate -> inference
-  * rounds over unresolved IRIs (Stage 2), skipped when F0 holds none ->
-  * the summary (Stage 3): F0 with only the rows the inferred namespaces
-  * resolve re-folded, `ignoreUnknown` applied to the merged keys on the
-  * driver -> sinks (Stage 4: output.ttl, all-prefixes.json, vis-data.json,
-  * the summary snapshot, tasks.json), all written on the driver. The cache
-  * is dropped before [[RdfPipeline.run]] returns.
+  * each Turtle file (up to its first triple) -> one parallel scan (the
+  * files read whole packed onto at most one group per core, the plain
+  * line-format files cut into equal byte ranges on groups of their own;
+  * one task per group, [[RdfSource.plan]]) whose single job folds every
+  * row under the community registry plus those head
+  * declarations: the per-file tallies, the summary keys (F0), and the
+  * segment prefixes and occurrences of the IRIs that registry leaves
+  * unresolved (round 1's candidates, like chilon's IriTrie); it caches the
+  * columns later passes read of only the rows whose keys hold an UNKNOWN,
+  * while the parse hands on every `@prefix` declaration -> their merge
+  * into the community registry (N7, `src/prefixes.rs:249-277`); when the
+  * merge differs from the scan's registry, F0 is one more fold over a
+  * fresh read (`fold`) and round 1 runs its aggregate -> inference rounds
+  * over unresolved IRIs (Stage 2), skipped when F0 holds none -> the
+  * summary (Stage 3): F0 with only the rows the inferred namespaces
+  * resolve re-folded (F1), which also samples `example_unresolved` when
+  * round 1's occurrences less the added namespaces' sizes leave some,
+  * `ignoreUnknown` applied to the merged keys on the driver -> sinks
+  * (Stage 4: output.ttl, all-prefixes.json, vis-data.json, the summary
+  * snapshot, tasks.json), all written on the driver. On an input whose
+  * namespaces are declared that is one Spark job, on an input whose
+  * inference adds namespaces two. The cache is dropped before
+  * [[RdfPipeline.run]] returns.
   */
 object RdfPipeline {
 
@@ -86,11 +92,17 @@ object RdfPipeline {
       cachedRows: Seq[Long],
       prefixes: Option[Inference.FoldedPrefixes])
 
+  /** The columns of a triple that the passes after the scan read:
+    * inference, the re-fold and the sample. `oLang` and `srcUrl` are read
+    * only by the scan's own fold.
+    */
+  private[graft] val CachedColumns: Seq[String] = Seq("s", "sKind", "p", "o", "oKind", "oDt")
+
   /** The scan job: parses `triples` (the capped triples of `scan`) once,
     * folds every row under the community registry plus the Turtle files'
-    * head declarations ([[RdfSource.headDeclarations]]) and persists only
-    * the rows whose keys hold an UNKNOWN, MEMORY_AND_DISK. A failed job
-    * leaves nothing persisted.
+    * head declarations ([[RdfSource.headDeclarations]]) and persists the
+    * [[CachedColumns]] of only the rows whose keys hold an UNKNOWN,
+    * MEMORY_AND_DISK. A failed job leaves nothing persisted.
     */
   private[graft] def scanFold(spark: SparkSession, scan: RdfSource.Scan, triples: DataFrame,
       round1: Option[Inference.PrefixFold]): Scanned = {
@@ -100,12 +112,13 @@ object RdfPipeline {
     val registry = heads.fold(community)(h =>
       Registry.addDeclaredAll(community, RdfSource.mergeOrder(h).map(d => d.ns -> d.alias)))
     val unknown = Seq("s_ns", "p_ns", "o_ns").map(F.col(_) === Normalize.Unknown).reduce(_ || _)
+    // the cached columns first, then the file the tallies count by
     val fold = new PassFold(
-      Normalize.summaryKeys(triples, registry, triples.columns.toSeq, round1.isDefined),
-      triples.columns.length, Seq(Metrics.TallyColumns, Normalize.KeyColumns),
+      Normalize.summaryKeys(triples, registry, CachedColumns :+ "srcUrl", round1.isDefined),
+      CachedColumns.size, Seq(Metrics.TallyColumns, Normalize.KeyColumns),
       round1, Some(unknown))
     val pending = org.apache.spark.sql.graftshim.ColumnShim
-      .fromInternalRows(spark, fold.rows, triples.schema)
+      .fromInternalRows(spark, fold.rows, triples.select(CachedColumns.map(F.col): _*).schema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counted =
       try {
@@ -155,24 +168,20 @@ object RdfPipeline {
       // heads did not settle, a head read over its bound) F0 is one more
       // job over a fresh read of the input and round 1 runs its aggregate.
       // The cache serves either way: a merge registers no namespace that
-      // extends one already registered, so each namespace of the scan's
-      // registry is in r0 or extends one of r0's, and r0 resolves whatever
-      // the scan's registry resolves; unless a declared namespace got no
-      // alias in r0 ([[covers]]), and then the later passes read the input.
+      // extends one already registered, and every declaration with a
+      // non-empty alias gets one, so each namespace of the scan's registry
+      // is in r0 or extends one of r0's, and r0 resolves whatever the
+      // scan's registry resolves.
       val exact = r0.byNs == scanned.registry.byNs
       val f0 = if (exact) scanned.keys else Pipeline.timed(metrics, "fold") {
         val f = Normalize.foldKeys(triples, r0)
         (f, f.size.toLong)
       }
-      val later = if (exact || covers(r0, scanned.registry)) scanned.pending else {
-        scanned.pending.unpersist(blocking = true)
-        triples
-      }
 
       // inference rounds (chilon Stage 2) when F0 shows unresolved IRIs,
       // the summary (Stage 3) and the sinks (Stage 4)
-      val (registry, hk, _, summary) = Pipeline.summarizeAndSink(spark, later, r0, f0,
-        scanned.prefixes.filter(_ => exact).flatMap(_.candidates), cfg, paths, metrics)
+      val (registry, hk, _, summary) = Pipeline.summarizeAndSink(spark, scanned.pending, r0, f0,
+        scanned.prefixes.filter(_ => exact), cfg, paths, metrics)
 
       // per-file metrics (reference Task records, meta_info.rs:31-46): the
       // listed byte size and the scan job's kind tallies, keyed by the srcUrl
@@ -213,10 +222,4 @@ object RdfPipeline {
       RdfResult(summary, registry, triples, ms)
     }
   }
-
-  /** True when `r0` resolves every IRI `scanRegistry` resolves: each of its
-    * namespaces starts with one of `r0`'s.
-    */
-  private def covers(r0: Registry, scanRegistry: Registry): Boolean =
-    scanRegistry.byNs.keysIterator.forall(ns => r0.resolve(ns).isDefined)
 }

@@ -17,7 +17,8 @@ import scala.collection.mutable
   *
   * Every input is listed ([[listFiles]]) and read by one split planner
   * ([[plan]]) and one reader: one task per planned group, at most
-  * `defaultParallelism` groups while each stays under
+  * `defaultParallelism` groups of whole files, and as many groups of cut
+  * ones (twice as many beside whole files) while each stays under
   * `spark.sql.files.maxPartitionBytes`. Format dispatch is by the listed
   * file's extension after stripping `.gz`/`.bz2` (Hadoop codecs decompress
   * transparently):
@@ -136,12 +137,15 @@ object RdfSource {
 
   /** The scan's groups, one task each. Files that must be read whole (those
     * `cuttable` rejects: Turtle, compressed line formats, whose length says
-    * little about their rows) are [[pack]]ed onto `k` groups first; the
-    * cuttable files then fill the groups in listing order, each group up to
-    * `min(maxBytes, ⌈Σ length / k⌉)` bytes, cut at any byte offset. Bytes
-    * left over once the `k` groups are full (inputs larger than `k ×
-    * maxBytes`) open further groups of that size. Empty cuttable files get
-    * no range.
+    * little about their rows or their read time) are [[pack]]ed onto `k`
+    * groups first. The cuttable files then fill `n` groups of their own in
+    * listing order, each up to `min(maxBytes, ⌈Σ cuttable length / n⌉)`
+    * bytes, cut at any byte offset: `n = k` for cuttable files alone, and
+    * `n = 2k` beside whole files, so that no group of unknown read time
+    * also holds a share of lines and a core whose group finishes early
+    * takes the next. Bytes left once the `n` groups are full (inputs larger
+    * than `n × maxBytes`) open further groups of that size. Empty cuttable
+    * files get no range.
     */
   private[graft] def plan(
       files: Seq[(String, Long)],
@@ -153,24 +157,23 @@ object RdfSource {
     require(k >= 1, s"k = $k groups")
     val (cut, whole) = files.partition { case (f, _) => cuttable(f) }
     val length = whole.toMap
-    val packed = if (whole.isEmpty) Nil else pack(whole, k, openCost)
-    val groups = mutable.ArrayBuffer.from(packed.map(_.map(f => Split(f, 0L, length(f))).toVector))
-    while (groups.size < k) groups += Vector.empty
-    val load = mutable.ArrayBuffer.from(groups.map(_.map(_.length).sum))
-    val target = math.max(1L, math.min(maxBytes, (files.map(_._2).sum + k - 1) / k))
-    var g = 0
+    val packed =
+      if (whole.isEmpty) Nil else pack(whole, k, openCost).map(_.map(f => Split(f, 0L, length(f))))
+    val n = if (whole.isEmpty) k else 2 * k
+    val target = math.max(1L, math.min(maxBytes, (cut.map(_._2).sum + n - 1) / n))
+    val groups = mutable.ArrayBuffer.empty[Vector[Split]]
+    var load = target
     cut.foreach { case (f, len) =>
       var off = 0L
       while (off < len) {
-        while (g < groups.size && load(g) >= target) g += 1
-        if (g == groups.size) { groups += Vector.empty; load += 0L }
-        val n = math.min(target - load(g), len - off)
-        groups(g) :+= Split(f, off, n)
-        load(g) += n
-        off += n
+        if (load >= target) { groups += Vector.empty; load = 0L }
+        val take = math.min(target - load, len - off)
+        groups(groups.size - 1) :+= Split(f, off, take)
+        load += take
+        off += take
       }
     }
-    groups.filter(_.nonEmpty).toSeq
+    packed ++ groups
   }
 
   /** The lines of a line-format range, through Hadoop's `LineRecordReader`

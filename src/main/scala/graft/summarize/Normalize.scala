@@ -369,6 +369,21 @@ object Normalize {
         r.getString(i) == Unknown && (i < 2 || !r.getBoolean(3))) => c
     }
 
+  /** The IRIs of `triples` that `registry` does not resolve, from the term
+    * `positions` (all three by default), one row per occurrence in term
+    * order within a row (the reference inserts only registry misses into
+    * its IriTrie, `src/prefixes.rs:193-207`).
+    */
+  private[graft] def unresolvedIris(
+      triples: DataFrame,
+      registry: Registry,
+      positions: Seq[String] = Seq("s", "p", "o")
+  ): DataFrame =
+    triples
+      .select(F.explode(F.array(positions.map(iriCol): _*)).as("iri"))
+      .filter(F.col("iri").isNotNull)
+      .filter(resolveCol(F.col("iri"), registry).isNull)
+
   /** Moves key counts to registry `after` from the registry it extends by
     * the namespaces `added` and nothing else. Re-folds only the rows where
     * some term (s, p, o or a typed literal's datatype) resolves under
@@ -380,13 +395,21 @@ object Normalize {
     * the new one with every position holding an added namespace's alias put
     * back to UNKNOWN, because a term the registry resolved keeps its
     * namespace.
+    *
+    * With `sample` > 0 the same job also takes the first `sample` IRIs of
+    * `triples` that `after` leaves unresolved, as
+    * [[Inference.sampleUnresolved]] over [[unresolvedIris]] takes them
+    * ([[countRowsAndTake]]), from the positions where `counts` holds an
+    * unresolved IRI: an IRI the registry before resolves stays resolved, so
+    * the other positions hold none; otherwise it samples nothing.
     */
   private[graft] def refold(
       triples: DataFrame,
       counts: Map[Row, Long],
       added: Seq[String],
-      after: Registry
-  ): Map[Row, Long] = {
+      after: Registry,
+      sample: Int = 0
+  ): (Map[Row, Long], Seq[String]) = {
     val addedReg = Registry.fromPairs(added.map(ns => ns -> ns), graft.ns.NsSource.Inference)
     def hit(c: Column) = resolveCol(c, addedReg).isNotNull
     val touched = triples.filter(
@@ -400,15 +423,52 @@ object Normalize {
       for (i <- 0 to 2 if (i < 2 || oIsIri) && addedAliases(key.getString(i))) v(i) = Unknown
       Row.fromSeq(v.toSeq)
     }
+    val (moved, examples) =
+      if (sample > 0) countRowsAndTake(summaryKeys(touched, after),
+        unresolvedIris(triples, after, unresolvedPositions(counts)), sample)
+      else (foldKeys(touched, after), Nil)
     val merged = mutable.HashMap.empty[Row, Long] ++= counts
-    foldKeys(touched, after).foreach { case (newKey, n) =>
+    moved.foreach { case (newKey, n) =>
       val old = oldKey(newKey)
       val left = merged.getOrElse(old, 0L) - n
       require(left >= 0, s"re-fold moves $n rows out of key $old, which holds fewer")
       if (left == 0) merged -= old else merged(old) = left
       merged(newKey) = merged.getOrElse(newKey, 0L) + n
     }
-    merged.toMap
+    (merged.toMap, examples)
+  }
+
+  /** [[countRows]] of `rows` and, in the same job, the first `n` strings of
+    * `firsts`' first column in partition order, each task stopping after
+    * its first `n`: what [[Inference.sampleUnresolved]] takes. Both must be
+    * narrow projections of one relation, so that their partitions pair up;
+    * each task reads its partition once for each.
+    */
+  private[graft] def countRowsAndTake(rows: DataFrame, firsts: DataFrame,
+      n: Int): (Map[Row, Long], Seq[String]) = {
+    val schema = rows.schema
+    val rowRdd = rows.queryExecution.toRdd
+    val firstRdd = firsts.select(firsts.columns.head).queryExecution.toRdd
+    require(rowRdd.getNumPartitions == firstRdd.getNumPartitions,
+      s"${rowRdd.getNumPartitions} partitions to count beside ${firstRdd.getNumPartitions} to take from")
+    val merged = mutable.HashMap.empty[Row, Long]
+    val taken = new Array[Array[String]](rowRdd.getNumPartitions)
+    val job = rowRdd.zipPartitions(firstRdd) { (rs, fs) =>
+      val toUnsafe = UnsafeProjection.create(schema)
+      val counts = new KeyCounts
+      rs.foreach {
+        case u: UnsafeRow => counts.add(u)
+        case other => counts.add(toUnsafe(other))
+      }
+      Iterator.single((counts.toRows(schema), fs.take(n).map(_.getUTF8String(0).toString).toArray))
+    }
+    rows.sparkSession.sparkContext.runJob(job,
+      (it: Iterator[(Array[(Row, Long)], Array[String])]) => it.next(),
+      (i: Int, res: (Array[(Row, Long)], Array[String])) => {
+        res._1.foreach { case (k, c) => merged(k) = merged.getOrElse(k, 0L) + c }
+        taken(i) = res._2
+      })
+    (merged.toMap, taken.iterator.flatten.take(n).toSeq)
   }
 
   /** Distinct (alias, ns) groups actually used + blank/unknown flags

@@ -99,7 +99,7 @@ class InferenceRoundsSpec extends AnyFunSuite {
     def infer(cfg: Pipeline.Config) = countingJobs { jobs =>
       val marks = new JobMarks(jobs)
       val (reg, hk, added) = Pipeline.runInference(triples, Registry.community(), cfg, marks)
-      (reg, hk, added, marks.marks.toMap)
+      (reg, hk, added.map(_._1), marks.marks.toMap)
     }
     // nothing is left cached (other suites' RDDs may persist in this JVM)
     def persisted = spark.sparkContext.getPersistentRDDs.keySet
@@ -166,9 +166,9 @@ class InferenceRoundsSpec extends AnyFunSuite {
     // every scan task counted: distinct prefixes per task, and none over
     assert(rideEntries.exists(e => e.nonEmpty && e.forall(_.exists(_ > 0))), rideEntries)
     assert(overEntries.exists(e => e.nonEmpty && e.forall(_.isEmpty)), overEntries)
-    // the scan, the re-fold and the sample; the fallback adds round 1's
-    // aggregate
-    assert(rideJobs == 3 && fallbackJobs > rideJobs, (rideJobs, fallbackJobs))
+    // the scan and the re-fold, which also samples; the fallback adds
+    // round 1's aggregate and the sample's own job
+    assert(rideJobs == 2 && fallbackJobs > rideJobs + 1, (rideJobs, fallbackJobs))
   }
 
   test("countGarbage: round 1 counts in a Spark aggregate, and the scan counts no prefix") {
@@ -186,25 +186,71 @@ class InferenceRoundsSpec extends AnyFunSuite {
     assert((gc._1, gc._2) == (ride._1, ride._2))
   }
 
+  /** `example_unresolved` of a run's tasks.json. */
+  private def examples(out: String): Seq[String] = {
+    val ex = json.readTree(Paths.get(out, "tasks.json").toFile).get("infer_hk").get("example_unresolved")
+    (0 until ex.size).map(ex.get(_).asText)
+  }
+
+  /** What the sample job takes over a fresh read of `paths`: the scan's
+    * partitions in the scan's order, so the first unresolved IRIs of the
+    * rows the run cached.
+    */
+  private def sampledAfresh(paths: Seq[String], reg: Registry): Seq[String] =
+    Inference.sampleUnresolved(Normalize.unresolvedIris(
+      RdfPipeline.truncateIris(RdfSource.scan(spark, paths).triples.toDF()), reg))
+
   test("example_unresolved: sampled under the final registry, only when something is left") {
-    def run(unlisted: Boolean) = countingJobs { _ =>
+    def run(paths: Seq[String]) = countingJobs { _ =>
       val out = SparkSuite.tmpDir("rounds-ex")
-      val res = RdfPipeline.run(spark, tailHostFixture(unlisted), cfg0.copy(outDir = out))
+      val res = RdfPipeline.run(spark, paths, cfg0.copy(outDir = out))
       res.triples.unpersist()
-      val ex = json.readTree(Paths.get(out, "tasks.json").toFile)
-        .get("infer_hk").get("example_unresolved")
-      (res.registry, (0 until ex.size).map(ex.get(_).asText))
+      (res.registry, examples(out))
     }
-    val ((reg, examples), jobs) = run(unlisted = true)
-    assert(examples.nonEmpty && examples.size <= 10)
-    assert(examples.forall(iri => iri.contains(".unlisted.test/") && reg.resolve(iri).isEmpty),
-      examples)
+    val paths = tailHostFixture(unlisted = true)
+    val ((reg, sampled), jobs) = run(paths)
+    assert(sampled.nonEmpty && sampled.size <= 10)
+    assert(sampled.forall(iri => iri.contains(".unlisted.test/") && reg.resolve(iri).isEmpty),
+      sampled)
+    assert(sampled == sampledAfresh(paths, reg))
     // everything resolves after inference: no example
-    val ((_, none), jobsResolved) = run(unlisted = false)
+    val ((_, none), jobsResolved) = run(tailHostFixture(unlisted = false))
     assert(none.isEmpty)
-    // the scan, which also counts round 1, and the re-fold; the sample is
-    // one more job, run only when something is left unresolved
-    assert((jobs, jobsResolved) == (3, 2))
+    // the scan, which also counts round 1 and its unresolved occurrences,
+    // and the re-fold, which takes the sample only when they show that
+    // something is left unresolved
+    assert((jobs, jobsResolved) == (2, 2))
+  }
+
+  test("an added namespace that is no segment boundary: the sample runs after F1 and writes the same") {
+    // the hot leaf http://leaf.test/p registers as a namespace and also
+    // resolves http://leaf.test/pq, which its size does not count, so the
+    // occurrences left are not known before F1
+    val paths = tailHostFixture(unlisted = true) :+ {
+      val knows = "<http://dbpedia.org/ontology/knows>"
+      val p = Paths.get(SparkSuite.tmpDir("rounds-leaf"), "leaf.nt")
+      Files.write(p, ((0 until 120).map(i => s"""<http://leaf.test/p> $knows "v$i" .\n""") ++
+        (0 until 3).map(i => s"""<http://leaf.test/pq> $knows "w$i" .\n""")).mkString
+        .getBytes("UTF-8"))
+      p.toString
+    }
+    def run(budget: Int) = countingJobs { _ =>
+      val out = SparkSuite.tmpDir("rounds-leaf-out")
+      // one round, so that no later round counts again in Spark
+      val res = RdfPipeline.run(spark, RdfSource.scan(spark, paths), paths,
+        cfg0.copy(outDir = out, maxInferenceRounds = 1), budget)
+      res.triples.unpersist()
+      (res.registry, outputs(out), examples(out))
+    }
+    val ((reg, leaf, sampled), jobs) = run(Inference.IriTrieSize)
+    assert(reg.byNs.contains("http://leaf.test/p") && !Inference.isSegBoundary("http://leaf.test/p"))
+    assert(reg.resolve("http://leaf.test/pq").map(_._1).contains("http://leaf.test/p"))
+    assert(sampled.nonEmpty && sampled == sampledAfresh(paths, reg))
+    // the scan, the re-fold and the sample's own job
+    assert(jobs == 3, jobs)
+    // over the prefix budget: round 1's aggregate, the same outputs
+    val ((_, over, overSampled), _) = run(0)
+    assert(over == leaf && overSampled == sampled)
   }
 
   /** `Pipeline.run` on 400 Synth pages, with the jobs it starts, its

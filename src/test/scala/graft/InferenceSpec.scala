@@ -134,7 +134,9 @@ class InferenceSpec extends AnyFunSuite {
     import spark.implicits._
     val minNs = 20L
     // occurrences under a directory, over a few local names
-    def under(dir: String, n: Int): Seq[String] = (0 until n).map(i => dir + "e" + (i % 7))
+    // every eleventh IRI is the directory itself
+    def under(dir: String, n: Int): Seq[String] =
+      (0 until n).map(i => if (i % 11 == 10) dir else dir + "e" + (i % 7))
     val genCount = Gen.oneOf(Gen.choose(3, 15), Gen.choose(20, 60)) // below / above
     // a host with children above and below the threshold, one level deeper
     // under its first child, and sub-threshold tail directories that may
@@ -207,6 +209,77 @@ class InferenceSpec extends AnyFunSuite {
     assert(res.passed, res.status)
     assert(derivedRounds >= 25 && leafRounds > 0 && deepest >= 4,
       (derivedRounds, leafRounds, deepest))
+  }
+
+  test("the occurrences left after inference: round 1's total less the added sizes equals a recount (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import graft.model.{Kind, Triple}
+    import graft.pipeline.Pipeline
+    import graft.ns.Registry
+    import graft.summarize.Normalize
+    val spark = SparkSuite.spark
+    import spark.implicits._
+    val minNs = 20L
+    // every eleventh IRI is the directory itself
+    def under(dir: String, n: Int): Seq[String] =
+      (0 until n).map(i => if (i % 11 == 10) dir else dir + "e" + (i % 7))
+    val genCount = Gen.oneOf(Gen.choose(3, 15), Gen.choose(20, 60))
+    // a host with children above and below the threshold and tail
+    // directories that may sum past it, so the host can register in a
+    // later round; a '#'-namespace; a hot leaf whose namespace, when it
+    // registers, also resolves IRIs it does not count (no segment boundary)
+    def genTree(h: String) = for {
+      kids <- Gen.listOfN(3, genCount)
+      tails <- Gen.choose(0, 8)
+    } yield kids.zipWithIndex.flatMap { case (n, j) => under(s"${h}c$j/", n) } ++
+      (0 until tails).flatMap(k => under(s"${h}t$k/", 6))
+    def genLeaf(h: String) = for { a <- genCount; b <- Gen.choose(0, 4) }
+      yield Seq.fill(a)(h + "p") ++ Seq.fill(b)(h + "pq")
+    val genCorpus = for {
+      trees <- Gen.choose(1, 3)
+      parts <- Gen.sequence[List[Seq[String]], Seq[String]](
+        (0 until trees).map(i => genTree(s"http://h$i.test/")) ++
+          Seq(genCount.map(n => under("http://o.test/onto#", n)), genLeaf("http://x.test/"),
+            Gen.const(under("http://dbpedia.org/resource/", 30))))
+      maxNs <- Gen.choose(3, 8)
+      maxCollected <- Gen.oneOf(2, 1000)
+      seed <- Gen.choose(0L, 1000L)
+    } yield (new scala.util.Random(seed).shuffle(parts.flatten), maxNs, maxCollected)
+    // three IRIs a row: every fifth subject is a blank node and every
+    // fourth object a literal, whose IRIs no pass counts
+    def triples(corpus: Seq[String]) = corpus.grouped(3).filter(_.size == 3).zipWithIndex.map {
+      case (Seq(a, b, c), i) =>
+        val (s, sKind) = if (i % 5 == 0) ("_:b", Kind.BLANK) else (a, Kind.IRI)
+        val (o, oKind) = if (i % 4 == 0) ("lit", Kind.LIT_PLAIN) else (c, Kind.IRI)
+        Triple(s, sKind, b, o, oKind, None, None, "f")
+    }.toSeq.toDF()
+    var predicted = 0
+    var unpredicted = 0
+    var laterRounds = 0
+    var nothingLeft = 0
+    val prop = Prop.forAllNoShrink(genCorpus) { case (corpus, maxNs, maxCollected) =>
+      val t = triples(corpus)
+      val r0 = Registry.community()
+      val fold = Inference.PrefixFold(Normalize.UnresolvedIriColumns, minNs, maxCollected)
+      val folded = Normalize.countRowsBy(Normalize.summaryKeys(t, r0, unresolved = true),
+        Seq(Normalize.KeyColumns), Some(fold)).prefixes.get
+      val cfg = Pipeline.Config(outDir = "", minNsSize = minNs, minDomainOccurs = 5L,
+        maxNs = maxNs, maxCollected = maxCollected)
+      val (reg, hk, added) = Pipeline.runInference(t, r0, cfg,
+        Vector.newBuilder[Pipeline.StageMetrics], folded.candidates)
+      val total = folded.occurrences.get
+      val left = Inference.leftUnresolved(total, added)
+      if (left.isEmpty) unpredicted += 1 else predicted += 1
+      if (hk.rounds > 2) laterRounds += 1
+      if (left.contains(0L)) nothingLeft += 1
+      total == Normalize.unresolvedIris(t, r0).count() &&
+        left.forall(_ == Normalize.unresolvedIris(t, reg).count())
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(25)
+      .withInitialSeed(org.scalacheck.rng.Seed(5L)).withWorkers(1), prop)
+    assert(res.passed, res.status)
+    assert(predicted >= 10 && unpredicted > 0 && laterRounds > 0,
+      (predicted, unpredicted, laterRounds, nothingLeft))
   }
 
   test("segPrefixes matches seg_tree.rs from_test segment set") {

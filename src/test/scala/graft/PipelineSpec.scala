@@ -282,7 +282,7 @@ class PipelineSpec extends AnyFunSuite {
         maxInferenceRounds = 6)
       val (reg, hk, added) =
         Pipeline.runInference(triples, graft.ns.Registry.community(), cfg, metrics)
-      (reg, hk, added, metrics.result())
+      (reg, hk, added.map(_._1), metrics.result())
     }
     val (reg1, hk1, added1, ms1) = infer(maxCollected = 2)
     assert(hk1.rounds >= 3, s"expected >=3 rounds, got ${hk1.rounds}")

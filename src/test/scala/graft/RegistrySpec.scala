@@ -242,6 +242,15 @@ class RegistrySpec extends AnyFunSuite {
     assert(!batch.byNs.contains("http://ex.org/ns/sub/"))
   }
 
+  test("addDeclaredAll: a hostless namespace whose alias is taken gets the alias plus the smallest free counter") {
+    val base = Registry.fromPairs(Seq("a" -> "urn:y:", "a2" -> "urn:z:"), NsSource.Community)
+    val reg = Registry.addDeclaredAll(base,
+      Seq("urn:xx:" -> "a", "urn:ww:" -> "a", "urn:vv:" -> ""))
+    assert(reg.byNs("urn:xx:").alias == "a3" && reg.byNs("urn:ww:").alias == "a4")
+    // no alias declared and none to generate without a host: not registered
+    assert(!reg.byNs.contains("urn:vv:"))
+  }
+
   test("registry construction is linear-ish in pair count (20k synthetic pairs)") {
     val pairs = (0 until 20000).map(i => (s"p$i", s"http://host$i.example.org/ns$i/"))
     val t0 = System.nanoTime()

@@ -101,6 +101,31 @@ class ResolveNsExprSpec extends AnyFunSuite {
     }
   }
 
+  test("byte trie matches char trie on random nested keys (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    // a small alphabet, one- to three-byte UTF-8, so keys nest, share runs
+    // and fork inside a multi-byte character
+    val gStr = (max: Int) => Gen.choose(0, max).flatMap(Gen.listOfN(_,
+      Gen.oneOf("a", "b", "/", "ü", "ý", "例", "例え")).map(_.mkString))
+    val gCase = for {
+      keys <- Gen.choose(1, 30).flatMap(Gen.listOfN(_, gStr(8)))
+      extra <- Gen.listOfN(40, gStr(12))
+      suffixes <- Gen.listOfN(keys.size, gStr(3))
+    } yield (keys.distinct.zipWithIndex, extra ++ keys.zip(suffixes).flatMap { case (k, x) =>
+      Seq(k, k + x, k.dropRight(1), k.take(k.length / 2)) })
+    val prop = Prop.forAllNoShrink(gCase) { case (keys, queries) =>
+      val charTrie = graft.ns.PrefixTrie(keys)
+      val byteTrie = graft.ns.Utf8PrefixTrie(keys)
+      queries.forall { q =>
+        charTrie.resolve(q) ==
+          byteTrie.resolve(org.apache.spark.unsafe.types.UTF8String.fromString(q))
+      }
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(300)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L)).withWorkers(1), prop)
+    assert(res.passed, res.status)
+  }
+
   test("expression survives whole-stage codegen and interpreted eval") {
     val df = Seq("http://dbpedia.org/resource/X", "http://nowhere.invalid/y").toDF("iri")
     // codegen path

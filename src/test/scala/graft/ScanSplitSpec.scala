@@ -71,14 +71,15 @@ class ScanSplitSpec extends AnyFunSuite {
       put(dir, file, (0 until (n * share).toInt).map(i => line(i, f) + "\n").mkString)
     }
 
-  test("plan: whole files packed first, the cut files fill each group to min(cap, ⌈Σ/k⌉)") {
+  test("plan: whole files on k groups, cut files on 2k groups of their own") {
     val files = Seq("a.ttl" -> 30L, "b.nt" -> 100L, "c.nt.gz" -> 10L, "d.nt" -> 0L, "e.nt" -> 41L)
     val cuttable = (f: String) => f.endsWith(".nt")
     val groups = RdfSource.plan(files, 4, Long.MaxValue, 0L, cuttable)
-    // ⌈181 / 4⌉ = 46 bytes per group; the whole files are placed first
-    assert(groups.map(_.map(_.length).sum) == Seq(46, 46, 46, 43))
-    assert(groups.flatten.filter(s => !cuttable(s.path)) ==
-      Seq(RdfSource.Split("a.ttl", 0, 30), RdfSource.Split("c.nt.gz", 0, 10)))
+    // the whole files first, each a group of its own and no cut range
+    // beside it; then ⌈141 / 8⌉ = 18 bytes per cut group
+    assert(groups.take(2) == Seq(Seq(RdfSource.Split("a.ttl", 0, 30)),
+      Seq(RdfSource.Split("c.nt.gz", 0, 10))))
+    assert(groups.drop(2).map(_.map(_.length).sum) == Seq.fill(7)(18) :+ 15)
     // each cut file is covered once, in order and without a gap; empty ones get no range
     for ((f, len) <- files if cuttable(f)) {
       val ranges = groups.flatten.filter(_.path == f)
@@ -86,9 +87,16 @@ class ScanSplitSpec extends AnyFunSuite {
       assert(ranges.map(_.start) == ranges.scanLeft(0L)(_ + _.length).init, f)
     }
     assert(!groups.flatten.exists(_.path == "d.nt"))
-    // the cap opens further groups once the k groups are full
+    // only cut files: k groups of ⌈141 / 4⌉ = 36 bytes; the cap opens
+    // further groups once the k groups are full
+    val cutOnly = files.filter(f => cuttable(f._1))
+    assert(RdfSource.plan(cutOnly, 4, Long.MaxValue, 0L, cuttable).map(_.map(_.length).sum) ==
+      Seq(36, 36, 36, 33))
     val capped = RdfSource.plan(Seq("big.nt" -> 100L), 2, 30L, 0L, cuttable)
     assert(capped.map(_.map(_.length).sum) == Seq(30, 30, 30, 10))
+    // beside whole files the cap bounds the cut groups too
+    assert(RdfSource.plan(files, 4, 10L, 0L, cuttable).drop(2).map(_.map(_.length).sum) ==
+      Seq.fill(14)(10) :+ 1)
     // only whole files: the groups of pack
     assert(RdfSource.plan(files.filterNot(f => cuttable(f._1)), 4, 64L, 7L, cuttable)
       .map(_.map(_.path)) == RdfSource.pack(files.filterNot(f => cuttable(f._1)), 4, 7L))
@@ -151,8 +159,11 @@ class ScanSplitSpec extends AnyFunSuite {
         assert(scan.declarations.map(_.alias) == Seq("ex"), clue)
         val groups = RdfSource.planFiles(spark, files, k)
         assert(scan.triples.rdd.getNumPartitions == groups.size, clue)
-        // under the cap the plain files are cut into more than k groups
-        assert(if (cap == defaultCap) groups.size <= k else groups.size > k, clue)
+        // beside the whole files, the plain files are cut into 2k groups of
+        // their own, and into more under the cap
+        val cutGroups = groups.count(_.forall(s => name(s.path).matches("[ae]\\..*")))
+        assert(groups.size - cutGroups <= k, clue)
+        assert(if (cap == defaultCap) cutGroups == 2 * k else cutGroups > 2 * k, clue)
         // compressed and Turtle files are one range of their full length
         for ((f, len) <- files if !name(f).matches("[ae]\\..*"))
           assert(groups.flatten.filter(_.path == f) == Seq(RdfSource.Split(f, 0, len)), s"$clue $f")
@@ -164,26 +175,30 @@ class ScanSplitSpec extends AnyFunSuite {
     }
   }
 
-  test("rdf_nt_infer-shaped input: partition rows within 1.35 of the mean, plain groups within a line of ⌈Σ/k⌉") {
+  test("rdf_nt_infer-shaped input: balanced rows, plain groups of ⌈Σ/2k⌉") {
     val dir = SparkSuite.tmpDir("split-balance")
     val n = 20000
     val paths = ntInferShaped(dir, n)
     val scan = RdfSource.scan(spark, paths, 4)
     val rows = Normalize.countRowsBy(scan.triples.toDF(), Seq(Seq("srcUrl"))).partitionRows
-    assert(rows.size == 4 && rows.sum == n)
+    // the .nt.bz2 file alone, then the plain files in 2k groups
+    assert(rows.size == 9 && rows.sum == n)
     assert(rows.max.toDouble / (rows.sum.toDouble / rows.size) <= 1.35, rows)
 
-    // plain files only: each group's lines hold ⌈Σ/k⌉ bytes, to within one line
+    // each group's lines hold ⌈Σ/2k⌉ of the plain bytes beside the .nt.bz2
+    // group, and ⌈Σ/k⌉ with plain files only, to within one line
     val plain = RdfSource.listFiles(spark, paths.filterNot(_.endsWith(".bz2")))
-    val target = (plain.map(_._2).sum + 3) / 4
     val longest = paths.filterNot(_.endsWith(".bz2"))
       .flatMap(p => Files.readAllLines(Paths.get(p)).asScala.map(_.getBytes(UTF_8).length + 1)).max
     val conf = spark.sparkContext.hadoopConfiguration
-    val groups = RdfSource.planFiles(spark, plain, 4)
-    assert(groups.size == 4)
-    for (g <- groups) {
-      val bytes = g.flatMap(s => RdfSource.lines(conf, s)).map(_.getBytes(UTF_8).length + 1L).sum
-      assert(math.abs(bytes - target) <= longest, (bytes, target, longest))
+    for ((files, parts) <- Seq((RdfSource.listFiles(spark, paths), 8), (plain, 4))) {
+      val target = (plain.map(_._2).sum + parts - 1) / parts
+      val groups = RdfSource.planFiles(spark, files, 4).filter(_.forall(s => !s.path.endsWith(".bz2")))
+      assert(groups.size == parts)
+      for (g <- groups) {
+        val bytes = g.flatMap(s => RdfSource.lines(conf, s)).map(_.getBytes(UTF_8).length + 1L).sum
+        assert(math.abs(bytes - target) <= longest, (bytes, target, longest))
+      }
     }
   }
 
