@@ -38,6 +38,23 @@ final case class Triple(
     srcUrl: String
 )
 
+/** The ordinals of a triple table's term columns in the `InternalRow`s of
+  * `schema`, read by the per-row functions of the scan (the IRI cap) and of
+  * the summary folds (the summary key).
+  */
+final case class TermOrdinals(s: Int, sKind: Int, p: Int, o: Int, oKind: Int, oDt: Int)
+
+object TermOrdinals {
+
+  /** The term columns, in the order of the fields. */
+  val Columns: Seq[String] = Seq("s", "sKind", "p", "o", "oKind", "oDt")
+
+  def apply(schema: org.apache.spark.sql.types.StructType): TermOrdinals = {
+    val Seq(s, sKind, p, o, oKind, oDt) = Columns.map(schema.fieldIndex)
+    TermOrdinals(s, sKind, p, o, oKind, oDt)
+  }
+}
+
 /** Input-table row per BASELINE.json `input_hint`:
   * Iceberg-style Common-Crawl page table (url, warc_ts, html, text, lang).
   */

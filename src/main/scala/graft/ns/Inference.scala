@@ -93,22 +93,23 @@ object Inference {
     */
   val IriTrieSize = 1000000
 
-  /** Round 1's prefix counts as a per-task fold ([[PrefixMap]]) of the
-    * string `columns`, each a row's unresolved IRI or null, with
+  /** Round 1's prefix counts as a per-task fold ([[PrefixMap]]) of the IRIs
+    * a pass's summary keys leave unresolved (`graft.summarize.PassFold`: s
+    * when an IRI, p, o when an IRI, never a datatype), with
     * [[inferFromIrisWithCandidates]]'s collect: the prefixes counted at
     * least `minNsSize` times, by (count desc, prefix), the first
     * `maxCollected`. Each of n tasks holds at most ⌈`budget` / n⌉ distinct
     * prefixes, so the driver never merges more than `budget`.
     */
   private[graft] final case class PrefixFold(
-      columns: Seq[String], minNsSize: Long, maxCollected: Int, budget: Int = IriTrieSize) {
+      minNsSize: Long, maxCollected: Int, budget: Int = IriTrieSize) {
     def taskBudget(tasks: Int): Int = ((budget.toLong + tasks - 1) / math.max(tasks, 1)).toInt
   }
 
   /** What a [[PrefixFold]] found: round 1's candidates, or None when a task
     * went over its budget; each task's distinct prefixes, None for a task
     * that went over; and, with the candidates, the IRI occurrences the
-    * tasks walked (every non-null value of the fold's columns).
+    * tasks walked (every unresolved IRI the fold counted).
     */
   private[graft] final case class FoldedPrefixes(
       candidates: Option[Seq[PrefixCount]], taskEntries: Seq[Option[Int]],

@@ -40,8 +40,10 @@ final class Registry private (
   @transient lazy val utf8Trie: Utf8PrefixTrie[NsEntry] =
     Utf8PrefixTrie(byNs.map { case (k, v) => (k, v) })
 
-  /** alias -> (namespace, source); aliases are unique by construction. */
-  def aliasMap: Map[String, (String, NsSource)] =
+  /** alias -> (namespace, source); aliases are unique by construction.
+    * Built once per registry (driver-side).
+    */
+  @transient lazy val aliasMap: Map[String, (String, NsSource)] =
     byNs.map { case (ns, e) => e.alias -> (ns, e.source) }
 
   def size: Int = byNs.size
@@ -71,16 +73,27 @@ final class Registry private (
 
 object Registry {
 
-  def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case '\n'          => "\\n"
-      case '\r'          => "\\r"
-      case '\t'          => "\\t"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    } + "\""
+  /** `s` as a JSON string literal. */
+  def jstr(s: String): String = {
+    def plain(c: Char) = c >= ' ' && c != '"' && c != '\\'
+    var i = 0
+    while (i < s.length && plain(s.charAt(i))) i += 1
+    if (i == s.length) return "\"" + s + "\""
+    val b = new java.lang.StringBuilder(s.length + 8).append('"').append(s, 0, i)
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"' => b.append("\\\"")
+        case '\\' => b.append("\\\\")
+        case '\n' => b.append("\\n")
+        case '\r' => b.append("\\r")
+        case '\t' => b.append("\\t")
+        case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+        case c => b.append(c)
+      }
+      i += 1
+    }
+    b.append('"').toString
+  }
 
   /** Vendored community prefix map (replaces the linkml prefixmaps download,
     * reference `src/prefixes/community.rs:16-17,86-97`; this sandbox has zero

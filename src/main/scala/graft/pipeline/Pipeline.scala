@@ -5,8 +5,10 @@ import graft.model.{Page, Triple}
 import graft.ns.{Inference, Registry}
 import graft.sinks.{Snapshot, TtlSink, VisJson}
 import graft.summarize.Normalize
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import java.nio.file.Paths
+import scala.jdk.CollectionConverters._
 
 /** End-to-end KG-construction + namespace-summarization pipeline
   * (BASELINE.json north_rule), the Spark re-expression of chilon's three-stage
@@ -15,8 +17,10 @@ import java.nio.file.Paths
   *   Stage A  pages -> triples (flatMap generator: extractText check, mentions,
   *            entity linking, OpenIE, canonicalization) — checkpointed
   *            snapshot whose write job also folds the summary keys under the
-  *            pre-inference registry (F0), counts each write task's rows for
-  *            the manifest and, per task, the segment prefixes of the IRIs
+  *            pre-inference registry (F0, keyed in the write's tasks from
+  *            the term columns, no projection planned), counts each write
+  *            task's rows for the manifest and, per task, the segment
+  *            prefixes of the IRIs
   *            that registry misses and their occurrences (inference round
   *            1); the snapshot is read back with the schema it was written
   *            with, so the write is the only pass before F1
@@ -30,7 +34,8 @@ import java.nio.file.Paths
   *            rounds subtract the added namespaces' subtrees from round 1's
   *            collected counts on the driver
   *   Stage C  summary: F0, with only the rows the inferred namespaces resolve
-  *            re-folded (F1); F1 also samples `example_unresolved` when
+  *            re-folded (F1, keyed in its tasks); F1 also samples
+  *            `example_unresolved`, from the indices its key walk holds, when
   *            round 1's unresolved occurrences less the added namespaces'
   *            sizes leave some, and a job of its own samples them when that
   *            count is unknown; `ignoreUnknown` filters the merged keys on
@@ -167,14 +172,12 @@ object Pipeline {
     */
   private[pipeline] def round1Fold(cfg: Config, prefixBudget: Int): Option[Inference.PrefixFold] =
     Option.when(cfg.inferNs && cfg.maxInferenceRounds > 0 && !cfg.countGarbage)(
-      Inference.PrefixFold(Normalize.UnresolvedIriColumns, cfg.minNsSize, cfg.maxCollected,
-        prefixBudget))
+      Inference.PrefixFold(cfg.minNsSize, cfg.maxCollected, prefixBudget))
 
   /** F0 over `triples` under `r0` in one job, which also counts `round1`. */
   private def foldF0(triples: DataFrame, r0: Registry,
       round1: Option[Inference.PrefixFold]): Normalize.Counted =
-    Normalize.countRowsBy(Normalize.summaryKeys(triples, r0, unresolved = round1.isDefined),
-      Seq(Normalize.KeyColumns), round1)
+    Normalize.countRowsBy(triples, Nil, Some(r0), round1)
 
   private def runExtracting(spark: SparkSession, cfg: Config, extracted: () => DataFrame,
       prefixBudget: Int): Result = {
@@ -190,8 +193,7 @@ object Pipeline {
         val (df, written) =
           if (cfg.resume)
             Snapshot.resumeOrWriteFolded(spark, triplesDir, "triples", Seq("pages"),
-              df => Normalize.summaryKeys(df, r0, df.columns.toSeq, round1.isDefined),
-              round1)(extracted())
+              Some(r0), round1)(extracted())
           else (extracted(), None)
         // F0, the summary fold under r0, and round 1's prefix count ride the
         // extraction job when it writes the snapshot now, else the job that
@@ -294,11 +296,30 @@ object Pipeline {
     }
   }
 
-  /** Runs one stage and records its wall time and row count in `metrics`. */
+  /** The local property that names the stage whose Spark jobs the thread
+    * starts ([[inStage]]), so a `SparkListener` can attribute each job to its
+    * stage (`onJobStart`'s properties).
+    */
+  val StageProperty = "graft.stage"
+
+  /** Runs `body` with [[StageProperty]] set to `name` on the active
+    * session's context, then puts the previous value back.
+    */
+  private[pipeline] def inStage[A](name: String)(body: => A): A = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val before = sc.map(_.getLocalProperty(StageProperty))
+    sc.foreach(_.setLocalProperty(StageProperty, name))
+    try body
+    finally sc.foreach(_.setLocalProperty(StageProperty, before.orNull))
+  }
+
+  /** Runs one stage ([[inStage]]) and records its wall time and row count in
+    * `metrics`.
+    */
   private[pipeline] def timed[A](
       metrics: scala.collection.mutable.Builder[StageMetrics, Vector[StageMetrics]],
       name: String
-  )(f: => (A, Long)): A = {
+  )(f: => (A, Long)): A = inStage(name) {
     val t0 = System.nanoTime()
     val (a, rows) = f
     metrics += StageMetrics(name, rows, (System.nanoTime() - t0) / 1000000)
@@ -329,6 +350,12 @@ object Pipeline {
       f0.prefixes.fold(Seq.empty[Option[Int]])(_.taskEntries)))
     Result(summary, registry, triples, ms, inferredAll)
   }
+
+  /** The summary table's columns, those of [[graft.model.SummaryRow]]. */
+  private[graft] val SummarySchema: StructType = StructType(Seq(
+    StructField("s_ns", StringType), StructField("p_ns", StringType),
+    StructField("o_ns", StringType), StructField("is_datatype", BooleanType, nullable = false),
+    StructField("occurs", LongType, nullable = false)))
 
   /** Stages B, C and D, summary first (the reference sends only registry
     * misses to inference, `src/prefixes.rs:193-207`).
@@ -395,8 +422,8 @@ object Pipeline {
       val (r, g, _, _) = Normalize.fromKeyCounts(counts, registry, cfg.ignoreUnknown)
       ((r, g, examples), r.size.toLong)
     }
-    val summary = spark.createDataFrame(rows)
-      .select(F.col("s_ns"), F.col("p_ns"), F.col("o_ns"), F.col("is_datatype"), F.col("occurs"))
+    val summaryRows = rows.map(r => Row(r.s_ns, r.p_ns, r.o_ns, r.is_datatype, r.occurs))
+    val summary = spark.createDataFrame(summaryRows.asJava, SummarySchema)
 
     // ---- Stage D: sinks (driver-side; the summary is tiny by construction) -
     timed(metrics, "sinks") {
@@ -406,8 +433,8 @@ object Pipeline {
       val vis = VisJson.build(rows.filter(_.occurs >= cfg.minOccurs), groups.toMap)
       TtlSink.write(Paths.get(cfg.outDir, "vis-data.json"), VisJson.toJson(vis))
       TtlSink.write(Paths.get(cfg.outDir, "used-groups.tsv"), TtlSink.groupsTsv(groups))
-      Snapshot.writeSmall(summary, Paths.get(cfg.outDir, "summary").toString,
-        "summary", lineage, rows.size.toLong)
+      Snapshot.writeSmall(spark, SummarySchema, summaryRows, Paths.get(cfg.outDir, "summary").toString,
+        "summary", lineage)
       ((), rows.size.toLong)
     }
     (registry, hk.copy(exampleUnresolved = examples), inferredAll, summary)
@@ -455,10 +482,11 @@ object Pipeline {
       val (inferred, nGarbage, candidates) = derived match {
         case Some(c) =>
           (Inference.inferNamespaces(c, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs)._1, 0L, c)
-        case None =>
+        case None => inStage(s"infer_round_${hk.rounds + 1}") {
           Inference.inferFromIrisWithCandidates(Normalize.unresolvedIris(triples, registry),
             cfg.salt, cfg.minNsSize, cfg.minDomainOccurs, cfg.maxNs, cfg.countGarbage,
             cfg.maxCollected)
+        }
       }
       val (reg2, addedNs) = registry.withNamespaces(inferred)
       registry = reg2

@@ -1,10 +1,12 @@
 package graft.pipeline
 
 import graft.ns.{Inference, Registry}
-import graft.rdf.RdfSource
+import graft.rdf.{RdfSource, TripleRows}
 import graft.sinks.{Metrics, TtlSink}
 import graft.summarize.{Normalize, PassFold}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.StructType
 import java.nio.file.Paths
 
 /** The reference's own entry point re-expressed: RDF files in, condensed
@@ -14,14 +16,17 @@ import java.nio.file.Paths
   * each Turtle file (up to its first triple) -> one parallel scan (the
   * files read whole packed onto at most one group per core, the plain
   * line-format files cut into equal byte ranges on groups of their own;
-  * one task per group, [[RdfSource.plan]]) whose single job folds every
-  * row under the community registry plus those head
-  * declarations: the per-file tallies, the summary keys (F0), and the
+  * one task per group, [[RdfSource.plan]]) whose tasks build the capped
+  * triple rows themselves ([[graft.rdf.TripleRows]]) and whose single job
+  * folds every row under the community registry plus those head
+  * declarations, keying it in the task ([[graft.summarize.SummaryKey]], no
+  * Catalyst plan): the per-file tallies, the summary keys (F0), and the
   * segment prefixes and occurrences of the IRIs that registry leaves
   * unresolved (round 1's candidates, like chilon's IriTrie); it caches the
   * columns later passes read of only the rows whose keys hold an UNKNOWN,
   * while the parse hands on every `@prefix` declaration -> their merge
-  * into the community registry (N7, `src/prefixes.rs:249-277`); when the
+  * into the community registry (N7, `src/prefixes.rs:249-277`; the scan's
+  * registry itself when the heads gave every declaration); when the
   * merge differs from the scan's registry, F0 is one more fold over a
   * fresh read (`fold`) and round 1 runs its aggregate -> inference rounds
   * over unresolved IRIs (Stage 2), skipped when F0 holds none -> the
@@ -38,7 +43,7 @@ import java.nio.file.Paths
 object RdfPipeline {
 
   /** A run's summary, final registry and stage metrics; `triples` is the
-    * whole triple table, capped ([[truncateIris]]) and not cached: each
+    * whole triple table, capped as the scan caps it and not cached: each
     * action on it reads the input again.
     */
   final case class RdfResult(
@@ -51,25 +56,12 @@ object RdfPipeline {
   /** The reference applies the 200-grapheme cap to EVERY parsed IRI
     * (`normalize_iri`, src/prefixes.rs:431-444), so corpora with >200-char
     * IRIs summarize identically. Applied to s (when IRI), p, o (when IRI) and
-    * the datatype IRI, in one projection that keeps the column order. The
-    * UDF only runs on rows that can exceed the cap: a string has no more
-    * graphemes than UTF-8 bytes, and the byte length is read from the
-    * value's header, so the guard keeps the common path in codegen.
+    * the datatype IRI of every row of `df`, keeping its columns, by the
+    * function the scan applies in its tasks ([[RdfSource.Scan.rows]]).
     */
-  def truncateIris(df: DataFrame): DataFrame = {
-    val trunc = F.udf((s: String) => graft.extract.Canonical.graphemeTruncate(s))
-    def capped(c: String) =
-      F.when(F.octet_length(F.col(c)) > graft.extract.Canonical.MaxGraphemes, trunc(F.col(c)))
-        .otherwise(F.col(c))
-    def cappedIri(c: String, kind: String) =
-      F.when(F.col(kind) === graft.model.Kind.IRI, capped(c)).otherwise(F.col(c))
-    df.select(df.columns.toSeq.map {
-      case "s" => cappedIri("s", "sKind").as("s")
-      case c @ ("p" | "oDt") => capped(c).as(c)
-      case "o" => cappedIri("o", "oKind").as("o")
-      case c => F.col(c)
-    }: _*)
-  }
+  def truncateIris(df: DataFrame): DataFrame =
+    ColumnShim.fromInternalRows(df.sparkSession, TripleRows.cap(df.queryExecution.toRdd, df.schema),
+      df.schema)
 
   def run(spark: SparkSession, paths: Seq[String], cfg: Pipeline.Config): RdfResult =
     run(spark, RdfSource.scan(spark, paths), paths, cfg)
@@ -96,29 +88,27 @@ object RdfPipeline {
     * inference, the re-fold and the sample. `oLang` and `srcUrl` are read
     * only by the scan's own fold.
     */
-  private[graft] val CachedColumns: Seq[String] = Seq("s", "sKind", "p", "o", "oKind", "oDt")
+  private[graft] val CachedColumns: Seq[String] = graft.model.TermOrdinals.Columns
 
-  /** The scan job: parses `triples` (the capped triples of `scan`) once,
-    * folds every row under the community registry plus the Turtle files'
-    * head declarations ([[RdfSource.headDeclarations]]) and persists the
-    * [[CachedColumns]] of only the rows whose keys hold an UNKNOWN,
-    * MEMORY_AND_DISK. A failed job leaves nothing persisted.
+  /** The scan job: parses `scan` once into capped rows
+    * ([[RdfSource.Scan.rows]]), folds every row under the community
+    * registry plus the Turtle files' head declarations
+    * ([[RdfSource.headDeclarations]]), keying it in the task
+    * ([[graft.summarize.SummaryKey]]), and persists the [[CachedColumns]]
+    * of only the rows whose keys hold an UNKNOWN, MEMORY_AND_DISK. A failed
+    * job leaves nothing persisted.
     */
-  private[graft] def scanFold(spark: SparkSession, scan: RdfSource.Scan, triples: DataFrame,
+  private[graft] def scanFold(spark: SparkSession, scan: RdfSource.Scan,
       round1: Option[Inference.PrefixFold]): Scanned = {
     val community = Registry.community()
     val heads = RdfSource.headDeclarations(spark.sparkContext.hadoopConfiguration,
       scan.files.map(_._1))
     val registry = heads.fold(community)(h =>
       Registry.addDeclaredAll(community, RdfSource.mergeOrder(h).map(d => d.ns -> d.alias)))
-    val unknown = Seq("s_ns", "p_ns", "o_ns").map(F.col(_) === Normalize.Unknown).reduce(_ || _)
-    // the cached columns first, then the file the tallies count by
-    val fold = new PassFold(
-      Normalize.summaryKeys(triples, registry, CachedColumns :+ "srcUrl", round1.isDefined),
-      CachedColumns.size, Seq(Metrics.TallyColumns, Normalize.KeyColumns),
-      round1, Some(unknown))
-    val pending = org.apache.spark.sql.graftshim.ColumnShim
-      .fromInternalRows(spark, fold.rows, triples.select(CachedColumns.map(F.col): _*).schema)
+    val fold = new PassFold(scan.rows, TripleRows.schema, Seq(Metrics.TallyColumns), Some(registry),
+      round1, Some(CachedColumns), unknownOnly = true)
+    val pending = ColumnShim
+      .fromInternalRows(spark, fold.rows, StructType(CachedColumns.map(TripleRows.schema(_))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counted =
       try {
@@ -137,7 +127,7 @@ object RdfPipeline {
   private[graft] def run(spark: SparkSession, scan: RdfSource.Scan, paths: Seq[String],
       cfg: Pipeline.Config, prefixBudget: Int = Inference.IriTrieSize): RdfResult = {
     val metrics = Vector.newBuilder[Pipeline.StageMetrics]
-    val triples = truncateIris(scan.triples.toDF())
+    val triples = ColumnShim.fromInternalRows(spark, scan.rows, TripleRows.schema)
     val declaring = scan.files.exists(f => !RdfSource.isLineFormat(f._1))
     var cached: Option[DataFrame] = None
     Pipeline.releaseOnFailure(cached) {
@@ -149,17 +139,18 @@ object RdfPipeline {
       // caches only the rows later passes read: those with an IRI that
       // registry leaves unresolved.
       val scanned = Pipeline.timed(metrics, "scan") {
-        val s = scanFold(spark, scan, triples, Pipeline.round1Fold(cfg, prefixBudget))
+        val s = scanFold(spark, scan, Pipeline.round1Fold(cfg, prefixBudget))
         cached = Some(s.pending)
         (s, s.partitionRows.sum)
       }
 
       // registry: community + per-file @prefix decls (alias from file;
       // generated when the file declares the empty alias), merged in a total
-      // order
+      // order; the scan's registry when the heads held every declaration
       val r0 = Pipeline.timed(metrics, "prefix_decls") {
         val decls = scan.declarations
-        (Registry.addDeclaredAll(Registry.community(), decls.map(d => d.ns -> d.alias)),
+        (if (scanned.heads.exists(RdfSource.mergeOrder(_) == decls)) scanned.registry
+          else Registry.addDeclaredAll(Registry.community(), decls.map(d => d.ns -> d.alias)),
           decls.size.toLong)
       }
 

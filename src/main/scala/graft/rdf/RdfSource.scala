@@ -8,6 +8,7 @@ import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapred.{FileSplit, LineRecordReader}
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.{AccumulatorV2, SerializableConfiguration}
 import scala.collection.mutable
@@ -338,19 +339,32 @@ object RdfSource {
 
   /** A one-pass scan: the triple table, the listed files it reads, and the
     * `@prefix` declarations its Turtle parse met on the way, collected by an
-    * accumulator instead of a second parse.
+    * accumulator instead of a second parse. `triples` is built when first
+    * used; the pipeline reads [[rows]].
     */
   final class Scan private[graft] (
-      val triples: Dataset[Triple],
+      dataset: => Dataset[Triple],
       val files: Seq[(String, Long)],
-      private[graft] val decls: DeclSet) {
+      private[graft] val decls: DeclSet,
+      parsed: Option[RDD[Triple]] = None) {
+
+    lazy val triples: Dataset[Triple] = dataset
+
+    /** The triple table as capped internal rows of [[TripleRows.schema]]:
+      * built in the parse's tasks when this scan parsed, else from
+      * `triples`' rows.
+      */
+    private[graft] lazy val rows: RDD[InternalRow] = parsed match {
+      case Some(p) => p.mapPartitions(_.map(TripleRows(_)), preservesPartitioning = true)
+      case None => TripleRows.cap(triples.toDF().queryExecution.toRdd, triples.schema)
+    }
 
     /** The distinct declarations, in the total order `(ns.length, ns, alias)`
       * the registry merge needs: when two files declare one namespace under
       * different aliases, the alias first in string order wins, whatever
       * order the tasks finished in. A retried or recomputed task reports its
       * declarations again; the set absorbs that. Complete once one job has
-      * computed every partition of `triples`.
+      * computed every partition of the scan.
       */
     def declarations: Seq[PrefixDecl] = mergeOrder(decls.value)
   }
@@ -365,11 +379,12 @@ object RdfSource {
 
   /** [[scan]] planned onto `k` groups. */
   private[graft] def scan(spark: SparkSession, paths: Seq[String], k: Int): Scan = {
-    import spark.implicits._
     val decls = new DeclSet
     spark.sparkContext.register(decls, "rdf.prefix_decls")
     val files = listFiles(spark, paths)
-    new Scan(spark.createDataset(parse(spark, planFiles(spark, files, k), decls.add)), files, decls)
+    val parsed = parse(spark, planFiles(spark, files, k), decls.add)
+    new Scan(spark.createDataset(parsed)(org.apache.spark.sql.Encoders.product[Triple]), files, decls,
+      Some(parsed))
   }
 
   /** Set of declarations, merged on the driver as tasks finish. */

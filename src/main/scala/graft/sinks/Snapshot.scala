@@ -83,30 +83,24 @@ object Snapshot {
 
   /** Write `df` as a snapshot at `dir` with a per-partition lineage manifest. */
   def write(df: DataFrame, dir: String, table: String, inputs: Seq[String]): DataFrame =
-    writeFolded(df, dir, table, inputs, identity)._1
+    writeFolded(df, dir, table, inputs, None)._1
 
   /** [[write]], also returning what the write job counted, in
-    * [[Normalize.countRowsBy]]'s shape: the row counts per key of `df`, the
-    * rows each write task wrote (by partition id, one entry per task, so per
-    * part file), and with `prefixes` round 1's prefix counts. `keys(df)`
-    * holds `df`'s columns, then the key columns and the `prefixes` columns,
-    * which are counted but never written. The counts ride the write
-    * ([[PassFold]]), so the write pays the key columns' evaluation but no
-    * second pass. The manifest's per-partition counts are the tasks' rows,
-    * and the snapshot is read back with the schema it was written with, so
-    * no job reads it back.
+    * [[Normalize.countRowsBy]]'s shape: with `keys` the summary keys of
+    * `df` (a triple table) under that registry, the rows each write task
+    * wrote (by partition id, one entry per task, so per part file), and
+    * with `prefixes` round 1's prefix counts. The counts ride the write
+    * ([[PassFold]], keyed in the write's tasks), so the write pays the key
+    * walk but no second pass and no projection. The manifest's
+    * per-partition counts are the tasks' rows, and the snapshot is read back
+    * with the schema it was written with, so no job reads it back.
     */
   private def writeFolded(df: DataFrame, dir: String, table: String, inputs: Seq[String],
-      keys: DataFrame => DataFrame,
+      keys: Option[graft.ns.Registry],
       prefixes: Option[Inference.PrefixFold] = None): (DataFrame, Normalize.Counted) = {
     val t0 = System.nanoTime()
     val spark = df.sparkSession
-    val keyed = keys(df)
-    val width = df.schema.length
-    require(keyed.columns.take(width).sameElements(df.columns), "keys(df) must start with df's columns")
-    val keyColumns = keyed.columns.toSeq.drop(width)
-      .filterNot(prefixes.fold(Seq.empty[String])(_.columns).contains)
-    val fold = new PassFold(keyed, width, Seq(keyColumns).filter(_.nonEmpty), prefixes)
+    val fold = new PassFold(df.queryExecution.toRdd, df.schema, Nil, keys, prefixes)
     org.apache.spark.sql.graftshim.ColumnShim.fromInternalRows(spark, fold.rows, df.schema)
       .write.mode("overwrite").parquet(dir)
     val counted = fold.counted
@@ -139,9 +133,18 @@ object Snapshot {
   /** Name of the one part file of a [[writeSmall]] snapshot. */
   private val SmallPart = "part-00000.snappy.parquet"
 
-  /** Snapshot for driver-materialized tiny tables (e.g. the summary), written
-    * on the driver with parquet-hadoop's example writer: no Spark job when
-    * `df` is a local relation, and no read-back pass. The part file is
+  /** [[writeSmall]] of `df`'s rows, collected once: no Spark job when `df`
+    * is a local relation. `rows` must be its row count.
+    */
+  def writeSmall(df: DataFrame, dir: String, table: String, inputs: Seq[String], rows: Long): Unit = {
+    val data = df.collect()
+    require(data.length == rows, s"writeSmall: told $rows rows, the table has ${data.length}")
+    writeSmall(df.sparkSession, df.schema, data.toSeq, dir, table, inputs)
+  }
+
+  /** Snapshot for driver-materialized tiny tables (e.g. the summary): `data`,
+    * rows of `schema`, written on the driver with parquet-hadoop's example
+    * writer, with no Spark job and no read-back pass. The part file is
     * written under a hidden name first; only once it is whole is the
     * previous snapshot retired (its lineage first), the part renamed into
     * place, then the manifest and, last, the lineage sidecar that marks the
@@ -150,16 +153,15 @@ object Snapshot {
     * manifest records. Flat tables of string, boolean, int, long and double
     * columns only.
     */
-  def writeSmall(df: DataFrame, dir: String, table: String, inputs: Seq[String], rows: Long): Unit = {
+  def writeSmall(spark: SparkSession, schema: StructType, data: Seq[Row], dir: String,
+      table: String, inputs: Seq[String]): Unit = {
     val t0 = System.nanoTime()
-    val schema = df.schema
-    val data = df.collect()
-    require(data.length == rows, s"writeSmall: told $rows rows, the table has ${data.length}")
+    val rows = data.size.toLong
     val d = Paths.get(dir)
     Files.createDirectories(d)
     val tmp = d.resolve(s".$SmallPart.${java.util.UUID.randomUUID()}.tmp")
     try {
-      writeParquet(tmp, schema, data, df.sparkSession.sparkContext.hadoopConfiguration)
+      writeParquet(tmp, schema, data, spark.sparkContext.hadoopConfiguration)
       Files.deleteIfExists(lineagePath(dir))
       Files.deleteIfExists(manifestPath(dir))
       // stale part files and their sidecars (Spark's _SUCCESS and .crc files)
@@ -180,7 +182,7 @@ object Snapshot {
   /** One Parquet file of `rows` at `path`, carrying Spark's schema in the
     * footer as Spark's own writer does, so Spark reads back the same types.
     */
-  private def writeParquet(path: Path, schema: StructType, rows: Array[Row],
+  private def writeParquet(path: Path, schema: StructType, rows: Seq[Row],
       conf: org.apache.hadoop.conf.Configuration): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -238,18 +240,18 @@ object Snapshot {
       table: String,
       inputs: Seq[String]
   )(compute: => DataFrame): DataFrame =
-    resumeOrWriteFolded(spark, dir, table, inputs, identity)(compute)._1
+    resumeOrWriteFolded(spark, dir, table, inputs, None)(compute)._1
 
   /** [[resumeOrWrite]]; when the snapshot is written now, also what the
-    * write job counted over `keys(compute)` (see [[writeFolded]]). None when
-    * the snapshot is reused.
+    * write job counted with `keys` and `prefixes` (see [[writeFolded]]).
+    * None when the snapshot is reused.
     */
   private[graft] def resumeOrWriteFolded(
       spark: SparkSession,
       dir: String,
       table: String,
       inputs: Seq[String],
-      keys: DataFrame => DataFrame,
+      keys: Option[graft.ns.Registry],
       prefixes: Option[Inference.PrefixFold] = None
   )(compute: => DataFrame): (DataFrame, Option[Normalize.Counted]) = {
     // any failure reading the manifest/lineage/parquet (e.g. part files

@@ -1,22 +1,29 @@
 package graft.summarize
 
-import graft.model.Kind
+import graft.model.{Kind, TermOrdinals}
 import graft.ns.{Inference, Registry}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types.StructType
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Triple normalization + namespace summarization — the reference's Stage 3
-  * (chilon_rs `src/normalize.rs`), declared as Catalyst expressions over the
-  * triple table. The only black box is the broadcast longest-prefix lookup
-  * (`resolveNs`, reference `src/trie.rs:257-296`); every other classification is
-  * a codegen'd `CASE WHEN` on the kind tags. The pipelines count in per-task
-  * hash maps merged on the driver ([[summarizeWithGroups]]); [[summarize]]
-  * is the relational group-count for streaming and SQL consumers (reference
+  * (chilon_rs `src/normalize.rs`).
+  *
+  * The pipelines count each triple's summary key in per-task hash maps
+  * merged on the driver: the key is computed from the row's term columns
+  * in the task ([[SummaryKey]], the registry's longest-prefix trie, no
+  * Catalyst plan), counted by the fold that rides a pass
+  * ([[PassFold]]: the RDF scan, the pages snapshot's write, or
+  * [[countRowsBy]]'s job) and decoded once per distinct key on the driver
+  * ([[fromKeyCounts]]); inference's namespaces re-fold only the rows they
+  * resolve ([[refold]]). [[normalize]] and [[summarize]] are the same rule
+  * as Catalyst expressions (the codegen'd `resolveNs` lookup, reference
+  * `src/trie.rs:257-296`, and `CASE WHEN`s on the kind tags), the
+  * relational group-count for streaming and SQL consumers (reference
   * `TripleFreq`, `src/normalize.rs:24-59`).
   */
 /** Resolved (alias, namespace-prefix) pair of an IRI. */
@@ -63,35 +70,6 @@ object Normalize {
     } else withCols
   }
 
-  /** The summary key: the signature and the object's kind. With the
-    * registry it determines the (alias, ns) group of each position (the
-    * kind tells a plain or language-tagged literal's fixed group from a
-    * datatype that resolves to the same alias), so the fold carries no
-    * namespace strings.
-    */
-  private[graft] val KeyColumns: Seq[String] = Seq("s_ns", "p_ns", "o_ns", "is_datatype", "o_kind")
-
-  /** The resolved struct(alias, ns), or null, of the subject, the predicate,
-    * and the object's IRI or a typed literal's datatype.
-    */
-  private def resolved(reg: Registry): Seq[Column] = Seq(
-    resolveCol(F.col("s"), reg),
-    resolveCol(F.col("p"), reg),
-    F.when(F.col("oKind") === Kind.IRI, resolveCol(F.col("o"), reg))
-      .when(F.col("oKind") === Kind.LIT_TYPED, resolveCol(F.col("oDt"), reg))
-      .otherwise(F.lit(null)))
-
-  /** s_ns, p_ns, o_ns and is_datatype from the structs of [[resolved]]. */
-  private def keyCols(sr: Column, pr: Column, or: Column): Seq[Column] = Seq(
-    F.when(F.col("sKind") === Kind.BLANK, Blank)
-      .otherwise(F.coalesce(sr.getField("alias"), F.lit(Unknown))).as("s_ns"),
-    F.coalesce(pr.getField("alias"), F.lit(Unknown)).as("p_ns"),
-    F.when(F.col("oKind") === Kind.BLANK, Blank)
-      .when(F.col("oKind") === Kind.LIT_PLAIN, PlainLitGroup._1)
-      .when(F.col("oKind") === Kind.LIT_LANG, LangLitGroup._1)
-      .otherwise(F.coalesce(or.getField("alias"), F.lit(Unknown))).as("o_ns"),
-    F.col("oKind").isin(Kind.LIT_PLAIN, Kind.LIT_LANG, Kind.LIT_TYPED).as("is_datatype"))
-
   /** [[normalize]] without the row filter, against a driver-side registry.
     * Each resolved struct feeds a key and a pair column, so the structs are
     * projected first and each lookup runs once per term.
@@ -100,11 +78,28 @@ object Normalize {
     def pairCol(alias: Column, ns: Column): Column =
       F.struct(alias.as("alias"), ns.as("ns"))
     def pair(r: Column): Column = pairCol(r.getField("alias"), r.getField("ns"))
+    // the resolved struct(alias, ns), or null, of the subject, the
+    // predicate, and the object's IRI or a typed literal's datatype
+    val resolved = Seq(
+      resolveCol(F.col("s"), reg),
+      resolveCol(F.col("p"), reg),
+      F.when(F.col("oKind") === Kind.IRI, resolveCol(F.col("o"), reg))
+        .when(F.col("oKind") === Kind.LIT_TYPED, resolveCol(F.col("oDt"), reg))
+        .otherwise(F.lit(null)))
     val names = Seq("_sr", "_pr", "_or")
     val Seq(sr, pr, or) = names.map(F.col)
+    val keys = Seq(
+      F.when(F.col("sKind") === Kind.BLANK, Blank)
+        .otherwise(F.coalesce(sr.getField("alias"), F.lit(Unknown))).as("s_ns"),
+      F.coalesce(pr.getField("alias"), F.lit(Unknown)).as("p_ns"),
+      F.when(F.col("oKind") === Kind.BLANK, Blank)
+        .when(F.col("oKind") === Kind.LIT_PLAIN, PlainLitGroup._1)
+        .when(F.col("oKind") === Kind.LIT_LANG, LangLitGroup._1)
+        .otherwise(F.coalesce(or.getField("alias"), F.lit(Unknown))).as("o_ns"),
+      F.col("oKind").isin(Kind.LIT_PLAIN, Kind.LIT_LANG, Kind.LIT_TYPED).as("is_datatype"))
     triples
-      .select(F.col("*") +: resolved(reg).zip(names).map { case (c, n) => c.as(n) }: _*)
-      .select(triples.columns.toSeq.map(F.col) ++ keyCols(sr, pr, or) ++ Seq(
+      .select(F.col("*") +: resolved.zip(names).map { case (c, n) => c.as(n) }: _*)
+      .select(triples.columns.toSeq.map(F.col) ++ keys ++ Seq(
         pair(sr).as("s_pair"),
         pair(pr).as("p_pair"),
         F.when(F.col("oKind") === Kind.LIT_PLAIN,
@@ -113,39 +108,6 @@ object Normalize {
             pairCol(F.lit(LangLitGroup._1), F.lit(LangLitGroup._2)))
           .otherwise(pair(or)).as("o_pair")): _*)
   }
-
-  /** The IRIs inference counts, one column per term position: the subject,
-    * the predicate and the object IRI when the registry leaves it
-    * unresolved, else null. Datatypes are never among them.
-    */
-  private[graft] val UnresolvedIriColumns: Seq[String] =
-    Seq("s_unresolved", "p_unresolved", "o_unresolved")
-
-  /** The [[KeyColumns]] of every triple under `reg`, with no row filter,
-    * after the columns `carry` of `triples`, and with `unresolved` also the
-    * [[UnresolvedIriColumns]]. Each lookup runs once: without `unresolved`
-    * each resolved struct feeds one key in a single projection; with it a
-    * struct feeds a key and an unresolved IRI, so the structs are projected
-    * first.
-    */
-  private[graft] def summaryKeys(triples: DataFrame, reg: Registry, carry: Seq[String] = Nil,
-      unresolved: Boolean = false): DataFrame =
-    if (!unresolved) {
-      val Seq(sr, pr, or) = resolved(reg)
-      triples.select(carry.map(F.col) ++ keyCols(sr, pr, or) :+ F.col("oKind").as("o_kind"): _*)
-    } else {
-      val names = Seq("_sr", "_pr", "_or")
-      val Seq(sr, pr, or) = names.map(F.col)
-      def iri(kind: String) = F.col(kind) === Kind.IRI
-      val iris = Seq(
-        F.when(sr.isNull && iri("sKind"), F.col("s")),
-        F.when(pr.isNull, F.col("p")),
-        F.when(or.isNull && iri("oKind"), F.col("o")))
-      triples
-        .select(F.col("*") +: resolved(reg).zip(names).map { case (c, n) => c.as(n) }: _*)
-        .select(carry.map(F.col) ++ keyCols(sr, pr, or) ++ (F.col("oKind").as("o_kind") +:
-          iris.zip(UnresolvedIriColumns).map { case (c, n) => c.as(n) }): _*)
-    }
 
   /** The core summary group-count (reference `TripleFreq::add`,
     * `src/normalize.rs:34-46`): low-cardinality keys, so map-side combine
@@ -188,83 +150,40 @@ object Normalize {
   /** Exact row multiplicities of a relation with few DISTINCT rows, with no
     * exchange: each task counts its rows in a local hash map keyed by the
     * codegen'd projection's `UnsafeRow` (copied only when the key is new),
-    * and the driver merges the per-task maps as tasks finish — the
-    * `RDD.aggregate` shape, so it holds one merged map, never one per task.
-    * One job with one stage, where `groupBy(all).count()` pays a partial
-    * aggregate, a shuffle, a final aggregate and AQE's second job; the
-    * merged map is as large as the distinct-row space, so this is for
-    * summary-sized outputs only.
+    * and the driver merges the per-task maps as tasks finish, so it holds
+    * one merged map, never one per task. One job with one stage, where
+    * `groupBy(all).count()` pays a partial aggregate, a shuffle, a final
+    * aggregate and AQE's second job; the merged map is as large as the
+    * distinct-row space, so this is for summary-sized outputs only.
     */
   private[graft] def countRows(df: DataFrame): Map[Row, Long] =
     countRowsBy(df, Seq(df.columns.toSeq)).maps.head
 
-  /** [[countRowsBy]]'s result: one merged map per projection, the rows of
-    * each partition of the input, by partition index, and what its prefix
-    * fold found, when it was given one.
+  /** [[countRowsBy]]'s result: one merged map per projection (then the
+    * summary keys, when counted), the rows of each partition of the input,
+    * by partition index, and what its prefix fold found, when it was given
+    * one.
     */
   private[graft] final case class Counted(maps: Seq[Map[Row, Long]], partitionRows: Seq[Long],
       prefixes: Option[Inference.FoldedPrefixes])
 
   /** [[countRows]] of several projections of `df` (each a list of its
-    * columns) in one pass, one map per projection: the merged maps are as
-    * large as each projection's distinct-row space, not their product. Each
-    * partition's row count comes from the same job, as its task's maps
-    * reach the driver. With `prefixes`, the same tasks also count the
-    * segment prefixes of its IRI columns ([[Inference.PrefixMap]]), and the
-    * driver merges them as they arrive ([[Inference.PrefixMerge]]).
+    * columns) in one job, one map per projection: the merged maps are as
+    * large as each projection's distinct-row space, not their product. With
+    * `keys`, `df` is a triple table and the same tasks also count its
+    * summary keys under that registry, computed in the task ([[SummaryKey]]),
+    * and with `prefixes` the segment prefixes of the IRIs it leaves
+    * unresolved ([[Inference.PrefixMap]], merged as they arrive). Each
+    * partition's row count comes from the same job: a [[PassFold]] whose
+    * rows the job drops. Only the columns it counts are read.
     */
   private[graft] def countRowsBy(df: DataFrame, projections: Seq[Seq[String]],
-      prefixes: Option[Inference.PrefixFold] = None): Counted = {
-    val schema = df.schema
-    val subSchemas = projections.map(cols => StructType(cols.map(c => schema(c))))
-    val ordinals = projections.map(_.map(schema.fieldIndex))
-    val merged = projections.map(_ => mutable.HashMap.empty[Row, Long])
-    val iriOrdinals = prefixes.fold(Array.empty[Int])(_.columns.map(schema.fieldIndex).toArray)
-    val rdd = df.queryExecution.toRdd
-    val partitionRows = new Array[Long](rdd.getNumPartitions)
-    val budget = prefixes.fold(0)(_.taskBudget(rdd.getNumPartitions))
-    val prefixMerge = prefixes.map(new Inference.PrefixMerge(_, rdd.getNumPartitions))
-    df.sparkSession.sparkContext.runJob(rdd,
-      (rows: Iterator[InternalRow]) => {
-        val counts = ordinals.map(_ => new KeyCounts).toArray
-        val prefixMap = if (iriOrdinals.isEmpty) null else new Inference.PrefixMap(budget)
-        val project = ordinals.toArray.map { ords =>
-          if (ords == schema.indices) {
-            lazy val toUnsafe = UnsafeProjection.create(schema)
-            (r: InternalRow) => r match {
-              case u: UnsafeRow => u
-              case other => toUnsafe(other)
-            }
-          } else {
-            val p = UnsafeProjection.create(ords.map(i =>
-              BoundReference(i, schema(i).dataType, schema(i).nullable)))
-            (r: InternalRow) => p(r)
-          }
-        }
-        rows.foreach { r =>
-          var g = 0
-          while (g < counts.length) {
-            counts(g).add(project(g)(r))
-            g += 1
-          }
-          g = 0
-          while (g < iriOrdinals.length) {
-            if (!r.isNullAt(iriOrdinals(g))) prefixMap.add(r.getUTF8String(iriOrdinals(g)))
-            g += 1
-          }
-        }
-        (counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) },
-          Option(prefixMap).flatMap(_.result))
-      },
-      (i: Int, res: (Array[Array[(Row, Long)]], Option[Inference.TaskPrefixes])) => {
-        val (parts, taskPrefixes) = res
-        partitionRows(i) = parts.headOption.fold(0L)(_.iterator.map(_._2).sum)
-        parts.zip(merged).foreach { case (part, m) =>
-          part.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
-        }
-        prefixMerge.foreach(_.add(i, taskPrefixes))
-      })
-    Counted(merged.map(_.toMap), partitionRows.toSeq, prefixMerge.map(_.result()))
+      keys: Option[Registry] = None, prefixes: Option[Inference.PrefixFold] = None): Counted = {
+    val cols = (projections.flatten ++ keys.fold(Seq.empty[String])(_ => TermOrdinals.Columns)).distinct
+    val read = if (cols.size == df.columns.length) df else df.select(cols.map(F.col): _*)
+    val fold = new PassFold(read.queryExecution.toRdd, read.schema, projections, keys, prefixes)
+    df.sparkSession.sparkContext.runJob(fold.rows, (rows: Iterator[InternalRow]) => rows.foreach(_ => ()))
+    fold.counted
   }
 
   /** One task's counts of `UnsafeRow` keys; a key is copied only when new. */
@@ -282,14 +201,14 @@ object Normalize {
   }
 
   /** Fused Stage-C aggregation: summary rows, used groups and blank/unknown
-    * flags from ONE single-stage job ([[countRows]] over [[summaryKeys]]).
-    * It needs no exchange because its output is bounded by the group space,
-    * not by the corpus: the keys are the summary signature and the object's
-    * kind, so each task's map and the driver's merged map hold a few
-    * hundred rows at any input size, and the groups come from the registry
-    * on the driver. The fold counts every row;
-    * `ignoreUnknown` is a predicate on the key columns, so it is applied to
-    * the merged keys on the driver ([[fromKeyCounts]]).
+    * flags from ONE single-stage job ([[foldKeys]]). It needs no exchange
+    * because its output is bounded by the group space, not by the corpus:
+    * the keys are the summary signature and the object's kind, so each
+    * task's map and the driver's merged map hold a few hundred keys at any
+    * input size, and the groups come from the registry on the driver. The
+    * fold counts every row; `ignoreUnknown` is a predicate on the key
+    * columns, so it is applied to the merged keys on the driver
+    * ([[fromKeyCounts]]).
     */
   def summarizeWithGroups(
       triples: DataFrame,
@@ -298,9 +217,11 @@ object Normalize {
   ): (Seq[graft.model.SummaryRow], Seq[(String, String)], Boolean, Boolean) =
     fromKeyCounts(foldKeys(triples, bc.value), bc.value, ignoreUnknown)
 
-  /** Merged counts of the [[KeyColumns]] of `triples` under `reg`. */
+  /** Merged counts of the summary keys ([[SummaryKey.KeySchema]]) of
+    * `triples` under `reg`, keyed in the tasks ([[SummaryKey]]).
+    */
   private[graft] def foldKeys(triples: DataFrame, reg: Registry): Map[Row, Long] =
-    countRows(summaryKeys(triples, reg))
+    countRowsBy(triples, Nil, Some(reg)).maps.head
 
   /** Summary rows (sorted), used groups and blank/unknown flags from key
     * counts merged under `reg`. With `ignoreUnknown` the keys with an
@@ -386,22 +307,23 @@ object Normalize {
 
   /** Moves key counts to registry `after` from the registry it extends by
     * the namespaces `added` and nothing else. Re-folds only the rows where
-    * some term (s, p, o or a typed literal's datatype) resolves under
-    * `added` alone: every other term resolves under `after` exactly as
-    * before — adding namespaces never changes an IRI the registry already
-    * resolves (`Registry.addNamespaces` blocks sub-namespaces) and resolves
-    * no IRI outside `added` — so the other rows keep their keys. Each
-    * re-folded row leaves its old key and joins its new one; the old key is
-    * the new one with every position holding an added namespace's alias put
-    * back to UNKNOWN, because a term the registry resolved keeps its
-    * namespace.
+    * some position's code under `after` is an added namespace
+    * ([[SummaryKey]]; s, p, o or a typed literal's datatype): every other
+    * term resolves under `after` exactly as before — adding namespaces
+    * never changes an IRI the registry already resolves
+    * (`Registry.addNamespaces` blocks sub-namespaces), and an IRI that an
+    * added namespace resolves was UNKNOWN before — so the other rows keep
+    * their keys. Each re-folded row leaves its old key and joins its new
+    * one; the old key is the new one with every position holding an added
+    * namespace's alias put back to UNKNOWN.
     *
     * With `sample` > 0 the same job also takes the first `sample` IRIs of
     * `triples` that `after` leaves unresolved, as
-    * [[Inference.sampleUnresolved]] over [[unresolvedIris]] takes them
-    * ([[countRowsAndTake]]), from the positions where `counts` holds an
-    * unresolved IRI: an IRI the registry before resolves stays resolved, so
-    * the other positions hold none; otherwise it samples nothing.
+    * [[Inference.sampleUnresolved]] over [[unresolvedIris]] takes them, from
+    * the positions where `counts` holds an unresolved IRI (an IRI the
+    * registry before resolves stays resolved, so the other positions hold
+    * none), read off the codes the key walk already computed; each task
+    * stops sampling at `sample`. Otherwise it samples nothing.
     */
   private[graft] def refold(
       triples: DataFrame,
@@ -410,12 +332,36 @@ object Normalize {
       after: Registry,
       sample: Int = 0
   ): (Map[Row, Long], Seq[String]) = {
-    val addedReg = Registry.fromPairs(added.map(ns => ns -> ns), graft.ns.NsSource.Inference)
-    def hit(c: Column) = resolveCol(c, addedReg).isNotNull
-    val touched = triples.filter(
-      (F.col("sKind") === Kind.IRI && hit(F.col("s"))) || hit(F.col("p")) ||
-        (F.col("oKind") === Kind.IRI && hit(F.col("o"))) ||
-        (F.col("oKind") === Kind.LIT_TYPED && hit(F.col("oDt"))))
+    val terms = triples.select(TermOrdinals.Columns.map(F.col): _*)
+    val keys = SummaryKey(after, terms.schema)
+    val hit = keys.codesOf(added.toSet)
+    val positions =
+      if (sample > 0) unresolvedPositions(counts).map(Seq("s", "p", "o").indexOf).toArray
+      else Array.empty[Int]
+    val rdd = terms.queryExecution.toRdd
+    val moved = new LongCounts
+    val taken = new Array[Array[String]](rdd.getNumPartitions)
+    triples.sparkSession.sparkContext.runJob(rdd,
+      (rows: Iterator[InternalRow]) => {
+        val walk = keys.walk()
+        val touched = new LongCounts
+        val examples = mutable.ArrayBuffer.empty[String]
+        rows.foreach { r =>
+          val k = walk.key(r)
+          if (walk.touches(hit)) touched.add(k)
+          var i = 0
+          while (i < positions.length && examples.size < sample) {
+            val iri = walk.unresolved(positions(i))
+            if (iri != null) examples += iri.toString
+            i += 1
+          }
+        }
+        (touched.result, examples.toArray)
+      },
+      (i: Int, res: ((Array[Long], Array[Long]), Array[String])) => {
+        moved.addAll(res._1)
+        taken(i) = res._2
+      })
     val addedAliases = added.flatMap(after.byNs.get).map(_.alias).toSet
     def oldKey(key: Row): Row = {
       val v = key.toSeq.toArray
@@ -423,52 +369,18 @@ object Normalize {
       for (i <- 0 to 2 if (i < 2 || oIsIri) && addedAliases(key.getString(i))) v(i) = Unknown
       Row.fromSeq(v.toSeq)
     }
-    val (moved, examples) =
-      if (sample > 0) countRowsAndTake(summaryKeys(touched, after),
-        unresolvedIris(triples, after, unresolvedPositions(counts)), sample)
-      else (foldKeys(touched, after), Nil)
     val merged = mutable.HashMap.empty[Row, Long] ++= counts
-    moved.foreach { case (newKey, n) =>
+    val (ks, ns) = moved.result
+    ks.indices.foreach { j =>
+      val newKey = keys.decode(ks(j))
+      val n = ns(j)
       val old = oldKey(newKey)
       val left = merged.getOrElse(old, 0L) - n
       require(left >= 0, s"re-fold moves $n rows out of key $old, which holds fewer")
       if (left == 0) merged -= old else merged(old) = left
       merged(newKey) = merged.getOrElse(newKey, 0L) + n
     }
-    (merged.toMap, examples)
-  }
-
-  /** [[countRows]] of `rows` and, in the same job, the first `n` strings of
-    * `firsts`' first column in partition order, each task stopping after
-    * its first `n`: what [[Inference.sampleUnresolved]] takes. Both must be
-    * narrow projections of one relation, so that their partitions pair up;
-    * each task reads its partition once for each.
-    */
-  private[graft] def countRowsAndTake(rows: DataFrame, firsts: DataFrame,
-      n: Int): (Map[Row, Long], Seq[String]) = {
-    val schema = rows.schema
-    val rowRdd = rows.queryExecution.toRdd
-    val firstRdd = firsts.select(firsts.columns.head).queryExecution.toRdd
-    require(rowRdd.getNumPartitions == firstRdd.getNumPartitions,
-      s"${rowRdd.getNumPartitions} partitions to count beside ${firstRdd.getNumPartitions} to take from")
-    val merged = mutable.HashMap.empty[Row, Long]
-    val taken = new Array[Array[String]](rowRdd.getNumPartitions)
-    val job = rowRdd.zipPartitions(firstRdd) { (rs, fs) =>
-      val toUnsafe = UnsafeProjection.create(schema)
-      val counts = new KeyCounts
-      rs.foreach {
-        case u: UnsafeRow => counts.add(u)
-        case other => counts.add(toUnsafe(other))
-      }
-      Iterator.single((counts.toRows(schema), fs.take(n).map(_.getUTF8String(0).toString).toArray))
-    }
-    rows.sparkSession.sparkContext.runJob(job,
-      (it: Iterator[(Array[(Row, Long)], Array[String])]) => it.next(),
-      (i: Int, res: (Array[(Row, Long)], Array[String])) => {
-        res._1.foreach { case (k, c) => merged(k) = merged.getOrElse(k, 0L) + c }
-        taken(i) = res._2
-      })
-    (merged.toMap, taken.iterator.flatten.take(n).toSeq)
+    (merged.toMap, taken.iterator.flatten.take(sample).toSeq)
   }
 
   /** Distinct (alias, ns) groups actually used + blank/unknown flags

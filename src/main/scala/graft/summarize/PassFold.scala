@@ -1,24 +1,27 @@
 package graft.summarize
 
-import graft.ns.Inference
+import graft.ns.{Inference, Registry}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.AccumulatorV2
 
 /** A fold that rides a pass which runs anyway: the RDF scan that fills the
-  * cache of the rows later passes read, or the pages snapshot's write.
+  * cache of the rows later passes read, the pages snapshot's write, or a
+  * job of its own ([[Normalize.countRowsBy]]).
   *
-  * `keyed` holds the pass's rows in its first `width` columns, then the
-  * columns the fold counts. Each task of [[rows]] counts the rows of its
-  * input, their counts under each of `projections` (lists of `keyed`'s
-  * columns, one map each, as [[Normalize.countRowsBy]] counts them) and,
-  * with `prefixes`, the segment prefixes of its IRI columns in an
+  * `input` holds rows of `schema`. Each task of [[rows]] counts the rows of
+  * its input, their counts under each of `projections` (lists of `schema`'s
+  * columns, one map each) and, with `keys`, their summary keys under that
+  * registry ([[SummaryKey]], computed from the term columns in the task;
+  * `schema` is then a triple table). With `prefixes` the same walk also
+  * counts the segment prefixes of the IRIs `keys` leaves unresolved in an
   * [[Inference.PrefixMap]] under its share of the fold's budget. It passes
-  * on the first `width` columns of the rows for which `pass` holds (all of
-  * them without it) and reports what it counted when its input ends.
+  * on the `out` columns (all of them by default) of every row or, with
+  * `unknownOnly`, of the rows whose key holds an UNKNOWN, and reports what
+  * it counted when its input ends.
   *
   * The driver merges the reports as tasks finish: a result task's
   * accumulator update is merged once per partition, whatever the retries,
@@ -28,21 +31,23 @@ import org.apache.spark.util.AccumulatorV2
   * has computed every partition of [[rows]].
   */
 private[graft] final class PassFold(
-    keyed: DataFrame,
-    width: Int,
-    projections: Seq[Seq[String]],
+    input: RDD[InternalRow],
+    schema: StructType,
+    projections: Seq[Seq[String]] = Nil,
+    keys: Option[Registry] = None,
     prefixes: Option[Inference.PrefixFold] = None,
-    pass: Option[Column] = None) {
+    out: Option[Seq[String]] = None,
+    unknownOnly: Boolean = false) {
   import PassFold._
+  require(keys.isDefined || (prefixes.isEmpty && !unknownOnly),
+    "the prefix count and the UNKNOWN filter read the summary keys")
 
-  private val input =
-    pass.fold(keyed)(p => keyed.select(org.apache.spark.sql.functions.col("*"), p))
-  private val schema = input.schema
-  private val rdd = input.queryExecution.toRdd
-  private val tasks = rdd.getNumPartitions
+  private val keyFn = keys.map(SummaryKey(_, schema))
+  private val tasks = input.getNumPartitions
   private val partitionRows = new Array[Long](tasks)
   private val passedByPartition = new Array[Long](tasks)
   private val merged = projections.map(_ => scala.collection.mutable.HashMap.empty[Row, Long])
+  private val mergedKeys = new LongCounts
   private val prefixMerge = prefixes.map(new Inference.PrefixMerge(_, tasks))
   private val reported = new Array[Boolean](tasks)
 
@@ -51,32 +56,35 @@ private[graft] final class PassFold(
       reported(r.partition) = true
       partitionRows(r.partition) = r.rows
       passedByPartition(r.partition) = r.passed
-      r.keys.zip(merged).foreach { case (part, m) =>
+      r.counts.zip(merged).foreach { case (part, m) =>
         part.foreach { case (k, n) => m(k) = m.getOrElse(k, 0L) + n }
       }
+      mergedKeys.addAll(r.keys)
       prefixMerge.foreach(_.add(r.partition, r.prefixes))
     }
   })
-  keyed.sparkSession.sparkContext.register(reports)
+  input.sparkContext.register(reports)
 
-  /** The first `width` columns of the rows `pass` keeps, counted on the way. */
+  /** The `out` columns of the rows the pass keeps, counted on the way. */
   val rows: RDD[InternalRow] = {
     val schema = this.schema
-    val width = this.width
     val ordinals = projections.map(_.map(schema.fieldIndex)).toArray
     val subSchemas = projections.map(cols => StructType(cols.map(c => schema(c)))).toArray
-    val iriOrdinals = prefixes.fold(Array.empty[Int])(_.columns.map(schema.fieldIndex).toArray)
-    val passOrdinal = if (pass.isDefined) schema.length - 1 else -1
+    val outOrdinals = out.map(_.map(schema.fieldIndex))
+    val keyFn = this.keyFn
+    val counting = prefixes.isDefined
+    val unknownOnly = this.unknownOnly
     val budget = prefixes.fold(0)(_.taskBudget(tasks))
     val reports = this.reports
-    rdd.mapPartitionsWithIndex { (task, it) =>
+    input.mapPartitionsWithIndex { (task, it) =>
       def project(ords: Seq[Int]) = UnsafeProjection.create(
         ords.map(i => BoundReference(i, schema(i).dataType, schema(i).nullable)))
-      val out: InternalRow => InternalRow =
-        if (schema.length == width) identity else project(0 until width)
-      val keys = ordinals.map(project(_))
+      val pass: InternalRow => InternalRow = outOrdinals.fold(identity[InternalRow] _)(project)
+      val projected = ordinals.map(project(_))
       val counts = ordinals.map(_ => new Normalize.KeyCounts)
-      val prefixMap = if (iriOrdinals.isEmpty) null else new Inference.PrefixMap(budget)
+      val walk = keyFn.map(_.walk()).orNull
+      val keyCounts = new LongCounts
+      val prefixMap = if (counting) new Inference.PrefixMap(budget) else null
       var n = 0L
       var passed = 0L
       var done = false
@@ -87,24 +95,32 @@ private[graft] final class PassFold(
             val r = it.next()
             n += 1
             var g = 0
-            while (g < keys.length) {
-              counts(g).add(keys(g)(r))
+            while (g < projected.length) {
+              counts(g).add(projected(g)(r))
               g += 1
             }
-            g = 0
-            while (g < iriOrdinals.length) {
-              if (!r.isNullAt(iriOrdinals(g))) prefixMap.add(r.getUTF8String(iriOrdinals(g)))
-              g += 1
+            var keep = !unknownOnly
+            if (walk != null) {
+              keyCounts.add(walk.key(r))
+              if (prefixMap != null) {
+                var i = 0
+                while (i < 3) {
+                  val iri = walk.unresolved(i)
+                  if (iri != null) prefixMap.add(iri)
+                  i += 1
+                }
+              }
+              if (unknownOnly) keep = walk.unknown
             }
-            if (passOrdinal < 0 || r.getBoolean(passOrdinal)) {
+            if (keep) {
               passed += 1
-              ahead = out(r)
+              ahead = pass(r)
             }
           }
           if (ahead == null && !done) {
             done = true
             reports.add(TaskReport(task, n, passed,
-              counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) },
+              counts.zip(subSchemas).map { case (c, sub) => c.toRows(sub) }, keyCounts.result,
               Option(prefixMap).flatMap(_.result)))
           }
           ahead != null
@@ -119,13 +135,24 @@ private[graft] final class PassFold(
     }
   }
 
-  /** What the tasks counted: one merged map per projection, the input rows
-    * of each partition and the prefix fold's result.
+  /** What the tasks counted: one merged map per projection and, with
+    * `keys`, then the decoded summary keys; the input rows of each
+    * partition and the prefix fold's result.
     */
   lazy val counted: Normalize.Counted = {
     val missing = reported.count(!_)
     require(missing == 0, s"$missing of the pass's $tasks tasks did not report")
-    Normalize.Counted(merged.map(_.toMap), partitionRows.toSeq, prefixMerge.map(_.result()))
+    val keyMap = keyFn.map { k =>
+      val m = scala.collection.mutable.HashMap.empty[Row, Long]
+      val (ks, ns) = mergedKeys.result
+      ks.indices.foreach { i =>
+        val row = k.decode(ks(i))
+        m(row) = m.getOrElse(row, 0L) + ns(i)
+      }
+      m.toMap
+    }
+    Normalize.Counted(merged.map(_.toMap) ++ keyMap, partitionRows.toSeq,
+      prefixMerge.map(_.result()))
   }
 
   /** The rows each partition passed on. */
@@ -134,12 +161,13 @@ private[graft] final class PassFold(
 
 private object PassFold {
 
-  /** What one task counted: its input rows, the rows it passed on, its key
-    * counts per projection and its prefixes (None when it counted none or
-    * went over its budget).
+  /** What one task counted: its input rows, the rows it passed on, its row
+    * counts per projection, its packed summary keys with their counts and
+    * its prefixes (None when it counted none or went over its budget).
     */
   final case class TaskReport(partition: Int, rows: Long, passed: Long,
-      keys: Array[Array[(Row, Long)]], prefixes: Option[Inference.TaskPrefixes])
+      counts: Array[Array[(Row, Long)]], keys: (Array[Long], Array[Long]),
+      prefixes: Option[Inference.TaskPrefixes])
 
   /** Hands each task's [[TaskReport]] to `onReport` on the driver as the
     * task finishes. Registered without a name, so no report is copied to

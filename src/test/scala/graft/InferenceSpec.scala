@@ -43,6 +43,8 @@ class InferenceSpec extends AnyFunSuite {
   test("the scan's round-1 fold collects what the Spark aggregate collects (property)") {
     import org.scalacheck.{Gen, Prop, Test => Check}
     import org.apache.spark.sql.{functions => F}
+    import graft.model.Kind
+    import graft.ns.Registry
     import graft.summarize.Normalize
     val spark = SparkSuite.spark
     import spark.implicits._
@@ -66,16 +68,24 @@ class InferenceSpec extends AnyFunSuite {
     var truncated = 0
     var leaves = 0
     var nonAscii = 0
+    // the fold counts the IRIs a triple's summary keys leave unresolved: a
+    // row's three IRIs as subject, predicate and object under the empty
+    // registry, a missing subject or object as a blank node
+    def triples(rows: Seq[(String, String, String)]) = rows.map { case (a, b, c) =>
+      (a, if (a == null) Kind.BLANK else Kind.IRI, b, c, if (c == null) Kind.BLANK else Kind.IRI,
+        Option.empty[String])
+    }.toDF("s", "sKind", "p", "o", "oKind", "oDt")
     val prop = Prop.forAllNoShrink(genCase) { case (rows, minNs, maxCollected) =>
-      val df = rows.map { case Seq(a, b, c) => (a, b, c) }.toDF(cols: _*)
+      val tuples = rows.map { case Seq(a, b, c) => (a, b, c) }
+      val df = tuples.toDF(cols: _*)
       val want = Inference.prefixCounts(
         df.select(F.explode(F.array(cols.map(F.col): _*)).as("iri")).filter(F.col("iri").isNotNull))
         .filter(F.col("count") >= minNs)
         .orderBy(F.col("count").desc, F.col("prefix"))
         .limit(maxCollected)
         .collect().map(r => PrefixCount(r.getString(0), r.getInt(1), r.getLong(2))).toVector
-      val folded = Normalize.countRowsBy(df, Seq(Seq("u1")),
-        Some(Inference.PrefixFold(cols, minNs, maxCollected))).prefixes.get
+      val folded = Normalize.countRowsBy(triples(tuples), Nil, Some(Registry.empty),
+        Some(Inference.PrefixFold(minNs, maxCollected))).prefixes.get
       val all = rows.flatten.filter(_ != null).flatMap(i => Inference.segPrefixes(i).toSeq)
       if (all.distinct.count(p => all.count(_ == p) >= minNs) > maxCollected) truncated += 1
       if (want.exists(_.prefix.startsWith("http://leaf.test/"))) leaves += 1
@@ -88,9 +98,9 @@ class InferenceSpec extends AnyFunSuite {
     assert(truncated > 0 && leaves > 0 && nonAscii > 0, (truncated, leaves, nonAscii))
 
     // a task over its budget drops its map, and the fold gives no candidates
-    val df = Seq(("http://a.test/x", "http://b.test/y")).toDF("u1", "u2")
-    val over = Normalize.countRowsBy(df, Seq(Seq("u1")),
-      Some(Inference.PrefixFold(Seq("u1", "u2"), 1L, 10, budget = 0))).prefixes.get
+    val df = triples(Seq(("http://a.test/x", "http://b.test/y", null)))
+    val over = Normalize.countRowsBy(df, Nil, Some(Registry.empty),
+      Some(Inference.PrefixFold(1L, 10, budget = 0))).prefixes.get
     assert(over.candidates.isEmpty && over.taskEntries.contains(None), over)
   }
 
@@ -260,9 +270,8 @@ class InferenceSpec extends AnyFunSuite {
     val prop = Prop.forAllNoShrink(genCorpus) { case (corpus, maxNs, maxCollected) =>
       val t = triples(corpus)
       val r0 = Registry.community()
-      val fold = Inference.PrefixFold(Normalize.UnresolvedIriColumns, minNs, maxCollected)
-      val folded = Normalize.countRowsBy(Normalize.summaryKeys(t, r0, unresolved = true),
-        Seq(Normalize.KeyColumns), Some(fold)).prefixes.get
+      val fold = Inference.PrefixFold(minNs, maxCollected)
+      val folded = Normalize.countRowsBy(t, Nil, Some(r0), Some(fold)).prefixes.get
       val cfg = Pipeline.Config(outDir = "", minNsSize = minNs, minDomainOccurs = 5L,
         maxNs = maxNs, maxCollected = maxCollected)
       val (reg, hk, added) = Pipeline.runInference(t, r0, cfg,

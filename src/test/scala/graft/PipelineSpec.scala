@@ -255,7 +255,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(written.schema == spark.read.parquet(dir).schema)
     assert(Snapshot.manifestSchema(dir) == written.schema)
     // a reused snapshot folds nothing; its lineage keeps the row count
-    val (_, fold) = Snapshot.resumeOrWriteFolded(spark, dir, "t", Seq("in"), identity)(
+    val (_, fold) = Snapshot.resumeOrWriteFolded(spark, dir, "t", Seq("in"), None)(
       fail("reused"))
     assert(fold.isEmpty && Snapshot.readLineage(dir).map(_._1).contains(666L))
   }

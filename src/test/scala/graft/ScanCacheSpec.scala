@@ -94,12 +94,12 @@ class ScanCacheSpec extends AnyFunSuite {
     val paths = mixed(SparkSuite.tmpDir("scache-rows"), late = false)
     val scan = RdfSource.scan(spark, paths)
     val triples = RdfPipeline.truncateIris(scan.triples.toDF())
-    val s = RdfPipeline.scanFold(spark, scan, triples, None)
+    val s = RdfPipeline.scanFold(spark, scan, None)
     try {
       assert(s.heads.exists(_.map(_.alias) == Seq("ex")))
       val unknown = Seq("s_ns", "p_ns", "o_ns").map(F.col(_) === Normalize.Unknown).reduce(_ || _)
       // only the columns the later passes read
-      val want = Normalize.summaryKeys(triples, s.registry, triples.columns.toSeq)
+      val want = SummaryKeysOracle.summaryKeys(triples, s.registry, triples.columns.toSeq)
         .filter(unknown).select(RdfPipeline.CachedColumns.map(F.col): _*)
       assert(s.pending.columns.toSeq == RdfPipeline.CachedColumns)
       def bag(rows: Array[Row]) = rows.toSeq.groupBy(identity).view.mapValues(_.size).toMap
@@ -115,7 +115,7 @@ class ScanCacheSpec extends AnyFunSuite {
 
   test("a partition that reports again, as when a later job recomputes it, changes no count") {
     val df = spark.range(0, 1000, 1, 4).select((F.col("id") % 7).as("k"), F.col("id"))
-    val fold = new graft.summarize.PassFold(df, 2, Seq(Seq("k")))
+    val fold = new graft.summarize.PassFold(df.queryExecution.toRdd, df.schema, Seq(Seq("k")))
     def consume(): Unit = spark.sparkContext.runJob(fold.rows,
       (rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => rows.foreach(_ => ()))
     consume()
