@@ -150,13 +150,22 @@ object Registry {
 
   def empty: Registry = new Registry(TreeMap.empty, PrefixTrie.empty)
 
+  /** The most namespaces a registry holds: the summary fold packs a
+    * namespace index per position into 20 bits of its key, with four codes
+    * reserved (`graft.summarize.SummaryKey`). Once a registry is full,
+    * further pairs, inferred namespaces and declarations are not
+    * registered, so their IRIs stay unresolved.
+    */
+  val MaxNamespaces: Int = (1 << 20) - 4
+
   /** Build from (alias, namespace) pairs, shortest-namespace-first with
     * subsumption skip (reference `vec_to_trie`, `src/prefixes/community.rs:48-84`).
     */
   def fromPairs(
       pairs: Seq[(String, String)],
       source: NsSource,
-      allowSubNs: Boolean = false
+      allowSubNs: Boolean = false,
+      maxSize: Int = MaxNamespaces
   ): Registry = {
     val sorted = pairs.sortBy { case (_, ns) => (ns.length, ns) }
     var byNs = TreeMap.empty[String, NsEntry]
@@ -165,7 +174,7 @@ object Registry {
     // (the packed broadcast form is built once at the end)
     val mut = new MutablePrefixTrie[NsEntry]
     sorted.foreach { case (alias, ns) =>
-      mut.longestPrefix(ns, mustBeTerminal = true) match {
+      if (byNs.size < maxSize) mut.longestPrefix(ns, mustBeTerminal = true) match {
         case Some((existing, _)) if existing == ns       => // duplicate, keep first
         case Some((existing, _))
             if existing.nonEmpty && !allowSubNs          => // contained in existing
@@ -178,13 +187,14 @@ object Registry {
     new Registry(byNs, mut.pack)
   }
 
-  /** Add inferred namespaces (reference `add_namespaces`, `src/ns_trie.rs:71-135`).
-    * Returns (new registry, namespaces actually added).
+  /** Add inferred namespaces (reference `add_namespaces`, `src/ns_trie.rs:71-135`),
+    * up to `maxSize` in all. Returns (new registry, namespaces actually added).
     */
   def addNamespaces(
       reg: Registry,
       inferred: Seq[(String, Long, NsSource)],
-      allowSubNs: Boolean = false
+      allowSubNs: Boolean = false,
+      maxSize: Int = MaxNamespaces
   ): (Registry, Seq[String]) = {
     var byNs = reg.byNs
     var aliases: Map[String, (String, NsSource)] = reg.aliasMap
@@ -197,6 +207,7 @@ object Registry {
     inferred.foreach { case (ns, _, source) =>
       hostOf(ns) match {
         case None => // unparseable or hostless IRI: skipped with a warning in the reference
+        case Some(_) if byNs.size >= maxSize => // the registry is full
         case Some(_) =>
           val hit = mut.longestPrefix(ns, mustBeTerminal = true)
           val blocked = hit.exists { case (existing, _) =>
@@ -229,9 +240,14 @@ object Registry {
     addDeclaredAll(reg, Seq(ns -> declAlias))
 
   /** Batch [[addDeclared]]: one mutable-trie seed + one pack for the whole
-    * declaration list (same per-decl semantics, O(registry + decls) total).
+    * declaration list (same per-decl semantics, O(registry + decls) total),
+    * up to `maxSize` namespaces in all.
     */
-  def addDeclaredAll(reg: Registry, decls: Seq[(String, String)]): Registry = {
+  def addDeclaredAll(
+      reg: Registry,
+      decls: Seq[(String, String)],
+      maxSize: Int = MaxNamespaces
+  ): Registry = {
     if (decls.isEmpty) return reg // nothing to add: no trie to rebuild
     var byNs = reg.byNs
     var aliases = reg.aliasMap
@@ -241,7 +257,7 @@ object Registry {
     decls.foreach { case (ns, declAlias) =>
       val covered = mut.longestPrefix(ns, mustBeTerminal = true)
         .exists { case (p, _) => p.nonEmpty }
-      if (!covered) {
+      if (!covered && byNs.size < maxSize) {
         val alias =
           if (declAlias.nonEmpty && !aliases.contains(declAlias)) Some(declAlias)
           else genAlias(ns, aliases).orElse(Option.when(declAlias.nonEmpty)(

@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import graft.extract.OpenIE
-import graft.model.{Page, Triple}
+import graft.model.{Page, SummaryRow, Triple}
 import graft.ns.{Inference, Registry}
 import graft.sinks.{Snapshot, TtlSink, VisJson}
 import graft.summarize.Normalize
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
@@ -352,10 +352,8 @@ object Pipeline {
   }
 
   /** The summary table's columns, those of [[graft.model.SummaryRow]]. */
-  private[graft] val SummarySchema: StructType = StructType(Seq(
-    StructField("s_ns", StringType), StructField("p_ns", StringType),
-    StructField("o_ns", StringType), StructField("is_datatype", BooleanType, nullable = false),
-    StructField("occurs", LongType, nullable = false)))
+  private[graft] val SummarySchema: StructType =
+    org.apache.spark.sql.Encoders.product[SummaryRow].schema
 
   /** Stages B, C and D, summary first (the reference sends only registry
     * misses to inference, `src/prefixes.rs:193-207`).

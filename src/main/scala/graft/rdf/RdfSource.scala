@@ -337,27 +337,24 @@ object RdfSource {
     (spark.createDataset(triples), decls)
   }
 
-  /** A one-pass scan: the triple table, the listed files it reads, and the
-    * `@prefix` declarations its Turtle parse met on the way, collected by an
-    * accumulator instead of a second parse. `triples` is built when first
-    * used; the pipeline reads [[rows]].
+  /** A one-pass scan: the parsed triples, the listed files they come from,
+    * and the `@prefix` declarations the Turtle parse met on the way,
+    * collected by an accumulator instead of a second parse. `triples` is
+    * built when first used; the pipeline reads [[rows]].
     */
   final class Scan private[graft] (
-      dataset: => Dataset[Triple],
+      parsed: RDD[Triple],
       val files: Seq[(String, Long)],
-      private[graft] val decls: DeclSet,
-      parsed: Option[RDD[Triple]] = None) {
+      private[graft] val decls: DeclSet) {
 
-    lazy val triples: Dataset[Triple] = dataset
+    lazy val triples: Dataset[Triple] =
+      SparkSession.active.createDataset(parsed)(org.apache.spark.sql.Encoders.product[Triple])
 
-    /** The triple table as capped internal rows of [[TripleRows.schema]]:
-      * built in the parse's tasks when this scan parsed, else from
-      * `triples`' rows.
+    /** The triple table as capped internal rows of [[TripleRows.schema]],
+      * built in the parse's tasks.
       */
-    private[graft] lazy val rows: RDD[InternalRow] = parsed match {
-      case Some(p) => p.mapPartitions(_.map(TripleRows(_)), preservesPartitioning = true)
-      case None => TripleRows.cap(triples.toDF().queryExecution.toRdd, triples.schema)
-    }
+    private[graft] lazy val rows: RDD[InternalRow] =
+      parsed.mapPartitions(_.map(TripleRows(_)), preservesPartitioning = true)
 
     /** The distinct declarations, in the total order `(ns.length, ns, alias)`
       * the registry merge needs: when two files declare one namespace under
@@ -383,8 +380,7 @@ object RdfSource {
     spark.sparkContext.register(decls, "rdf.prefix_decls")
     val files = listFiles(spark, paths)
     val parsed = parse(spark, planFiles(spark, files, k), decls.add)
-    new Scan(spark.createDataset(parsed)(org.apache.spark.sql.Encoders.product[Triple]), files, decls,
-      Some(parsed))
+    new Scan(parsed, files, decls)
   }
 
   /** Set of declarations, merged on the driver as tasks finish. */

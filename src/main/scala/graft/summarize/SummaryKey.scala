@@ -130,8 +130,8 @@ private[graft] object SummaryKey {
   private final val PShift = OShift + CodeBits
   private final val SShift = PShift + CodeBits
 
-  /** The most namespaces a registry may hold for its codes to fit. */
-  val MaxNamespaces: Int = (1 << CodeBits) - First
+  // every index of a registry's namespaces has a code
+  require(Registry.MaxNamespaces + First <= CodeMask + 1)
 
   /** The columns of a decoded key: the signature and the object's kind.
     * With the registry it determines the (alias, ns) group of each position
@@ -145,12 +145,8 @@ private[graft] object SummaryKey {
     StructField("o_kind", ByteType)))
 
   /** The key function of `registry` over rows of `schema`, a triple table. */
-  def apply(registry: Registry, schema: StructType): SummaryKey = {
-    val trie = registry.utf8Trie
-    require(trie.valueCount <= MaxNamespaces,
-      s"${trie.valueCount} namespaces; summary keys hold at most $MaxNamespaces")
-    new SummaryKey(trie, TermOrdinals(schema))
-  }
+  def apply(registry: Registry, schema: StructType): SummaryKey =
+    new SummaryKey(registry.utf8Trie, TermOrdinals(schema))
 }
 
 /** Counts of non-negative `Long` keys in one task or on the driver: open

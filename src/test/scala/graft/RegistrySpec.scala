@@ -251,6 +251,21 @@ class RegistrySpec extends AnyFunSuite {
     assert(!reg.byNs.contains("urn:vv:"))
   }
 
+  test("a registry holds at most maxSize namespaces, whichever way it grows") {
+    val pairs = Seq("a" -> "http://a.test/", "b" -> "http://b.test/", "c" -> "http://c.test/")
+    val base = Registry.fromPairs(pairs, NsSource.Community, maxSize = 2)
+    assert(base.byNs.keySet == Set("http://a.test/", "http://b.test/"))
+    val two = Registry.fromPairs(pairs.take(1), NsSource.Community)
+    val declared = Registry.addDeclaredAll(two, Seq("http://d.test/" -> "d", "http://e.test/" -> "e"),
+      maxSize = 2)
+    assert(declared.byNs.keySet == Set("http://a.test/", "http://d.test/"))
+    assert(declared.resolveAlias("http://e.test/x").isEmpty)
+    val (inferred, added) = Registry.addNamespaces(two,
+      Seq(("http://f.test/", 5L, NsSource.Inference), ("http://g.test/", 4L, NsSource.Inference)),
+      maxSize = 2)
+    assert(added == Seq("http://f.test/") && inferred.size == 2)
+  }
+
   test("registry construction is linear-ish in pair count (20k synthetic pairs)") {
     val pairs = (0 until 20000).map(i => (s"p$i", s"http://host$i.example.org/ns$i/"))
     val t0 = System.nanoTime()

@@ -237,7 +237,7 @@ class ScanCacheSpec extends AnyFunSuite {
         t
       }
     }
-    val (retried, _) = run(new RdfSource.Scan(flaky, scan.files, scan.decls), paths, cfg0)
+    val (retried, _) = run(new RdfSource.Scan(flaky.rdd, scan.files, scan.decls), paths, cfg0)
     assert(outputs(retried) == outputs(clean))
     for (f <- Seq("scan_partition_rows", "scan_cached_rows"))
       assert(longs(retried, f) == longs(clean, f), f)

@@ -239,7 +239,7 @@ class ScanSplitSpec extends AnyFunSuite {
       // the textFile reader for the line formats, the Turtle file as before
       val (lineFiles, ttl) = paths.partition(RdfSource.isLineFormat)
       val ttlScan = RdfSource.scan(spark, ttl)
-      val old = new RdfSource.Scan(textFileTriples(lineFiles).union(ttlScan.triples),
+      val old = new RdfSource.Scan(textFileTriples(lineFiles).union(ttlScan.triples).rdd,
         RdfSource.listFiles(spark, paths), ttlScan.decls)
       val (r, got) = runScan(old, "textFile")
       r.triples.unpersist()
